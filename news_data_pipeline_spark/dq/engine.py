@@ -80,6 +80,16 @@ class DQResult:
     def passed(self) -> bool:
         return all(r["passed"] for r in self.report.values())
 
+    def unpersist(self) -> "DQResult":
+        """Release the annotated frame ``run_dq(cache=True)`` cached."""
+        self._annotated.unpersist()
+        return self
+
+    def isEmpty(self) -> bool:
+        """True when the input frame had no rows (read from the cache
+        when ``run_dq(cache=True)`` built one)."""
+        return self._annotated.isEmpty()
+
     def report_frame(self) -> DataFrame:
         """The pass/fail report as a DataFrame ``(rule, passed,
         violations)`` — same single aggregate as :attr:`report`, but
@@ -142,8 +152,15 @@ class DQResult:
 def run_dq(df: DataFrame, rules: list[Rule], *, cache: bool = False) -> DQResult:
     """Evaluate all rules in one annotated pass and split the frame.
 
-    ``cache=True`` persists the annotated frame — worth it when both
-    sides of the split AND the report will be consumed.
+    ``cache=True`` persists the annotated frame (release it with
+    ``DQResult.unpersist()``) — worth it when two or more of ``valid``,
+    ``quarantined`` and the report are consumed: the frame is then
+    computed once. A window rule (``Unique``) shuffles it into
+    ``spark.sql.shuffle.partitions`` hash partitions, and the session
+    lets AQE coalesce those inside the cache too
+    (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``), so
+    a cached split is sized by AQE: a small frame is a few partitions,
+    and each side is written as one file, not one per hash partition.
     """
     # reserved-name guards: a 'reasons' input column would duplicate in
     # the quarantine frame, a flag-prefixed column would be silently

@@ -253,13 +253,18 @@ def gopher_flags(col: Column) -> dict[str, Column]:
     f_mwl = (n_word_chars >= 3 * n_words) & (n_word_chars <= 10 * n_words)
     f_sym = 10 * n_symbols <= n_words
     f_stop = n_stop >= 2
+
+    def flag(cond: Column) -> Column:
+        # a NULL text fails every rule (0), like SQL's CASE WHEN
+        return F.coalesce(cond.cast("int"), F.lit(0))
+
     return {
         "n_words": n_words,
-        "flag_word_count": f_wc.cast("int"),
-        "flag_mean_word_length": f_mwl.cast("int"),
-        "flag_symbol_ratio": f_sym.cast("int"),
-        "flag_stopwords": f_stop.cast("int"),
-        "pass_gopher": (f_wc & f_mwl & f_sym & f_stop).cast("int"),
+        "flag_word_count": flag(f_wc),
+        "flag_mean_word_length": flag(f_mwl),
+        "flag_symbol_ratio": flag(f_sym),
+        "flag_stopwords": flag(f_stop),
+        "pass_gopher": flag(f_wc & f_mwl & f_sym & f_stop),
     }
 
 

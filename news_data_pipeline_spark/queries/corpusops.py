@@ -1041,8 +1041,11 @@ def pq_partitioned_cell_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries, cent2, "vec_id", "embedding", "query_id", 4
     ).select("query_id", "cid")
     probed = sorted(r["cid"] for r in probe.select("cid").distinct().collect())
+    # read back with the written schema: an all-NULL embedding column
+    # encodes no rows, so there are no files to infer a schema from
     pruned = (
-        spark.read.option("basePath", path)
+        spark.read.schema(codes.schema)
+        .option("basePath", path)
         .parquet(path)
         .where(F.col("cid").isin(probed))
         .select("id", "sub", "code", F.col("cid").cast("long").alias("cid"))

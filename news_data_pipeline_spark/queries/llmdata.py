@@ -4465,9 +4465,10 @@ def _recall_nprobe_curve(
 
     Empty-input semantics match the old per-arm aggregates: the output
     always has one row per nprobe (a literal nprobe frame LEFT-joins
-    the grouped hits/reads), ``n_exact`` coalesces to 0, ``n_hits`` /
-    ``vectors_read`` stay NULL exactly where the old empty-input
-    ``agg`` produced NULL.
+    the grouped hits/reads), ``n_exact`` and ``n_hits`` coalesce to 0
+    (the oracle's ``sum(CASE ...)`` is 0, never NULL), and
+    ``recall_at_5`` / ``vectors_read`` stay NULL exactly where the old
+    empty-input ``agg`` produced NULL.
 
     Below ``ckpt_eval_threshold`` (default ``CKPT_EVAL_THRESHOLD``)
     the exact arm and cell sizes stay lazy; at/above it both are
@@ -4627,7 +4628,9 @@ def _recall_nprobe_curve(
             F.coalesce(F.col("n_exact"), F.lit(0).cast("long")).alias(
                 "n_exact"
             ),
-            "n_hits",
+            F.coalesce(F.col("n_hits"), F.lit(0).cast("long")).alias(
+                "n_hits"
+            ),
             settled_round(
                 F.col("n_hits")
                 / F.coalesce(F.col("n_exact"), F.lit(0).cast("long")).cast(

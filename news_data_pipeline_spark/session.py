@@ -26,6 +26,14 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE size cached plans too. By default Spark builds a cached
+    # frame without AQE so that its output partitioning stays fixed;
+    # a per-micro-batch cache over a window shuffle then keeps all
+    # spark.sql.shuffle.partitions hash partitions, and 600 rows cost
+    # ~100 tasks and one parquet file per partition on every write
+    # that reads the cache. With this on, the cache is coalesced like
+    # any other AQE plan and is still computed once.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Arrow for any pandas_udf / toPandas path.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # CSV corrupt-record detection must not depend on plan shape: with

@@ -9,14 +9,56 @@ batch — the streaming version of the reference's quarantine flow
 
 from __future__ import annotations
 
+import contextlib
 import datetime
+from collections.abc import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from news_data_pipeline_spark.dq.engine import run_dq, to_quarantine_records
+from news_data_pipeline_spark.dq.engine import (
+    DQResult,
+    run_dq,
+    to_quarantine_records,
+)
 from news_data_pipeline_spark.dq.rules import Rule
 from news_data_pipeline_spark.sources.writers import write_layer
+
+_AQE = "spark.sql.adaptive.enabled"
+
+
+@contextlib.contextmanager
+def _batch_aqe(spark: SparkSession) -> Iterator[None]:
+    """Switch AQE on for the body of a ``foreachBatch`` call. Spark
+    turns it off in a stateful stream's session to pin the state
+    partitioning, but a batch frame is a plain batch plan over the
+    already planned micro-batch, so AQE may size it like any other."""
+    aqe = spark.conf.get(_AQE)
+    spark.conf.set(_AQE, "true")
+    try:
+        yield
+    finally:
+        spark.conf.set(_AQE, aqe)
+
+
+@contextlib.contextmanager
+def _batch_cache(cached: DataFrame | DQResult) -> Iterator[None]:
+    """Scope of one per-batch cache (a persisted frame, or a
+    ``run_dq(cache=True)`` split) inside a ``foreachBatch`` call. The
+    first job that reads it — typically an ``isEmpty()`` probe — builds
+    it, the writes after it read it, and it is unpersisted on exit,
+    also when a write fails: a retried batch would otherwise strand one
+    cached frame per attempt.
+
+    The cache is sized to its data: AQE may coalesce a cached plan's
+    shuffle partitions (``canChangeCachedPlanOutputPartitioning`` in
+    ``session.RUNTIME_CONFS``), so a small batch is a few tasks and
+    one file per write, not one per shuffle partition.
+    """
+    try:
+        yield
+    finally:
+        cached.unpersist()
 
 
 def split_to_silver_and_quarantine(
@@ -39,14 +81,19 @@ def split_to_silver_and_quarantine(
     OVERWRITE — a replayed batch rewrites the same directory instead of
     appending duplicates. Readers scan the parent path and see
     ``batch_id`` as an ordinary partition column.
+
+    The annotated frame both sides read is cached per batch and sized
+    by AQE, so a small batch writes one file per side even when a
+    window rule (``Unique``) shuffles it.
     """
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        if not batch.head(1):
-            return
-        # Both split sides are consumed -> cache the annotated frame once.
+        # Both split sides are consumed -> cache the annotated frame
+        # once; the emptiness probe is the job that builds it.
         res = run_dq(batch, rules, cache=True)
-        try:
+        with _batch_cache(res):
+            if res.isEmpty():
+                return
             write_layer(
                 res.valid,
                 f"{silver_path}/batch_id={batch_id}",
@@ -67,11 +114,6 @@ def split_to_silver_and_quarantine(
                 mode="overwrite",
                 fmt=fmt,
             )
-        finally:
-            # release the per-batch cache even when a write fails — a
-            # retried batch would otherwise strand one cached frame per
-            # attempt
-            res._annotated.unpersist()
 
     writer = stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint
@@ -116,14 +158,17 @@ def publish_snapshots(
     def _publish(batch: DataFrame, batch_id: int) -> None:
         # both the emptiness probe and the write consume the aggregate —
         # cache so the (possibly expensive) complete-mode result computes
-        # once per trigger, mirroring run_dq(cache=True) in the DQ sink
-        batch.persist()
-        try:
-            if not batch.head(1):
-                return
-            layer.overwrite(batch)
-        finally:
-            batch.unpersist()
+        # once per trigger, like the DQ sink's split. The batch keeps the
+        # stream's state partitioning (one file per state partition);
+        # a rebalance lets AQE size the snapshot to its data instead.
+        # Spark drops the REBALANCE hint when AQE is off, so the hint is
+        # resolved inside the AQE scope.
+        with _batch_aqe(batch.sparkSession):
+            snapshot = batch.hint("rebalance").persist()
+            with _batch_cache(snapshot):
+                if snapshot.isEmpty():
+                    return
+                layer.overwrite(snapshot)
         layer.vacuum(
             batch.sparkSession,
             keep=keep_versions,
@@ -608,11 +653,13 @@ def ingest_deduplicated(
                     bands=bands,
                     rows_per_band=rows_per_band,
                 )
-        if method == "bloom":
-            # survivors feed two writes (corpus + filter bits): compute
-            # the dedup lineage once per batch
-            deduped.persist()
-        try:
+        # bloom survivors feed two writes (corpus + filter bits):
+        # compute the dedup lineage once per batch
+        with (
+            _batch_cache(deduped.persist())
+            if method == "bloom"
+            else contextlib.nullcontext()
+        ):
             write_layer(
                 deduped,
                 f"{corpus_path}/batch_id={batch_id}",
@@ -625,9 +672,6 @@ def ingest_deduplicated(
                 )
                 _write_bits(spark, surv_fp, batch_id)
                 validated.add(batch_id)
-        finally:
-            if method == "bloom":
-                deduped.unpersist()
         if method == "bloom" and compact_after is not None:
             live = _batch_partition_ids(spark, bloom_path)
             live.discard(_COMPACTED_BATCH_ID)

@@ -131,6 +131,77 @@ def test_foreach_batch_dq_split(spark, landing, tmp_path):
     assert "not_null(user_id)" in rec["reason"]
 
 
+def _data_files(path) -> list:
+    return sorted(p.name for p in path.glob("*.parquet"))
+
+
+def test_foreach_batch_dq_split_writes_one_file_per_side(spark, tmp_path):
+    # A window rule shuffles the batch into spark.sql.shuffle.partitions
+    # hash partitions inside the per-batch cache; AQE must be allowed to
+    # coalesce them there, or each side is written as one file per
+    # non-empty hash partition.
+    from news_data_pipeline_spark.dq import Unique
+
+    rows = [
+        (i, ts(i % 60), None if i % 10 == 0 else i % 7, "view", float(i), None)
+        for i in range(1, 41)
+    ]
+    # later copies of event_ids 1..8: Unique keeps the earliest by ts
+    rows += [(i, ts(59, i), i % 7, "view", 0.0, None) for i in range(1, 9)]
+    landing = str(tmp_path / "landing")
+    spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.parquet(landing)
+    q = stx.split_to_silver_and_quarantine(
+        stx.read_event_stream(spark, landing),
+        [
+            NotNull("user_id"),
+            Unique("event_id", quarantine_all=False, order_by=("ts",)),
+        ],
+        silver_path=str(tmp_path / "silver"),
+        quarantine_path=str(tmp_path / "quarantine"),
+        checkpoint=str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination()
+    assert len(_data_files(tmp_path / "silver" / "batch_id=0")) == 1
+    assert len(_data_files(tmp_path / "quarantine" / "batch_id=0")) == 1
+    silver = spark.read.parquet(str(tmp_path / "silver"))
+    quarantine = spark.read.parquet(str(tmp_path / "quarantine"))
+    # 40 originals minus 4 null users; the 8 later copies are extras
+    assert sorted(r["event_id"] for r in silver.collect()) == [
+        i for i in range(1, 41) if i % 10
+    ]
+    reasons = sorted(r["reason"] for r in quarantine.collect())
+    assert reasons == ["not_null(user_id)"] * 4 + ["unique(event_id)"] * 8
+
+
+def test_publish_snapshots_writes_one_file_per_snapshot(spark, tmp_path):
+    # The complete-mode batch keeps the stream's state partitioning;
+    # the sink rebalances the cached snapshot so AQE sizes it to its data.
+    from news_data_pipeline_spark.sources.writers import VersionedLayer
+    from news_data_pipeline_spark.streaming.sinks import publish_snapshots
+
+    rows = [(i, ts(i % 60), i % 9, "view", 1.0, None) for i in range(40)]
+    landing = str(tmp_path / "landing")
+    spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.parquet(landing)
+    agg = (
+        stx.read_event_stream(spark, landing)
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    q = publish_snapshots(
+        agg,
+        layer_path=str(tmp_path / "mv"),
+        checkpoint=str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination()
+    layer = VersionedLayer(str(tmp_path / "mv"))
+    current = layer.current_version(spark)
+    assert len(_data_files(tmp_path / "mv" / current)) == 1
+    got = {r["user_id"]: r["n_events"] for r in layer.read(spark).collect()}
+    assert got == {u: sum(1 for i in range(40) if i % 9 == u) for u in range(9)}
+
+
 def test_stateful_running_totals_stream(spark, landing):
     stream = stx.read_event_stream(spark, landing)
     totals = stx.running_user_totals(stream)
