@@ -9,12 +9,13 @@ driver expects.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from news_data_pipeline_spark import queries as _q  # noqa: E402
 from news_data_pipeline_spark.session import tune  # noqa: E402

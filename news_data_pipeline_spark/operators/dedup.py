@@ -19,7 +19,7 @@ import re
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 
 from news_data_pipeline_spark.functions.exact import settled_round
 from news_data_pipeline_spark.functions.text import fingerprint
@@ -31,12 +31,26 @@ def exact_dedup(
 ) -> DataFrame:
     """Keep exactly one row per key — deterministically (first by
     ``tie_break``), unlike ``dropDuplicates`` which keeps an arbitrary
-    row (the reference's silver dedup, ``02:66``)."""
+    row (the reference's silver dedup, ``02:66``).
+
+    A ``row_number`` window, so column pruning narrows its exchange to
+    the columns the caller reads (``fingerprint_dedup``'s aggregate
+    does not prune, by design)."""
     w = Window.partitionBy(*keys).orderBy(*tie_break)
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
         .drop("__rn")
+    )
+
+
+def fingerprint_key(text_col: str, id_col: str) -> Column:
+    """``fingerprint_dedup``'s key: the normalization fingerprint of
+    ``text_col``, or for NULL text the per-row surrogate ``"null:<id>"``
+    (md5 is 32 hex chars and never contains ':', so no collision)."""
+    return F.coalesce(
+        fingerprint(F.col(text_col)),
+        F.concat(F.lit("null:"), F.col(id_col).cast("string")),
     )
 
 
@@ -47,28 +61,36 @@ def fingerprint_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     Rows whose fingerprint is NULL (null text) all survive: null is
     "unknown", not a shared key — the same contract the against-corpus
     anti-join keeps (a null key never matches), so batch-internal and
-    cross-batch dedup agree on null-text documents. They bypass the
-    window entirely, which also keeps a null-heavy corpus from
-    funneling into one window partition.
+    cross-batch dedup agree on null-text documents.
+
+    One ``min_by(struct(*columns), struct(id))`` aggregate per key, not
+    a window. No optimizer rule prunes struct fields through an
+    ``Aggregate``, so two readers of the output (the corpus chain's
+    mixture rates and mixture sample) plan the same exchange, AQE
+    reuses it, and the scan and UDFs upstream run once; under a window
+    the count side's exchange is pruned narrower and everything
+    upstream runs once per reader. The cost: every column crosses the
+    exchange even when the caller keeps a few. A caller that keeps only
+    ids should dedup ``fingerprint_key`` with ``exact_dedup`` instead
+    (``queries.llmdata.dedup_exact_fingerprint``).
+
+    The ordering is a struct because ``min_by`` skips NULL orderings,
+    while a struct holding a NULL is not NULL and sorts first, so a
+    NULL id wins its group as in an ascending ORDER BY. ``min_by``, not
+    ``min(struct)``: ``min`` cannot order a struct holding a map.
     """
     # fan_out: the normalization regexp + md5 over full text is the
     # cost here and would otherwise pipeline onto a one-task scan.
-    # Null fingerprints get a per-row surrogate key ("null:<id>" — md5
-    # is 32 hex chars and never contains ':', so no collision): each
-    # null-text row is alone in its window partition and survives, in
+    # The surrogate key puts each null-text row alone in its group, in
     # ONE pass (a filter+union formulation would fingerprint the corpus
-    # twice; a shared null partition would funnel null-heavy corpora
-    # into one task).
-    with_fp = fan_out(df).withColumn("__fp", fingerprint(F.col(text_col)))
-    key = F.coalesce(
-        F.col("__fp"),
-        F.concat(F.lit("null:"), F.col(id_col).cast("string")),
-    )
-    w = Window.partitionBy(key).orderBy(id_col)
+    # twice; a shared null group would funnel null-heavy corpora into
+    # one task).
+    row = F.min_by(F.struct(*df.columns), F.struct(id_col))
     return (
-        with_fp.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__fp")
+        fan_out(df)
+        .groupBy(fingerprint_key(text_col, id_col))
+        .agg(row.alias("__row"))
+        .select("__row.*")
     )
 
 

@@ -155,10 +155,18 @@ def document_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_exact_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.fingerprint_dedup(docs, "text", "doc_id").select(
-        "doc_id", "source", "lang"
+    """``fingerprint_dedup``'s survivors, ids only. The text is read
+    once for the key and never shuffled: ``exact_dedup`` over the key
+    and the three output columns, not ``fingerprint_dedup``, whose
+    aggregate carries every column through its exchange."""
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    keyed = docs.select(
+        "doc_id",
+        "source",
+        "lang",
+        dedup.fingerprint_key("text", "doc_id").alias("__key"),
     )
+    return dedup.exact_dedup(keyed, ["__key"], tie_break=["doc_id"]).drop("__key")
 
 
 @register(

@@ -12,6 +12,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory holding this package. Python workers inherit the JVM's
+# environment, so ``get_spark`` puts it on PYTHONPATH before the JVM
+# starts and workers import the package from any working directory. A
+# directory, not an ``addPyFile`` zip: every zip on a worker's path adds
+# to the import-cache invalidation each Arrow task pays at start.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Runtime (non-static) confs applied to *any* session we are handed,
 # including the driver's own session. Keep these settable post-creation.
 RUNTIME_CONFS: dict[str, str] = {
@@ -125,6 +132,9 @@ def get_spark(
     On a real cluster the same code runs unchanged — only master/partition
     settings differ, and those come from spark-submit, not from here.
     """
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([PACKAGE_ROOT, *paths])
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
     parts = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))

@@ -8,11 +8,13 @@ runtime.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from news_data_pipeline_spark.session import get_spark  # noqa: E402
 

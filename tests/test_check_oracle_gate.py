@@ -11,9 +11,12 @@ rows must die locally).
 from __future__ import annotations
 
 import importlib.util
+import os
+
+from tests.conftest import ROOT
 
 spec = importlib.util.spec_from_file_location(
-    "check_oracle", "/root/repo/tools/check_oracle.py"
+    "check_oracle", os.path.join(ROOT, "tools", "check_oracle.py")
 )
 co = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(co)

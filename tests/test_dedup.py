@@ -607,16 +607,72 @@ def test_jaccard_for_pairs_keeps_shingleless_candidates(spark):
 
 def test_fingerprint_dedup_preserves_null_text_rows(spark):
     # null text -> null fingerprint -> "unknown", never a shared dedup
-    # key: both null-text rows survive while the real dup pair collapses
+    # key: both null-text rows survive while the real dup pair collapses.
+    # A NULL id sorts first, as in an ascending window, so it wins its
+    # fingerprint group; a map column (which min() cannot order) passes
+    # through untouched.
     df = spark.createDataFrame(
-        [(1, "same text"), (2, "same text"), (3, None), (4, None)],
-        ["doc_id", "body"],
+        [
+            (1, "same text", {"k": "1"}),
+            (2, "same text", {"k": "2"}),
+            (3, None, {"k": "3"}),
+            (4, None, None),
+            (None, "other text", {"k": "null-id"}),
+            (5, "Other text!", {"k": "5"}),
+        ],
+        "doc_id BIGINT, body STRING, meta MAP<STRING, STRING>",
     )
-    kept = sorted(
-        r["doc_id"]
-        for r in dedup.fingerprint_dedup(df, "body", "doc_id").collect()
+    out = dedup.fingerprint_dedup(df, "body", "doc_id")
+    assert out.columns == ["doc_id", "body", "meta"]
+    got = {r["doc_id"]: r["meta"] for r in out.collect()}
+    assert got == {1: {"k": "1"}, 3: {"k": "3"}, 4: None, None: {"k": "null-id"}}
+
+
+def test_fingerprint_dedup_two_consumers_share_one_exchange(spark):
+    # The corpus chain reads the dedup output twice: the mixture rates
+    # count it, the mixture sample filters it. Both must plan the same
+    # dedup exchange so AQE runs it (and the scan under it) once and
+    # reuses the stage. Needs a parquet-backed input — local relations
+    # collapse below AQE's stage machinery.
+    from tests.conftest import SF_DIR
+    from news_data_pipeline_spark.operators.sampling import (
+        mixture_sample_by_rates,
+        temperature_mixture_rates,
     )
-    assert kept == [1, 3, 4]
+    from news_data_pipeline_spark.sources.catalog import load_table
+
+    documents = load_table(spark, SF_DIR, "documents")
+    kept = dedup.fingerprint_dedup(documents, "text", "doc_id")
+    rates = temperature_mixture_rates(kept, "source", alpha=0.3)
+    mixed = mixture_sample_by_rates(kept, "doc_id", "source", rates)
+    mixed.collect()
+    plan = mixed._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("FileScan parquet") == 1
+    assert "ReusedExchange" in final
+
+
+def test_dedup_exact_fingerprint_shuffles_no_text(spark):
+    # The query keeps ids only, so it dedups the key with a window and
+    # column pruning keeps the text out of the dedup exchange (the
+    # fingerprint_dedup aggregate would carry every column through it).
+    from tests.conftest import SF_DIR
+    from news_data_pipeline_spark.queries.llmdata import dedup_exact_fingerprint
+
+    plan = dedup_exact_fingerprint(spark, SF_DIR)._jdf.queryExecution().optimizedPlan()
+    windows = []
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "Window":
+            windows.append(node)
+        todo += [node.children().apply(i) for i in range(node.children().size())]
+    assert len(windows) == 1
+    child = windows[0].children().apply(0).output()
+    cols = {child.apply(i).name() for i in range(child.size())}
+    assert "text" not in cols
+    assert {"doc_id", "source", "lang"} <= cols
 
 
 def test_two_stage_frames_match_lazy_derivations(spark):

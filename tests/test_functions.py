@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import Row
 
 from news_data_pipeline_spark.functions import columns as C
 from news_data_pipeline_spark.functions import ids, text
+from tests.conftest import ROOT
 
 
 def one(spark, value, fn):
@@ -180,7 +183,7 @@ def test_bench_compact_line_stays_driver_parseable():
     import json as _json
 
     spec = importlib.util.spec_from_file_location(
-        "bench", "/root/repo/bench.py"
+        "bench", os.path.join(ROOT, "bench.py")
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)

@@ -18,16 +18,17 @@ tests/test_r8_candidate_oracles.py`` sweeps a bigger SF.
 from __future__ import annotations
 
 import importlib.util
+import os
 
 import pyspark.sql.functions as F
 
+from tests.conftest import ROOT
+
 spec = importlib.util.spec_from_file_location(
-    "check_oracle", "/root/repo/tools/check_oracle.py"
+    "check_oracle", os.path.join(ROOT, "tools", "check_oracle.py")
 )
 co = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(co)
-
-import os
 
 SF = os.environ.get("R8_DRAFT_SF", "/root/testdata/sf0.001")
 

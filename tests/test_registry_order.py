@@ -11,8 +11,11 @@ Pins the contract the driver's budgeted sweep depends on:
 from __future__ import annotations
 
 import importlib
+import os
 
 import pytest
+
+from tests.conftest import ROOT
 
 
 @pytest.fixture
@@ -119,7 +122,7 @@ def test_every_registered_query_has_an_oracle_twin():
     ROWS_ONLY_DOCUMENTED: set[str] = set()
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entry
 
     qs, oracles = entry.queries(), entry.oracle_sql()
@@ -144,8 +147,6 @@ def test_no_oracle_emits_hugeint():
     CORRECTNESS_r07). Statically pin every oracle's DuckDB result
     type so the class cannot re-enter; integer sums must CAST back to
     BIGINT."""
-    import os
-
     import duckdb
 
     from news_data_pipeline_spark.queries import QUERIES
@@ -184,7 +185,7 @@ def test_update_recorded_drops_retired_names(tmp_path):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     try:
         import update_recorded
     finally:

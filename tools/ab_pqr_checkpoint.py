@@ -7,10 +7,12 @@ so both arms run the same code path.
 """
 
 import statistics
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from news_data_pipeline_spark.session import get_spark  # noqa: E402
 

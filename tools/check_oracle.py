@@ -19,13 +19,15 @@ exists to keep the full-registry gate fast, not to measure.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from news_data_pipeline_spark.sources.catalog import TABLES  # noqa: E402
 

@@ -20,9 +20,11 @@ round-5 audit note). Usage::
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from tools.check_oracle import frame_to_multiset  # noqa: E402
 
@@ -30,7 +32,6 @@ from tools.check_oracle import frame_to_multiset  # noqa: E402
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
-    import os
 
     if not os.path.isdir(sf_dir):
         # no argparse here, so a stray flag (--help) would otherwise be

@@ -42,9 +42,11 @@ Run as part of the round-close checklist::
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # Accepted round() argument prefixes, keyed by query name. Every entry
 # must state WHY the site is version-stable; an unlisted round() fails.
