@@ -358,8 +358,8 @@ def interval_join_bucketed(
     products — linear for time-spread activity, bounded by 3x the true
     output when everything co-buckets. Parity pinned against the
     registered residual-join form in tests/test_psa_asof_candidate.py
-    and tools/ab_vpij_bucketed.py (three fixture SFs, DuckDB oracle,
-    synthetic skew, epoch-boundary fixtures).
+    (the three-SF, DuckDB-oracle and synthetic-skew parity runs are in
+    SCALE.md "Retired paths").
     """
     try:
         qty_s, unit = within.split()

@@ -10,13 +10,13 @@ floats. This is the standard second half of IVF-PQ, the layout every
 billion-vector index uses; at 100 TB the codes fit where the floats
 never would, and scoring is ``m`` table lookups per candidate.
 
-Everything is DataFrame algebra over the positionally-exploded
-components — no UDFs, no driver-side vectors beyond the k*m codebook
-rows (bounded by construction, same contract as ``kmeans_iterate``):
+Everything is DataFrame algebra — no UDFs, no driver-side vectors
+beyond the k*m codebook rows (bounded by construction, same contract
+as ``kmeans_iterate``):
 
-- training: per-subspace Lloyd assignments via a broadcast codebook
-  join on (sub, pos), map-side-combined dot products, 6dp-settled
-  means (the shared cross-engine distance convention);
+- training: per-subspace Lloyd assignments folded row-locally over a
+  broadcast one-row codebook, 6dp-settled means (the shared
+  cross-engine distance convention);
 - encoding: the same assignment rule — train and encode MUST share
   the boundary tie-break or cells drift;
 - ADC: per-(query, sub, code) distances settled to exact 1e-6 BIGINT
@@ -40,37 +40,11 @@ from news_data_pipeline_spark.operators.similarity import _as_double
 
 
 def _vecs(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, v): the row-local paths' input projection — same null
-    filter and fan-out as ``_components`` without the explode."""
+    """(id, v): the row-local paths' input projection — non-NULL
+    vectors, fanned out, never exploded into components."""
     return fan_out(
         df.where(F.col(vec_col).isNotNull()).select(
             F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-        )
-    )
-
-
-def _components(df: DataFrame, id_col: str, vec_col: str, sub_dim: int) -> DataFrame:
-    """(id, sub, j, x): positionally exploded vectors, subspace-keyed.
-
-    ``j`` is the 1-based position WITHIN the subspace — the codebook's
-    positional key — so the downstream joins never slice arrays (list
-    slicing is also the DuckDB construct the oracle twins must avoid).
-    """
-    return (
-        fan_out(
-            df.where(F.col(vec_col).isNotNull()).select(
-                F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-            )
-        )
-        .select("id", F.posexplode("v").alias("p", "x"))
-        .select(
-            "id",
-            # floor of the double ratio, NOT a bare int cast: Spark's
-            # double->int cast truncates but DuckDB's rounds, so the
-            # oracle twin mirrors floor() — the one form both share
-            F.floor(F.col("p") / sub_dim).cast("int").alias("sub"),
-            (F.col("p") % sub_dim + 1).alias("j"),
-            "x",
         )
     )
 
@@ -205,9 +179,10 @@ def _settled_sqdist(sv, vals) -> "F.Column":
 def _codes_array(sub_dim: int) -> "F.Column":
     """array<struct<sub int, code int>> of per-subspace argmin codes for
     the vector column ``v`` against the one-row codebook array ``__cb``
-    — the ROW-LOCAL assignment (zero shuffle, zero sort; the join form
-    paid two exchanges and a sort-aggregate per pass, see
-    ``_assign_codes``). Semantics are pinned to the exploded form:
+    — the ROW-LOCAL assignment, the only one: the exploded join form
+    paid two exchanges and a sort-aggregate per pass (SCALE.md
+    "Retired paths").
+    Semantics match that exploded form:
 
     - a (sub) emits a code iff the vector has >= 1 component in that
       subspace AND the codebook has entries for it (the inner join's
@@ -346,52 +321,6 @@ def _encode_rowlocal(
     )
 
 
-def _assign_codes(comp: DataFrame, codebook_rows: DataFrame) -> DataFrame:
-    """(id, sub, code): nearest codebook centroid per subspace.
-
-    Shared by train and encode. Distance rule is the corpus-norm-free
-    ``-2*dot + c2`` at 6dp with code tie-break — identical to
-    ``similarity._assign_cells`` so every operator in the ANN family
-    agrees on cell boundaries.
-    """
-    cb = codebook_rows.select("sub", "cid", "j", "value")
-    # Per-term 12dp integer-unit settles BEFORE every sum: these sums
-    # run as groupBy partial aggregates whose order is arbitrary, so a
-    # raw double sum could differ in its last ulp between engines (and
-    # between runs under AQE) — the exact BIGINT sum cannot. This is
-    # stricter than the kmeans family's array-level dots (sequential
-    # fold, shared order) because the exploded layout has no order.
-    c2 = cb.groupBy("sub", "cid").agg(
-        (
-            F.sum(settled_units(F.col("value") * F.col("value"), 12)) / 1e12
-        ).alias("c2")
-    )
-    dots = (
-        comp.join(F.broadcast(cb), on=["sub", "j"])
-        .groupBy("id", "sub", "cid")
-        .agg(
-            (
-                F.sum(settled_units(F.col("x") * F.col("value"), 12)) / 1e12
-            ).alias("dot")
-        )
-    )
-    dist = settled_round(
-        -2 * F.col("dot") + F.col("c2"), 6
-    ).alias("__dist")
-    # argmin as min(struct(dist, cid)): struct ordering is fieldwise, so
-    # this is exactly orderBy(dist, cid) row_number()==1 — but it runs
-    # as a hash aggregate with map-side partial combine instead of a
-    # shuffle+sort+window, one fewer sort per assignment pass (measured
-    # at sf0.1: pq_encode 2.8 -> 2.3 s with train in the plan)
-    return (
-        dots.join(F.broadcast(c2), on=["sub", "cid"])
-        .select("id", "sub", "cid", dist)
-        .groupBy("id", "sub")
-        .agg(F.min(F.struct(F.col("__dist"), F.col("cid"))).alias("__b"))
-        .select("id", "sub", F.col("__b.cid").alias("code"))
-    )
-
-
 def pq_train(
     df: DataFrame,
     *,
@@ -494,67 +423,6 @@ def _train_on_vectors(
                 F.coalesce(F.col("value"), F.col("__prev")).alias("value"),
             )
         )
-        rows = [
-            (r["sub"], r["cid"], r["j"], r["value"]) for r in cb.collect()
-        ]
-        cb = _local_codebook(spark, rows, schema)
-    return cb
-
-
-def _train_on_components(
-    comp: DataFrame, *, m: int, k: int, iters: int
-) -> DataFrame:
-    """``pq_train`` body over a prebuilt components frame — lets a
-    caller that also encodes share ONE (optionally materialized)
-    components derivation across the train pass's three references and
-    the encode's one, instead of four lazy re-derivations of the
-    explode subtree (``pq_ivf_residual_topk(materialize=True)``)."""
-    cb = comp.where(F.col("id") < k).select(
-        "sub",
-        F.col("id").cast("int").alias("cid"),
-        "j",
-        F.col("x").alias("value"),
-    )
-    spark = comp.sparkSession
-    schema = "sub int, cid int, j int, value double"
-    for i in range(iters):
-        assigned = _assign_codes(comp, cb)
-        means = (
-            comp.join(
-                assigned.withColumnRenamed("code", "cid"), on=["id", "sub"]
-            )
-            .groupBy("sub", "cid", "j")
-            .agg(
-                # order-free mean: 10dp settled components, exact sum
-                settled_round(
-                    F.sum(settled_units(F.col("x"), 10))
-                    / 1e10
-                    / F.count(F.lit(1)),
-                    6,
-                ).alias("value")
-            )
-        )
-        # empty cells keep their previous centroid: left-join + coalesce
-        # composes LAZILY, so an iters=1 train (and everything chained
-        # on it — encode, ADC) is ONE Spark job instead of three; the
-        # old collect-per-step driver round-trips cost ~2 job overheads
-        # at test scale and a full comp rescan each at cluster scale
-        cb = (
-            cb.withColumnRenamed("value", "__prev")
-            .join(means, on=["sub", "cid", "j"], how="left")
-            .select(
-                "sub",
-                "cid",
-                "j",
-                F.coalesce(F.col("value"), F.col("__prev")).alias("value"),
-            )
-        )
-        # materialize each step's codebook (k*m*sub_dim rows — bounded
-        # by construction, the module's driver-side contract): the next
-        # iteration AND every downstream consumer (encode references cb
-        # twice, ADC once more) would otherwise re-run the whole Lloyd
-        # pass per reference — one bounded collect beats 2-3x corpus
-        # rescans on a cluster
         rows = [
             (r["sub"], r["cid"], r["j"], r["value"]) for r in cb.collect()
         ]
@@ -939,7 +807,6 @@ def pq_ivf_residual_topk(
     nprobe: int = 4,
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """IndexIVFPQ with RESIDUAL encoding — FAISS's ``by_residual=true``
     default, completing the raw-code variant ``pq_ivf_adc_topk``: each
@@ -967,19 +834,9 @@ def pq_ivf_residual_topk(
     Training is deterministic: first-``kcodes`` residuals by id seed
     the codebooks, same convention as ``pq_train``.
 
-    ``materialize=True`` eagerly localCheckpoints the residual frame
-    and its components explode, which otherwise re-derive under
-    train (3 references), encode, and the stored-cid join. Measured
-    at sf0.1 (``tools/ab_pqr_checkpoint.py``, round 10): res-only
-    checkpoint 4.67 → 4.45 s (~5%), res+components 5.08 → 5.12 s
-    (no gain; arms verified result-identical) — NOT adopted for the
-    registered query, mirroring the round-6 tfidf finding: at 2000
-    vectors the recurring subtrees are cheap narrow maps and the
-    checkpoint write costs what the recomputes cost; the query's
-    remaining wall-clock is stage-count overhead, not data. On a
-    cluster where the corpus is large and train/encode re-scans are
-    real IO, flip it on — the artifacts it pins are exactly the
-    once-at-ingest index build.
+    Every subtree stays lazy: checkpointing the residual frame and its
+    components gained nothing at sf0.1 (5.08 vs 5.12 s; SCALE.md
+    "Retired paths").
     """
     from news_data_pipeline_spark.operators.similarity import (
         _assign_cells,
@@ -1004,57 +861,29 @@ def pq_ivf_residual_topk(
     ).alias("rvec")
 
     res = pq_residuals(corpus, centroids, id_col=id_col, vec_col=vec_col)
-    if materialize:
-        # the components explode of the residual frame recurs FOUR
-        # times (train references it three times — seed, assign,
-        # means — and encode once more), each lazily re-deriving the
-        # assign+broadcast-join+zip_with+posexplode subtree; an eager
-        # localCheckpoint computes it once (the crossmodal round-9
-        # lesson — a recurring non-shuffle subtree AQE cannot reuse).
-        # res itself is checkpointed too for the stored-cid join.
-        # Corpus-sized: on a real deployment this is the once-at-ingest
-        # encode, not per-query work — which is why the flag is opt-in.
-        res = res.localCheckpoint(eager=True)
-        rcomp = _components(res, "id", "rvec", sub_dim).localCheckpoint(
-            eager=True
+    # codebooks injectable for the production shape (train once at
+    # index build, serve every query from the frozen artifact —
+    # FAISS semantics); default trains in-plan with the
+    # deterministic first-kcodes seed convention
+    cb = (
+        codebooks
+        if codebooks is not None
+        else pq_train(
+            res, id_col="id", vec_col="rvec", m=m, k=kcodes,
+            sub_dim=sub_dim, iters=iters,
         )
-        cb = (
-            codebooks
-            if codebooks is not None
-            else _train_on_components(rcomp, m=m, k=kcodes, iters=iters)
-        )
-        codes = _assign_codes(rcomp, cb)
-        # cell id stored WITH the code (each id has exactly one cell);
-        # on a real index this join happens once at ingest — the
-        # standalone form is pq_residual_encode above
-        codes_cid = codes.join(
-            res.select(F.col("id").alias("__rid"), "cid"),
-            codes.id == F.col("__rid"),
-        ).select("id", "sub", "code", "cid")
-    else:
-        # codebooks injectable for the production shape (train once at
-        # index build, serve every query from the frozen artifact —
-        # FAISS semantics); default trains in-plan with the
-        # deterministic first-kcodes seed convention
-        cb = (
-            codebooks
-            if codebooks is not None
-            else pq_train(
-                res, id_col="id", vec_col="rvec", m=m, k=kcodes,
-                sub_dim=sub_dim, iters=iters,
-            )
-        )
-        # row-local encode with the cell id as a passthrough column —
-        # no corpus-sized codes-x-residuals join (r14; the same shape
-        # as pq_residual_encode)
-        codes_cid = _encode_rowlocal(
-            res.where(F.col("rvec").isNotNull()).select(
-                "id", F.col("rvec").alias("v"), "cid"
-            ),
-            cb,
-            sub_dim,
-            passthrough=("cid",),
-        ).select("id", "sub", "code", "cid")
+    )
+    # row-local encode with the cell id as a passthrough column —
+    # no corpus-sized codes-x-residuals join (r14; the same shape
+    # as pq_residual_encode)
+    codes_cid = _encode_rowlocal(
+        res.where(F.col("rvec").isNotNull()).select(
+            "id", F.col("rvec").alias("v"), "cid"
+        ),
+        cb,
+        sub_dim,
+        passthrough=("cid",),
+    ).select("id", "sub", "code", "cid")
 
     query_cells = _assign_cells(
         queries, centroids, id_col, vec_col, "query_id", nprobe

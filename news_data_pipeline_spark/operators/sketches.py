@@ -69,39 +69,16 @@ def cms_estimates(
     *,
     depth: int = 4,
     width: int = 256,
-    materialize: bool = False,
 ) -> DataFrame:
     """Point-query every term against the sketch: adds ``cms_estimate``.
 
     The estimate is the min over the term's ``depth`` counters; it
     over-counts (hash collisions only ever add), never under-counts.
     Each row's counters arrive by a broadcast join against the
-    constant-size sketch — the probe side never shuffles.
-
-    ``materialize=False`` (lazy): the sketch subtree re-executes once
-    per hash row — ``depth`` corpus passes when the sketch derives
-    from a corpus scan, but each broadcast build runs in parallel
-    inside one job. ``materialize=True``: the sketch is computed ONCE
-    and its <= depth * width rows collected and re-planted as a local
-    relation, so the probe plan scans the corpus exactly once — the
-    "build once, probe forever" index shape (maintain_cms_sketch in
-    streaming.sinks is the pre-written variant). The collect is
-    bounded by the sketch's groupBy(row, bucket) construction; a
-    caller-supplied frame that is not sketch-shaped is guarded below.
+    constant-size sketch — the probe side never shuffles. The sketch
+    subtree re-executes once per hash row, each broadcast build running
+    in parallel inside one job.
     """
-    if materialize:
-        # depth * width is the hard ceiling of a real sketch; +1 makes
-        # an unbounded caller-supplied frame fail loudly instead of
-        # OOMing the driver (the _codebook_struct contract, r15).
-        cap = depth * width
-        rows = sketch.limit(cap + 1).collect()
-        if len(rows) > cap:
-            raise ValueError(
-                f"cms_estimates(materialize=True): sketch has more than"
-                f" depth*width = {cap} rows — not a (row, bucket,"
-                f" counter) CMS sketch"
-            )
-        sketch = terms.sparkSession.createDataFrame(rows, sketch.schema)
     est = terms
     for j in range(depth):
         row_j = (
@@ -132,7 +109,6 @@ def cms_heavy_hitters(
     depth: int = 4,
     width: int = 256,
     k: int = 30,
-    materialize: bool = False,
 ) -> DataFrame:
     """Top-k corpus tokens by count-min estimate, with exact counts.
 
@@ -146,15 +122,9 @@ def cms_heavy_hitters(
     distinct-token table feeds ONLY the fixed-size sketch, which then
     answers point queries without rescanning the corpus.
 
-    ``materialize=True`` collects the bounded sketch once and probes a
-    local relation — the plan then scans the corpus once for the probe
-    side instead of once per hash row (see ``cms_estimates``).
-    MEASURED (r15, rotated): lazy wins at sf0.1 (1.14 vs 2.05 s) AND at
-    a 400k-doc cluster-shaped fixture (1.78 vs 3.37 s) — the depth
-    parallel broadcast builds overlap inside one job while materialize
-    serializes two passes plus a driver round-trip. Lazy stays the
-    default; the flag is the I/O-bound-cluster escape hatch (and
-    ``streaming.sinks.maintain_cms_sketch`` is the pre-written form).
+    The sketch is probed lazily, never collected: a collect-once
+    probe lost at sf0.1 (2.05 vs 1.14 s) and at 400k docs (3.37 vs
+    1.78 s; SCALE.md "Retired paths").
     """
     from news_data_pipeline_spark.operators.dedup import word_shingles
 
@@ -167,10 +137,7 @@ def cms_heavy_hitters(
     sketch = cms_sketch(
         counts, "token", "exact_count", depth=depth, width=width
     )
-    est = cms_estimates(
-        counts, "token", sketch, depth=depth, width=width,
-        materialize=materialize,
-    )
+    est = cms_estimates(counts, "token", sketch, depth=depth, width=width)
     return (
         est.select("token", "cms_estimate", "exact_count")
         .orderBy(F.col("cms_estimate").desc(), F.col("token").asc())

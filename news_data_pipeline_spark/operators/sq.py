@@ -89,13 +89,12 @@ def sq_encode(
 
 def sq_adc_topk(
     queries: DataFrame,
-    codes: DataFrame | None,
+    codes: DataFrame,
     bounds: DataFrame,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    corpus: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric top-``k`` by squared L2: exact query components
     against dequantized corpus codes — (query_id, neighbor_id,
@@ -106,32 +105,13 @@ def sq_adc_topk(
     (broadcast bounds), square the difference against the broadcast
     query component, settle to 12dp BIGINT units, and sum exactly per
     pair — order-free, so partition layout can never flip a distance.
+    The stored ``codes`` join to two bounded broadcasts with a map-side
+    partial aggregation — the shape a frozen on-disk SQ index serves.
 
-    Two physical shapes, same values (parity pinned in tests):
-
-    - ``codes`` given (``corpus=None``): the stored-codes join form —
-      ``codes`` joined to two bounded broadcasts with a map-side
-      partial aggregation, the shape a frozen on-disk SQ index serves.
-    - ``corpus`` given (r15 row-local): quantize, dequantize and sum
-      the settled units per corpus ROW against a one-row broadcast of
-      (query vectors, bounds) — no components explode, no scoring
-      aggregate; the only exchange left is the top-k window.
-
-    MEASURED REJECTION (r15, tools/ab_r15_scale.py): the row-local
-    form zeroes the shuffle (29.3 -> 0.1 MB at 400k x 64d vectors) but
-    its higher-order-function term evaluation is INTERPRETED, and the
-    N*Q*d term count makes that the bottleneck: 26.3 s vs the join
-    form's 1.9 s at 400k (wash at sf0.1: 1.74 vs 1.69 s). The r14 PQ
-    row-local rewrites won because their folded work is m*k-bounded
-    per row; SQ's is the full scoring loop. The join form — whose
-    explode+broadcast-join+partial-agg pipeline is whole-stage
-    codegen'd — stays the registered shape; the row-local path is kept
-    under test parity as the documented rejected alternative.
+    The join form is the only form: a row-local fold over the corpus
+    rows was 14x slower at 400k vectors (26.3 vs 1.9 s; SCALE.md
+    "Retired paths").
     """
-    if corpus is not None:
-        return _sq_adc_topk_rowlocal(
-            queries, corpus, bounds, id_col, vec_col, k
-        )
     qcomp = _components(queries, id_col, vec_col).select(
         F.col("id").alias("query_id"), "j", F.col("x").alias("qx")
     )
@@ -148,10 +128,6 @@ def sq_adc_topk(
             ).alias("sq_dist")
         )
     )
-    return _rank_sq(scored, k)
-
-
-def _rank_sq(scored: DataFrame, k: int) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.asc("sq_dist"), F.asc("neighbor_id")
     )
@@ -160,104 +136,3 @@ def _rank_sq(scored: DataFrame, k: int) -> DataFrame:
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "sq_dist", "rank")
     )
-
-
-def _sq_adc_topk_rowlocal(
-    queries: DataFrame,
-    corpus: DataFrame,
-    bounds: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-) -> DataFrame:
-    """Row-local twin of the join form — term-identical arithmetic.
-
-    Semantics pinned to the exploded join, term for term:
-
-    - a (query, candidate) pair EXISTS iff at least one dimension
-      ``j`` is present in all three of candidate positions (1..len_c),
-      query positions (1..len_q) and ``bounds`` — i.e. iff
-      ``filter(bounds, j <= least(len_c, len_q))`` is non-empty (the
-      inner joins' group-existence rule, ``__n > 0`` below);
-    - per term: ``_code_expr`` (null component codes 0, constant
-      dimension codes 0), dequantize ``lo + code*(hi-lo)/255`` (NULL
-      when the bounds are NULL), diff against the query component
-      (NULL when either side is NULL), ``settled_units(diff*diff, 12)``
-      — every op a single IEEE expression shared with the join form;
-    - the BIGINT unit sum skips NULL terms and is NULL when every term
-      is NULL (SUM semantics), division by 1e12 and the 6dp settle are
-      the join form's exact expressions on the exact same integer.
-    """
-    qarr = (
-        queries.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("qid"), _as_double(vec_col).alias("qv")
-        )
-        .agg(F.collect_list(F.struct("qid", "qv")).alias("__qs"))
-    )
-    # bounds ordered by j: built from positional explodes, so the j
-    # domain is a contiguous 1..max prefix and element_at(.., j) after
-    # the sort is the (j, lo, hi) row — but the fold below only ever
-    # reads fields off the filtered structs, so contiguity is not
-    # actually required for correctness.
-    barr = bounds.agg(
-        F.array_sort(F.collect_list(F.struct("j", "lo", "hi"))).alias(
-            "__b"
-        )
-    )
-    aux = qarr.crossJoin(barr)  # exactly one row by construction
-    vecs = fan_out(
-        corpus.where(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-        )
-    )
-
-    def pair_struct(q):
-        nj = F.least(F.size(F.col("v")), F.size(q["qv"]))
-        terms = F.filter(F.col("__b"), lambda b: b["j"] <= nj)
-
-        def term_units(b):
-            x = F.element_at(F.col("v"), b["j"].cast("int"))
-            qx = F.element_at(q["qv"], b["j"].cast("int"))
-            code = _code_expr(x, b["lo"], b["hi"])
-            deq = b["lo"] + code * (b["hi"] - b["lo"]) / 255
-            diff = qx - deq
-            return settled_units(diff * diff, 12)
-
-        units = F.transform(terms, term_units)
-        acc = F.aggregate(
-            units,
-            F.struct(
-                F.lit(0).cast("long").alias("u"), F.lit(0).alias("nn")
-            ),
-            lambda a, t: F.struct(
-                (a["u"] + F.coalesce(t, F.lit(0).cast("long"))).alias("u"),
-                (a["nn"] + F.when(t.isNotNull(), 1).otherwise(0)).alias(
-                    "nn"
-                ),
-            ),
-        )
-        return F.struct(
-            q["qid"].alias("query_id"),
-            F.when(acc["nn"] > 0, acc["u"] / F.lit(1e12)).alias("__s"),
-            F.size(units).alias("__n"),
-        )
-
-    pairs = (
-        vecs.join(F.broadcast(aux), how="cross")
-        .select(
-            "id",
-            F.explode(
-                F.transform(F.col("__qs"), pair_struct)
-            ).alias("__p"),
-        )
-        .where(
-            (F.col("__p.__n") > 0) & (F.col("__p.query_id") != F.col("id"))
-        )
-        .select(
-            F.col("__p.query_id").alias("query_id"),
-            F.col("id").alias("neighbor_id"),
-            settled_round(F.col("__p.__s"), 6).alias("sq_dist"),
-        )
-    )
-    return _rank_sq(pairs, k)

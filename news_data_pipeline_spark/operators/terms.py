@@ -372,7 +372,6 @@ def tfidf_cosine_pairs(
     *,
     max_df: int | float = 0.1,
     min_cosine: float = 0.3,
-    materialize: bool = False,
 ) -> DataFrame:
     """(id_a, id_b, n_shared_terms, cosine): near-duplicate /
     same-story document pairs by cosine similarity in sparse TF-IDF
@@ -404,23 +403,9 @@ def tfidf_cosine_pairs(
 
     Plan shape note: the weights subtree recurs four times in the
     physical plan (norms + both posting sides, each carrying the 1-row
-    doc-count broadcast — the four audited BNLJ flags in PLANS.md).
-    Measured at sf0.1 on local[32], persisting weights
-    (MEMORY_AND_DISK) is a net LOSS — 2.1 s vs 1.7 s (r6) — because
-    the cache write costs more than three parallel recomputes of a
-    cheap tokenize+join. RE-MEASURED r15 on a cluster-shaped fixture
-    (tools/ab_r15_scale.py, 400k docs x 30 Zipf tokens, rotated):
-    ``materialize=True`` (eager localCheckpoint of weights) STILL
-    loses, 18.7 s vs 10.6 s lazy — the checkpoint write of the
-    corpus-sized weights frame costs more than the overlapped
-    recomputes even when tokenize dominates, because the recomputes
-    run in parallel inside one job while the checkpoint serializes
-    the pipeline. The lazy form stays the default at every measured
-    size; ``materialize=True`` remains for deployments where the
-    input scan itself is the bottleneck (100 TB I/O-bound), where
-    one-scan-instead-of-four is an I/O-bandwidth argument no local
-    fixture can exhibit. Same output either way — the oracle contract
-    is unaffected.
+    doc-count broadcast — the four audited BNLJ flags in PLANS.md), and
+    stays lazy: checkpointing it lost at 400k docs (18.7 vs 10.6 s;
+    SCALE.md "Retired paths").
     """
     fractional = isinstance(max_df, float) and not isinstance(max_df, bool)
     if fractional and not 0.0 < max_df <= 1.0:
@@ -450,14 +435,6 @@ def tfidf_cosine_pairs(
             ),
         )
     )
-    if materialize:
-        # weights recur FOUR times (norms + both posting sides + the
-        # doc-count broadcast rides in each) — on inputs where the
-        # tokenize+join subtree dominates, computing it once wins; at
-        # sf0.1 the lazy form keeps winning (module docstring and the
-        # r15 cluster-shaped A/B in tools/ab_r15_scale.py), hence the
-        # opt-in flag rather than a new default.
-        weights = weights.localCheckpoint(eager=True)
     norms = weights.groupBy("id").agg(
         F.sum(F.col("uw") * F.col("uw")).alias("norm2")
     )

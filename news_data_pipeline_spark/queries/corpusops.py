@@ -1546,13 +1546,12 @@ def sq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = sq_train(emb)
     codes = sq_encode(emb, bounds)
     queries = emb.where(F.col("vec_id") < 5)
-    # r15 A/B kept the JOIN form: the row-local fold (corpus=) zeroes
-    # the shuffled bytes (29.3 -> 0.1 MB at 400k vectors) but its
-    # interpreted higher-order-function terms run ~14x slower than the
-    # codegen'd explode+broadcast-join scan (tools/ab_r15_scale.py:
-    # 1.9 s vs 26.3 s at 400k x 64d) — the opposite economics of the
-    # r14 PQ rewrite, where the row-local work was m*k-bounded, not
-    # N*Q*d. Rejection recorded in OPTIMIZATION_r15.md.
+    # the JOIN form: a row-local fold zeroed the shuffled bytes (29.3 ->
+    # 0.1 MB at 400k vectors) but its interpreted higher-order-function
+    # terms ran ~14x slower than the codegen'd explode+broadcast-join
+    # scan (1.9 s vs 26.3 s at 400k x 64d) — the opposite economics of
+    # the r14 PQ rewrite, where the row-local work was m*k-bounded, not
+    # N*Q*d. Numbers in SCALE.md "Retired paths" and OPTIMIZATION_r15.md.
     return _sq_topk(queries, codes, bounds, k=10)
 
 

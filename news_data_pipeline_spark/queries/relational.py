@@ -1987,8 +1987,8 @@ def _orderkey_tables(
     by the orderkey — the round-12 adoption of the bucketed-join lever
     for the registry's repeat-join family (six queries re-join lineitem
     to orders on this key per invocation). Measured at sf0.1 through
-    the INTERLEAVED warm-median A/B (``tools/ab_bucketed_family.py``;
-    sequential arms mis-attribute — SCALE.md round 12): family total
+    the INTERLEAVED warm-median A/B (SCALE.md round 12 and "Retired
+    paths"; sequential arms mis-attribute): family total
     6.27 → 4.74 s (1.32×; independent interleaved probes 1.31×/1.30×),
     build cost ~2.3-2.8 s amortized inside two family sweeps. The win
     is pure co-location — the joins broadcast at sf0.1, but the
@@ -2035,12 +2035,12 @@ def _custkey_tables(
     invocation: top_customers, revenue_per_nation,
     customers_with_orders, customers_without_orders,
     customer_running_spend). Measured through the ROTATED interleaved
-    A/B (``tools/ab_custkey_family.py``; the round-12 fixed-order
+    A/B (SCALE.md "Retired paths"; the round-12 fixed-order
     pre-measure understated the arm at 1.22× — SCALE.md "Rotated-arm
     re-measure"): family total 1.40 → 0.89 s (**1.57×**) at sf0.1,
     build 2.7-3.9 s amortizing in ~2 family sweeps; validated past the
-    broadcast horizon at 1.79× (16M orders) and 2.44× (64M,
-    ``tools/ab_custkey_scale.py``) where the join sort-merges and the
+    broadcast horizon at 1.79× (16M orders) and 2.44× (64M, SCALE.md
+    "Retired paths") where the join sort-merges and the
     layout removes both join-side exchanges. Unsorted buckets
     deliberately: both candidate sort layouts measured flat at gate
     volume and sort-elision needs a global legacy conf (SCALE.md

@@ -42,10 +42,10 @@ def _userid_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_sessions, user_lifetime_totals, events_asof_latest_order,
     purchase_state_attribution, user_event_islands, user_decayed_value,
     earliest_event_per_user_type, user_retention_cohorts). Measured
-    through the ROTATED interleaved A/B at THREE volumes
-    (``tools/ab_userid_sorted.py`` at gate, ``tools/ab_userid_scale.py``
-    at 16M/64M — SCALE.md "r14 pre-measure"): family total 1.43-1.60×
-    at sf0.1, 1.37× at 16M wide, 1.35× at 64M/128 buckets, build
+    through the ROTATED interleaved A/B at THREE volumes (gate and
+    16M/64M — SCALE.md "r14 pre-measure" and "Retired paths"): family
+    total 1.43-1.60× at sf0.1, 1.37× at 16M wide, 1.35× at 64M/128
+    buckets, build
     2.9-3.7 s at gate amortizing in ~2 family sweeps at every size.
     UNSORTED buckets deliberately: ``sortBy(user_id, ts)`` wins only at
     gate-scale bucket sizes (pre-sorted runs ride the in-task sort's
@@ -332,7 +332,7 @@ def zorder_rectangle_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer stats prune most of the layer on BOTH dimensions — where a
     time-ordered ingest layout can prune only time (r14 census at 16M
     rows / 64 row groups: natural 64/64 groups overlap the value band;
-    z-ordered 9/64 — ``tools/ab_zorder_scan.py``). At 100 TB this is
+    z-ordered 9/64 — SCALE.md "Retired paths"). At 100 TB this is
     the read-amplification fix for selective scans the repeat-join
     bucketing family cannot address: the win is bytes never read, so
     it GROWS with corpus size while costing one write-side sort.

@@ -13,7 +13,6 @@ import math
 import pyspark.sql.functions as F
 
 from news_data_pipeline_spark.operators.pq import (
-    _components,
     pq_adc_topk,
     pq_encode,
     pq_train,
@@ -30,17 +29,6 @@ def _vectors(spark, sub_dim=2):
         (3, [0.0, 5.2, 4.8, 0.0]),
     ]
     return spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-
-def test_components_positional_layout(spark):
-    comp = _components(_vectors(spark), "vec_id", "embedding", sub_dim=2)
-    got = {
-        (r["id"], r["sub"], r["j"]): r["x"] for r in comp.collect()
-    }
-    # id 0: subspace 0 holds dims 1-2, subspace 1 holds dims 3-4
-    assert got[(0, 0, 1)] == 1.0 and got[(0, 0, 2)] == 0.0
-    assert got[(0, 1, 1)] == 0.0 and got[(0, 1, 2)] == 1.0
-    assert len(got) == 4 * 4
 
 
 def test_pq_train_converges_to_cluster_means(spark):
@@ -517,41 +505,6 @@ def test_maintain_pq_codes_streamed_equals_whole_corpus(spark, tmp_path):
     assert [(f.name, f.dataType) for f in empty.schema.fields] == [
         (f.name, f.dataType) for f in merged.schema.fields
     ]
-
-
-def test_residual_topk_materialize_parity(spark):
-    """materialize=True (eager localCheckpoint of the residual frame +
-    components explode, shared across train/encode/cid-join) must be
-    physically invisible: identical rows to the all-lazy plan. The
-    sf0.1 A/B measured no win at bench scale (docstring) — the flag is
-    a cluster-scale knob, so parity is the thing to pin."""
-    import pyspark.sql.functions as F
-
-    from news_data_pipeline_spark.operators.pq import pq_ivf_residual_topk
-
-    emb = spark.createDataFrame(
-        [
-            (i, [float((i * 7 + j * 3) % 13) - 6.0 for j in range(32)])
-            for i in range(40)
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    queries = emb.where(F.col("vec_id") < 3)
-    kw = dict(
-        sub_dim=8, m=4, kcodes=8, iters=1, k=5, nlist=8, nprobe=3
-    )
-    lazy = sorted(
-        map(tuple, pq_ivf_residual_topk(queries, emb, **kw).collect())
-    )
-    ckpt = sorted(
-        map(
-            tuple,
-            pq_ivf_residual_topk(
-                queries, emb, materialize=True, **kw
-            ).collect(),
-        )
-    )
-    assert lazy == ckpt
 
 
 def _write_synth_embeddings(spark, sf_dir, seed_shift):

@@ -3,19 +3,19 @@ interval-join family (SCALE.md round-12 skew probe, adopted round 13):
 
 - ``purchase_state_attribution`` now routes through
   ``operators.joins.asof_join``; the pre-adoption interval-join form
-  lives on as ``tools/ab_psa_asof.py::psa_naive`` (purchases(k) x
+  lives on below as ``psa_naive`` (purchases(k) x
   state_intervals(k) pairs per key — ~150-240 s for a 400k-row hot key
   at 4M rows in any storage layout, vs one shuffle + one in-key sort).
 - ``view_purchase_interval_join`` now routes through
   ``operators.joins.interval_join_bucketed``; the pre-adoption
-  residual-join form lives on as
-  ``tools/ab_vpij_bucketed.py::vpij_naive``.
+  residual-join form lives on below as ``vpij_naive``.
 
-Each probe tool's parity mode checked cell-exact equality at three
-fixture SFs, the sf0.01 DuckDB oracle, and synthetic wide/skew shapes;
-these tests keep the sf0.001 REGISTERED-vs-NAIVE comparisons plus the
-semantic edge cases in unit-test time so the adopted rewrites cannot
-silently drift from the interval semantics the oracles state.
+The adoption's parity runs checked cell-exact equality at three
+fixture SFs, the sf0.01 DuckDB oracle, and synthetic wide/skew shapes
+(SCALE.md "Retired paths"); these tests keep the sf0.001 REGISTERED-vs-NAIVE
+comparisons plus the semantic edge cases in unit-test time so the
+adopted rewrites cannot silently drift from the interval semantics the
+oracles state.
 """
 
 from __future__ import annotations
@@ -25,31 +25,104 @@ import os
 
 import pyspark.sql.functions as F
 
-# repo root = parent of tests/ — the pins must work from any checkout
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from tests.conftest import ROOT, SF_DIR as SF
+
+spec = importlib.util.spec_from_file_location(
+    "ab", os.path.join(ROOT, "tools", "ab.py")
+)
+ab = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(ab)
 
 
-def _load_tool(fname: str, name: str):
-    spec = importlib.util.spec_from_file_location(
-        name, os.path.join(ROOT, "tools", fname)
+def psa_naive(spark, sf_dir: str):
+    """The interval-join form of ``purchase_state_attribution`` — the
+    registered implementation BEFORE the r13 adoption, kept verbatim as
+    the reference the parity pins below compare against. This is the
+    per-key-quadratic shape: purchases(k) x state_intervals(k) pairs
+    per user before the residual filters."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    from news_data_pipeline_spark.queries import streaming_batch
+
+    events = streaming_batch.load_table(spark, sf_dir, "events").where(
+        F.col("ts").isNotNull()
     )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    nonp = events.where(F.col("event_type") != "purchase")
+    w_all = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w_type = Window.partitionBy("user_id", "event_type").orderBy(
+        "ts", "event_id"
+    )
+    grp = F.row_number().over(w_all) - F.row_number().over(w_type)
+    islands = (
+        nonp.withColumn("grp", grp)
+        .groupBy("user_id", "event_type", "grp")
+        .agg(F.min("ts").alias("valid_from"))
+        .drop("grp")
+    )
+    w_seq = Window.partitionBy("user_id").orderBy("valid_from", "event_type")
+    scd = islands.select(
+        F.col("user_id").alias("s_user_id"),
+        F.col("event_type").alias("state_type"),
+        "valid_from",
+        F.lead("valid_from").over(w_seq).alias("valid_to"),
+    )
+    purchases = events.where(F.col("event_type") == "purchase")
+    cond = (
+        (purchases.user_id == scd.s_user_id)
+        & (scd.valid_from <= purchases.ts)
+        & (scd.valid_to.isNull() | (purchases.ts < scd.valid_to))
+    )
+    return purchases.join(scd, cond, "left").select(
+        "event_id",
+        "user_id",
+        F.col("ts").alias("purchase_ts"),
+        "state_type",
+        F.col("valid_from").alias("state_since"),
+    )
 
 
-ab = _load_tool("ab_psa_asof.py", "ab_psa_asof")
-vp = _load_tool("ab_vpij_bucketed.py", "ab_vpij_bucketed")
-co = _load_tool("check_oracle.py", "check_oracle")
+def vpij_naive(spark, sf_dir: str):
+    """The equi-join-with-time-residual form of
+    ``view_purchase_interval_join`` — the registered implementation
+    BEFORE the r13 adoption (batch execution of
+    ``streaming.ops.interval_join_streams``), kept verbatim as the
+    reference the parity pins below compare against. Per-key cost
+    is views(k) x purchases(k) candidates before the residual filters."""
+    import pyspark.sql.functions as F
 
-SF = "/root/testdata/sf0.001"
+    from news_data_pipeline_spark.queries import streaming_batch
+    from news_data_pipeline_spark.streaming.ops import interval_join_streams
+
+    events = streaming_batch.load_table(spark, sf_dir, "events")
+    views = events.where(F.col("event_type") == "view").select(
+        F.col("event_id").alias("view_id"), "user_id", F.col("ts").alias("l_ts")
+    )
+    purchases = events.where(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        "user_id",
+        F.col("ts").alias("r_ts"),
+        F.round("value", 2).alias("purchase_value"),
+    )
+    out = interval_join_streams(
+        views, purchases, on="user_id", left_ts="l_ts", right_ts="r_ts",
+        within="15 minutes", watermark="1 hour",
+    )
+    return out.select(
+        "view_id",
+        "purchase_id",
+        "user_id",
+        F.col("l_ts").alias("view_ts"),
+        F.col("r_ts").alias("purchase_ts"),
+        "purchase_value",
+    )
 
 
 def test_asof_rewrite_matches_naive_interval_form(spark):
     from news_data_pipeline_spark.queries import query_map
 
     current = query_map()["purchase_state_attribution"](spark, SF)
-    ok, why = ab._compare_frames(co, current, ab.psa_naive(spark, SF))
+    ok, why = ab.same_rows(current, psa_naive(spark, SF))
     assert ok, why
 
 
@@ -108,9 +181,9 @@ def test_asof_rewrite_tied_and_prehistory_edges(spark, tmp_path, monkeypatch):
         "_userid_events",
         lambda s, d: streaming_batch.load_table(s, d, "events"),
     )
-    naive = ab.psa_naive(spark, SF)
+    naive = psa_naive(spark, SF)
     rewrite = query_map()["purchase_state_attribution"](spark, SF)
-    ok, why = ab._compare_frames(co, naive, rewrite)
+    ok, why = ab.same_rows(naive, rewrite)
     assert ok, why
     got = {
         (r.event_id, r.state_type)
@@ -131,7 +204,7 @@ def test_vpij_bucketed_matches_naive_residual_form(spark):
     from news_data_pipeline_spark.queries import query_map
 
     current = query_map()["view_purchase_interval_join"](spark, SF)
-    ok, why = ab._compare_frames(co, current, vp.vpij_naive(spark, SF))
+    ok, why = ab.same_rows(current, vpij_naive(spark, SF))
     assert ok, why
 
 
@@ -176,9 +249,9 @@ def test_vpij_bucketed_window_and_bucket_edges(spark, tmp_path, monkeypatch):
         if t == "events"
         else real(s, d, t),
     )
-    naive = vp.vpij_naive(spark, SF)
+    naive = vpij_naive(spark, SF)
     rewrite = query_map()["view_purchase_interval_join"](spark, SF)
-    ok, why = ab._compare_frames(co, naive, rewrite)
+    ok, why = ab.same_rows(naive, rewrite)
     assert ok, why
     got = {(r.view_id, r.purchase_id) for r in rewrite.collect()}
     assert got == {(0, 1), (0, 2), (0, 5), (6, 7), (6, 8)}

@@ -68,15 +68,14 @@ def test_sq_adc_ranks_by_dequantized_distance(spark):
     ) / 1e6
 
 
-def test_sq_adc_rowlocal_matches_join_form(spark):
-    """The r15 row-local scoring path (``corpus=``) must be
-    value-identical to the stored-codes join form — same pairs, same
-    settled distances, same ranks — including the edge rows the join
-    form's semantics pin: a constant dimension (hi == lo), a NULL
-    vector (dropped), vectors of DIFFERENT lengths (terms iterate the
-    shared 1..min(len) prefix), and a NULL component (codes 0, its
-    dequantized diff still scores against a non-null query component).
-    """
+def test_sq_adc_edge_rows_exact(spark):
+    """Exact (query_id, neighbor_id, sq_dist, rank) rows on the edge
+    rows the join form's semantics pin: a constant dimension (hi ==
+    lo), a NULL vector (dropped), vectors of DIFFERENT lengths (terms
+    iterate the shared 1..min(len) prefix), and a NULL component (codes
+    0, its dequantized diff still scores against a non-null query
+    component). The expected rows were produced identically by the join
+    form and by the row-local fold retired in SCALE.md "Retired paths"."""
     rows = [
         (0, [0.0, 7.0, 1.0]),
         (1, [10.0, 7.0, 2.0]),
@@ -91,16 +90,24 @@ def test_sq_adc_rowlocal_matches_join_form(spark):
     bounds = sq_train(vecs)
     codes = sq_encode(vecs, bounds)
     q = vecs.where(F.col("vec_id") < 3)
-    join_form = sq_adc_topk(q, codes, bounds, k=10).collect()
-    rowlocal = sq_adc_topk(
-        q, None, bounds, k=10, corpus=vecs
-    ).collect()
-    assert sorted(
-        [(r.query_id, r.neighbor_id, r.sq_dist, r.rank) for r in join_form]
-    ) == sorted(
-        [(r.query_id, r.neighbor_id, r.sq_dist, r.rank) for r in rowlocal]
+    got = sorted(
+        (r.query_id, r.neighbor_id, r.sq_dist, r.rank)
+        for r in sq_adc_topk(q, codes, bounds, k=10).collect()
     )
-    assert len(join_form) > 0
+    assert got == [
+        (0, 1, 101.007859, 4),
+        (0, 2, 25.196463, 3),
+        (0, 3, 24.02922, 2),
+        (0, 5, 10.299116, 1),
+        (1, 0, 101.0, 4),
+        (1, 2, 25.804306, 1),
+        (1, 3, 25.990004, 2),
+        (1, 5, 57.103037, 3),
+        (2, 0, 25.0, 3),
+        (2, 1, 25.0, 4),
+        (2, 3, 0.009612, 1),
+        (2, 5, 6.201077, 2),
+    ]
 
 
 def test_sq_null_vector_dropped(spark):

@@ -35,17 +35,17 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 # all-pairs. New BNLJ flags without an entry here need review.
 KNOWN_BNLJ = {
     "perplexity_cut_assignments": "two 1-row corpus token-total broadcasts (the LM-score subtree appears under both the scores and the cuts arms)",
-    "pq_ivf_residual_topk": "nlist=16 centroid frame broadcast into the corpus cell-assign, the query probe, and the residual subtraction — all nlist-sized",
+    "pq_ivf_residual_topk": "x4 = nlist=16 one-row centroid array into the corpus cell assign + one-row codebook array (one struct per (sub, cid), a local relation under the bounded-codebook contract) into the residual encode + the same codebook array into the per-(query, probed cell) LUT + nlist=16 centroid frame into the 5-query probe assign",
     "ann_recall_at_k": "bounded query-vector broadcast (10 queries) in the exact arm + nlist=16 centroids and the same query set in the IVF arm — all contract-bounded",
     "hard_negative_mining": "bounded query-vector set broadcast (contract: small query side, same as cosine_topk_bruteforce)",
     "ivf_cell_sizes": "nlist=16 centroid frame broadcast into the one cell-assignment pass",
-    "multimodal_crossmodal_topk": "nlist=16 centroid frame broadcast into both cell-assignment passes (image corpus + 5 text queries) of the IVF-PQ subtree",
+    "multimodal_crossmodal_topk": "x4 = nlist=16 image-centroid frame into the 5-text-query probe assign + the nlist=16 one-row centroid array into the image-corpus cell assign + one-row codebook array (one struct per (sub, cid), a local relation under the bounded-codebook contract) into the image encode + the same codebook array into the text-query LUT",
     "perplexity_buckets": "1-row corpus token-total broadcast into the unigram log-prob (same subtree as document_lm_scores)",
     "perplexity_bucket_cuts": "1-row corpus token-total broadcast into the unigram log-prob (same subtree as document_lm_scores)",
     "adaptive_stopword_removal": "1-row corpus total broadcast into the df-ratio threshold",
     "dsir_importance_weights": "two 1-row model-total aggregates (raw/target) broadcast into the smoothed log-ratios",
-    "pq_ivf_adc_topk": "nlist=16 centroid frame broadcast into both cell-assignment passes (corpus + queries)",
-    "pq_ivf_rerank_topk": "nlist=16 centroid frame broadcast into both cell-assignment passes of the ADC shortlist subtree",
+    "pq_ivf_adc_topk": "x4 = nlist=16 centroid frame into the 5-query probe assign + the nlist=16 one-row centroid array into the corpus cell assign + one-row codebook array (one struct per (sub, cid), a local relation under the bounded-codebook contract) into the corpus encode + the same codebook array into the 5-query LUT",
+    "pq_ivf_rerank_topk": "x4 = the four sites of pq_ivf_adc_topk inside its ADC shortlist subtree: 5-query probe assign (nlist=16 centroid frame), corpus cell assign (nlist=16 one-row centroid array), corpus encode and 5-query LUT (one-row codebook array (one struct per (sub, cid), a local relation under the bounded-codebook contract))",
     "bm25_search": "1-row corpus stats (N, avgdl) broadcast to scorers",
     "cosine_topk_bruteforce": "bounded query-vector set broadcast (contract: small query side)",
     "cosine_topk_ivf": "nlist centroids + query vectors broadcast (both bounded)",
@@ -65,10 +65,12 @@ KNOWN_BNLJ = {
     "tfidf_cosine_pairs": "1-row doc-count broadcast into idf; x4 because the weights subtree (which carries it) recurs under norms and both posting sides",
     "bpe_word_encodings": "x6 = one 1-row merge-pair broadcast per replayed rank (merges.where(rank==k) over the NUM_MERGES-row local artifact; apply_pair contract)",
     "bpe_symbol_vocab": "x6 = one 1-row merge-pair broadcast per replayed rank (same apply_merges chain as bpe_word_encodings)",
-    "pq_partitioned_cell_scan": "nlist=16 centroid frame broadcast into the ingest-side cell assign and the query probe (same pair as pq_ivf_adc_topk; the code-table read itself is a partition-pruned parquet scan)",
-    "ann_recall_nprobe_curve": "x30 = 5 sweep arms x (10-query broadcast in the exact arm + nlist=16 centroid frames in the IVF/probe/cell-size assigns + the 1-row hits x 1-row reads cross join) — every side contract-bounded, output 5 rows",
-    "ann_recall_trained_curve": "x30 = same decomposition as ann_recall_nprobe_curve (the trained centroids are a collected nlist=16 literal, so every broadcast side stays contract-bounded)",
-    "crossmodal_topk_frozen": "x1 = nlist=16 collected-centroid frame broadcast into the 5-text-query probe assign (corpus-side assign happened once at index build; the stored-cid probe is a broadcast hash join, not BNLJ)",
+    "pq_partitioned_cell_scan": "x3 = nlist=16 centroid frame into the 5-query probe assign, twice (the main plan and the dynamic-pruning subquery that prunes the cid-partitioned code table to the probed cells) + one-row codebook array (one struct per (sub, cid), a local relation under the bounded-codebook contract) into the 5-query LUT; the corpus-side assign and encode ran once at artifact build",
+    "ann_recall_nprobe_curve": "x5 = 10-query broadcast into the exact arm + the nlist=16 one-row centroid array into the corpus cell assign, twice (candidate scoring and the column-pruned cell-size table) + 10 queries x nlist=16 centroid frame in the ranked probe assign, twice (hits arm and vectors-read arm) — every side contract-bounded, output 5 rows",
+    "ann_recall_trained_curve": "x5 = same decomposition as ann_recall_nprobe_curve (the trained centroids are a collected nlist=16 literal, so every broadcast side stays contract-bounded)",
+    "crossmodal_topk_frozen": "x2 = nlist=16 collected-centroid frame into the 5-text-query probe assign + one-row codebook array (one struct per (sub, cid), a local relation under the bounded-codebook contract) into the text-query LUT (corpus-side assign and encode happened once at index build; the stored-cid probe is a broadcast hash join, not BNLJ)",
+    "pq_adc_topk": "x2 = one-row codebook array (one struct per (sub, cid), a local relation under the bounded-codebook contract) into the corpus encode + the same codebook array into the 5-query LUT",
+    "pq_encoded_sample": "x1 = one-row codebook array (one struct per (sub, cid), a local relation under the bounded-codebook contract) into the 50-vector sample's encode",
 }
 
 # Plan facts worth counting. CartesianProduct/BatchEvalPython are hard
