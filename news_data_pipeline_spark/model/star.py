@@ -88,12 +88,11 @@ def build_fact(
     fact_id_cols: Sequence[str],
     fact_id_name: str = "fact_id",
     select: Sequence[str] | None = None,
-    broadcast_dims: bool = True,
     fill_unknown: str | None = "UNKNOWN",
 ) -> DataFrame:
     """Attach dim surrogate keys by joining on each natural key.
 
-    Mirrors ``03:51-77``. Dims are broadcast by default (they are bounded
+    Mirrors ``03:51-77``. Dims are broadcast (they are bounded
     by distinct member count); the fact side never shuffles for the
     joins. The fact's own id is a hash of its natural identity columns,
     not a global row_number (``03:58-59``). ``fill_unknown`` must match
@@ -112,8 +111,7 @@ def build_fact(
             )
         out = out.fillna(fill_unknown, subset=list(dims.keys()))
     for natural_key, dim in dims.items():
-        dim_side = F.broadcast(dim) if broadcast_dims else dim
-        out = out.join(dim_side, on=natural_key, how="left")
+        out = out.join(F.broadcast(dim), on=natural_key, how="left")
     out = out.withColumn(fact_id_name, surrogate_key(*fact_id_cols))
     if select:
         out = out.select(*select)

@@ -401,94 +401,6 @@ def shared_shingles(
     return counted.where(keep).select("shingle")
 
 
-def _prefix_filtered_jaccard_pairs(
-    sh: DataFrame,
-    sizes: DataFrame,
-    *,
-    threshold: float,
-    max_df: int,
-) -> DataFrame:
-    """Prefix-filtered candidate generation for the bounded Jaccard
-    path (AllPairs/PPJoin family): order each doc's kept shingles by a
-    global canonical order (ascending document frequency, shingle
-    string tie-break) and index only the first
-    ``n_kept − floor(t·|A|) + 1`` of them. Soundness: J ≥ t forces
-    ``common ≥ t·|A|`` (since ``|B| ≥ common``), and if every shared
-    shingle sat past A's prefix then ``common ≤ floor(t·|A|) − 1`` —
-    pigeonhole, so a qualifying pair must collide in BOTH prefixes and
-    prefix-only postings yield complete candidates (``floor`` rather
-    than ``ceil`` sidesteps float-boundary under-length prefixes: it
-    can only make the prefix longer, never lossy). The prefix is sized
-    from ``threshold − 5e-5``, not ``threshold``: the final filter
-    thresholds the 4dp-rounded jaccard, so a pair whose true J sits in
-    ``[t − 5e-5, t)`` rounds up to t and survives the settled_round
-    filter — the relaxed bound guarantees its candidate generation at
-    ANY document size, where the raw-t prefix only covered it while
-    ``5e-5·n_sh < 1`` (round-11 ADVICE). Candidates verify EXACTLY via
-    ``array_intersect`` over the full kept-shingle arrays, so the
-    emitted (pair, jaccard) multiset is identical to the unfiltered
-    path's.
-
-    Returns (id_a, id_b, common) with exact kept-shingle common counts.
-    Measured round 11 (sf0.1, t=0.3, max_df=100): NOT adopted — see
-    ``ngram_jaccard_pairs``.
-    """
-    counted = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    kept = counted.where(
-        (F.col("__df") > 1) & (F.col("__df") <= max_df)
-    )
-    # per-doc kept shingles in global canonical order
-    doc_arr = (
-        sh.join(kept, on="shingle")
-        .groupBy("id")
-        .agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct("__df", "shingle"))
-                ),
-                lambda s: s["shingle"],
-            ).alias("__arr")
-        )
-        .join(sizes, on="id")
-        .withColumn(
-            "__p",
-            # threshold − 5e-5: absorb the 4dp half-up rounding slack
-            # of the downstream settled_round filter (see docstring)
-            F.greatest(
-                F.size("__arr")
-                - F.floor(F.lit(threshold - 5e-5) * F.col("n_sh")).cast("int")
-                + F.lit(1),
-                F.lit(0),
-            ),
-        )
-    )
-    posts = (
-        doc_arr.select(
-            "id", F.explode(F.slice("__arr", 1, F.col("__p"))).alias("shingle")
-        )
-        .groupBy("shingle")
-        .agg(F.collect_list("id").alias("ids"))
-    )
-    cands = (
-        posts.select(F.explode("ids").alias("id_a"), "ids")
-        .select("id_a", F.explode("ids").alias("id_b"))
-        .where(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
-    a = doc_arr.select(F.col("id").alias("id_a"), F.col("__arr").alias("__aa"))
-    b = doc_arr.select(F.col("id").alias("id_b"), F.col("__arr").alias("__ab"))
-    return (
-        cands.join(a, on="id_a")
-        .join(b, on="id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__aa", "__ab")).alias("common"),
-        )
-        .where(F.col("common") > 0)
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -497,7 +409,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = None,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """All document pairs with n-gram Jaccard similarity >= threshold.
 
@@ -517,32 +428,15 @@ def ngram_jaccard_pairs(
     equi-self-join streams unbounded posting lists without ever
     materializing one. Both emit the identical pair multiset.
 
-    ``prefix_filter=True`` (requires ``max_df``) routes candidate
-    generation through the AllPairs/PPJoin prefix index
-    (``_prefix_filtered_jaccard_pairs``) — value-identical output,
-    measured round 11 at sf0.1/max_df=100 and NOT adopted as the
-    default: 6.15 vs 2.54 s median at t=0.3 and 3.65 vs 2.32 s even at
-    t=0.8 where the prefix shrinks to ~20% of each doc. The df-capped
-    explode volume (sum df² = 2.8M rows) is already cheap on 32 cores;
-    the prefix path trades that volume for three extra stages (per-doc
-    canonical arrays, candidate distinct, array-verify joins) and the
-    stage count dominates. The cap, not the prefix, is what keeps this
-    operator linear at 100 TB (sum df² <= kept_shingles · max_df²);
-    the flag stays for genuinely high-threshold/long-document corpora
-    where per-posting volume, not stage count, is the binding term.
+    A prefix-filtered candidate path (AllPairs/PPJoin) lost its A/B to
+    the bounded path and was retired: see SCALE.md "Retired paths".
     """
     # Identical subplans (the shingle table feeding several shuffles)
     # share one materialized exchange under AQE — no persist needed
     # (see lsh_candidate_pairs).
     sh = word_shingles(df, id_col, text_col, n=n)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    if prefix_filter and max_df is None:
-        raise ValueError("prefix_filter requires max_df")
-    if prefix_filter:
-        common = _prefix_filtered_jaccard_pairs(
-            sh, sizes, threshold=threshold, max_df=max_df
-        )
-    elif max_df is not None:
+    if max_df is not None:
         # Bounded-df path: posting lists are capped at max_df ids, so
         # collect them per shingle and emit pairs from the (<= max_df
         # choose 2)-element array. Document frequency comes from the

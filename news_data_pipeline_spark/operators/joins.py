@@ -66,7 +66,7 @@ def salted_join(
     straggler. For hot keys (e.g. the reference's ``fillna("UNKNOWN")``
     author bucket, ``03:42-44`` — SURVEY §7.3) in the shapes AQE's
     skew split cannot serve — measured
-    (``tools/scale_probe.py --skew``, SCALE.md round-9c): on a 40%-hot
+    (SCALE.md round-9c; the probe is in "Retired paths"): on a 40%-hot
     key over 50M sort-merge-joined rows the penalty is ~5× and AQE's
     split erases it when it CAN engage, but a consumer aggregating on
     the join key suppresses the split (splitting would break the

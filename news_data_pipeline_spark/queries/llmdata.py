@@ -3895,8 +3895,7 @@ def _build_xmodal_artifacts(spark: SparkSession, docs: DataFrame):
     cid-carrying codes and the raw embedding column as parquet.
     Returns ``(root_or_None, cb_rows, cent_rows)`` — the cacheable
     artifact tuple (`_crossmodal_frozen_index` caches it per sf_dir;
-    ``tools/scale_probe.py --crossmodal-sweep`` times it at growing
-    synthetic corpus sizes)."""
+    its build-vs-retrieval sweep is in SCALE.md "Retired paths")."""
     from news_data_pipeline_spark.operators import multimodal as mm
     from news_data_pipeline_spark.operators.pq import pq_encode, pq_train
     from news_data_pipeline_spark.operators.similarity import (

@@ -205,7 +205,6 @@ def enrich_stream_with_dim(
     *,
     on: str,
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Stream-static join: enrich each micro-batch with a dimension.
 
@@ -216,11 +215,10 @@ def enrich_stream_with_dim(
     answer to slowly-changing lookup data on a stream. Stateless: no
     watermark needed, any output mode, state store untouched.
 
-    ``broadcast_dim`` (default) pins the physical strategy: dims are
+    The dim is broadcast, which pins the physical strategy: dims are
     orders of magnitude smaller than a 100-TB stream, and a per-batch
     broadcast avoids re-shuffling every micro-batch by the join key.
     Left join keeps stream rows with no dim match (the DQ layer, not
     the enrichment join, decides what to do with orphans).
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return stream.join(d, on=on, how=how)
+    return stream.join(F.broadcast(dim), on=on, how=how)
