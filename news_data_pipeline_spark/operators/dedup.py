@@ -1389,59 +1389,3 @@ def dup_ngram_char_coverage(
             F.col("covered_chars") / F.col("word_chars").cast("double"), 4
         ),
     )
-
-
-def bloom_dedup_against_corpus(
-    new_df: DataFrame,
-    corpus: DataFrame,
-    text_col: str,
-    *,
-    num_bits: int = 1 << 20,
-    num_hashes: int = 4,
-    corpus_bits: DataFrame | None = None,
-) -> DataFrame:
-    """``exact_dedup_against_corpus`` with a Bloom prefilter: identical
-    keep/drop decisions (the filter has no false negatives, so nothing
-    a plain anti-join would keep is ever dropped), but the exact
-    anti-join probes ONLY the ~fpp-sized maybe-duplicate slice instead
-    of the whole new batch.
-
-    Why it matters at 100 TB: the historical corpus side of the exact
-    anti-join is a corpus-sized shuffle every batch. Here the corpus
-    is consulted twice, but cheaply: once as a constant-size bit table
-    (pass ``corpus_bits`` — e.g. ``read_bloom_filter`` over the
-    filter partitions ``maintain_bloom_filter`` keeps current — to
-    skip even that scan), and once semi-joined against only the
-    maybe-members (at a 1% fpp that join's probe side is ~1% of the
-    batch plus the true duplicates). Definite-new rows never touch the
-    corpus at all. Null-text rows fingerprint to null, probe nothing,
-    and survive — same convention as the exact operator.
-    """
-    from news_data_pipeline_spark.operators.sketches import (
-        bloom_bits,
-        bloom_probe,
-    )
-
-    for c in ("__fp", "maybe_member"):
-        if c in new_df.columns:
-            raise ValueError(
-                f"bloom_dedup_against_corpus reserves column name {c!r}; "
-                "rename it before calling"
-            )
-    corpus_fp = corpus.select(fingerprint(F.col(text_col)).alias("__fp"))
-    if corpus_bits is None:
-        corpus_bits = bloom_bits(
-            corpus_fp, "__fp", num_bits=num_bits, num_hashes=num_hashes
-        )
-    new_fp = fan_out(new_df).withColumn("__fp", fingerprint(F.col(text_col)))
-    probed = bloom_probe(
-        new_fp, "__fp", corpus_bits,
-        num_bits=num_bits, num_hashes=num_hashes,
-    )
-    definite_new = probed.where(F.col("maybe_member") == 0)
-    maybe = probed.where(F.col("maybe_member") == 1)
-    resolved_new = maybe.join(corpus_fp, on="__fp", how="left_anti")
-    return (
-        definite_new.unionByName(resolved_new)
-        .drop("__fp", "maybe_member")
-    )

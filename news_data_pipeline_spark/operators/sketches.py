@@ -208,10 +208,8 @@ def bloom_probe(
     construction; collisions only flip non-members to 1. Each of the
     ``num_hashes`` checks is a broadcast LEFT join against the
     constant-size bit table (probe side never shuffles), and the flag
-    is the AND of the per-hash hits. The canonical 100-TB use: probe a
-    new batch's fingerprints against the historical corpus filter and
-    fully process only the definite-new rows — the expensive exact
-    anti-join then runs on the ~fpp-sized maybe set, not the batch.
+    is the AND of the per-hash hits. As a prefilter in front of the
+    exact dedup anti-join it lost its A/B (SCALE.md "Retired paths").
     """
     probed = df
     hit_cols = []

@@ -3541,7 +3541,7 @@ def dup_ngram_char_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dup_ngram_char_coverage(docs, "doc_id", "text", n=3)
 
 
-# --- Bloom filter membership + prefiltered incremental dedup (round 8) -----
+# --- Bloom filter membership (round 8) ------------------------------------
 
 
 def _duck_bloom_bit(j: int, col: str, num_bits: int) -> str:
@@ -3596,43 +3596,6 @@ def bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bloom_probe(
         probes, "fp", bits, num_bits=256, num_hashes=3
     ).select("doc_id", "maybe_member")
-
-
-@register(
-    "bloom_dedup_incremental",
-    # the SAME oracle as dedup_incremental_exact: the Bloom prefilter
-    # is an access path, never a verdict change (no-false-negative
-    # contract), so the keep-set must hash-match the plain anti-join
-    oracle="""
-    WITH fp AS (
-        SELECT doc_id, source, lang,
-               md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS f
-        FROM documents),
-    corpus AS (SELECT f FROM fp WHERE doc_id % 4 = 0)
-    SELECT b.doc_id, b.source, b.lang
-    FROM fp b
-    WHERE b.doc_id % 4 <> 0
-      AND NOT EXISTS (SELECT 1 FROM corpus c WHERE c.f = b.f)
-    """,
-)
-def bloom_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-prefiltered incremental exact dedup
-    (operators.dedup.bloom_dedup_against_corpus): same corpus/batch
-    split as ``dedup_incremental_exact``, but the batch first probes a
-    constant-size Bloom filter of the corpus fingerprints — definite-
-    new rows (maybe_member = 0) skip the anti-join entirely; only the
-    ~fpp-sized maybe set pays it. At 100 TB the corpus side of each
-    ingest shrinks from a full shuffle to a broadcast bit table plus a
-    small resolution join. num_bits=512 keeps the false-positive path
-    genuinely exercised at every SF."""
-    from news_data_pipeline_spark.operators import dedup as ddp
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.where(F.col("doc_id") % 4 == 0)
-    batch = docs.where(F.col("doc_id") % 4 != 0)
-    return ddp.bloom_dedup_against_corpus(
-        batch, corpus, "text", num_bits=512, num_hashes=3
-    ).select("doc_id", "source", "lang")
 
 
 # --- CLIP-style cross-modal retrieval (round 8) ----------------------------

@@ -1549,9 +1549,8 @@ def streamed_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming.sinks.maintain_bloom_filter + read_bloom_filter): text
     fingerprints stream through three availableNow micro-batches, each
     writing its own bit partition; the distinct-merged filter must
-    equal the batch-built filter of the whole corpus bit-for-bit. The
-    filter is the live half of the incremental-dedup contract — probe
-    it before paying the exact anti-join against history."""
+    equal the batch-built filter of the whole corpus bit-for-bit. It
+    is not a dedup access path (SCALE.md "Retired paths")."""
     import os
     import tempfile
 
@@ -1651,15 +1650,16 @@ def streamed_ingest_dedup_corpus(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The continuous-ingestion dedup sink end-to-end
-    (streaming.sinks.ingest_deduplicated, method='bloom'): documents
+    (streaming.sinks.ingest_deduplicated, method='exact'): documents
     arrive as two ordered availableNow micro-batches, each batch
-    dedups internally (keep-lowest-id), probes the maintained Bloom
-    filter + anti-join against everything previously accepted, and
-    appends survivors as its own corpus partition. The final corpus
-    must equal global keep-first dedup over the whole stream — the
-    contract that makes per-batch ingestion equivalent to one giant
-    batch job, driver-verified through the exact-dedup SQL (the Bloom
-    filter is an access path, never a verdict change). Batch count is
+    dedups internally (keep-lowest-id), anti-joins against everything
+    previously accepted, and appends survivors as its own corpus
+    partition. The final corpus must equal global keep-first dedup
+    over the whole stream — the contract that makes per-batch
+    ingestion equivalent to one giant batch job, driver-verified
+    through the exact-dedup SQL. A Bloom prefilter in front of the
+    anti-join keeps the same rows and measured slower (SCALE.md
+    "Retired paths"). Batch count is
     two, not three — the ``streamed_pq_codes`` round-10 profile
     measured ~2 s of FIXED per-trigger toll at gate scale, and two
     partitions already exercise every semantic this query pins
@@ -1701,101 +1701,8 @@ def streamed_ingest_dedup_corpus(
             text_col="text",
             corpus_path=corpus_path,
             checkpoint=os.path.join(root, "ckpt"),
-            method="bloom",
-            num_bits=4096,
-            num_hashes=3,
+            method="exact",
             available_now=True,
-        )
-        q.awaitTermination()
-    return spark.read.parquet(corpus_path).select(
-        "doc_id", "lang", "source"
-    )
-
-
-@register(
-    "streamed_ingest_dedup_compacted",
-    # identical oracle to streamed_ingest_dedup_corpus: bit-table
-    # compaction is an access-path change (one merged sentinel
-    # partition + _covered.json manifest instead of per-batch bit
-    # partitions) and must never change a keep/drop verdict.
-    oracle="""
-    WITH fp AS (
-        SELECT doc_id, lang, source, doc_id % 2 AS batch,
-               CASE WHEN text IS NULL THEN NULL
-                    ELSE md5(regexp_replace(lower(text), '[^a-z0-9]', '',
-                                            'g'))
-               END AS f
-        FROM documents),
-    winners AS (
-        SELECT doc_id FROM (
-            SELECT doc_id, row_number() OVER (
-                PARTITION BY f ORDER BY batch, doc_id) AS rn
-            FROM fp WHERE f IS NOT NULL) t
-        WHERE rn = 1)
-    SELECT doc_id, lang, source FROM fp
-    WHERE f IS NULL OR doc_id IN (SELECT doc_id FROM winners)
-    """,
-)
-def streamed_ingest_dedup_compacted(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """streamed_ingest_dedup_corpus with bloom bit-table COMPACTION
-    live (``compact_after=1`` — the round-10 maintenance path): after
-    the first trigger its bit partition OR-merges into the sentinel
-    ``batch_id=-1`` partition with a ``_covered.json`` manifest; the
-    second trigger probes the merged sentinel (coverage comes from the
-    manifest, not per-batch partitions), appends its own bits, and
-    re-compacts them INTO the existing sentinel — exercising build,
-    probe-after-compaction, and merge-into-sentinel in two triggers.
-    The final corpus must STILL equal global keep-first dedup — the
-    driver gate proves compaction is an access-path change only (it
-    can only ADD false-positive maybe-rows, which the corpus anti-join
-    resolves; never a false negative, which would append a true
-    duplicate). Structure assertions (partition layout, manifest
-    contents, resize-after-compaction rebuild) live in
-    ``tests/test_streaming.py``. Two batches, not three — the fixed
-    ~2 s/trigger toll dominated at gate scale (round-10 verdict item
-    3: this was the slowest local-gate entry at ~24 s); the two-trigger
-    shape above covers strictly more compaction paths than the old
-    3-batch/compact_after=2 one (which merged once and never re-merged
-    into an existing sentinel)."""
-    import os
-    import tempfile
-
-    from news_data_pipeline_spark.streaming.sinks import ingest_deduplicated
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source"
-    )
-    if not docs.head(1):
-        return spark.createDataFrame(
-            [], "doc_id bigint, lang string, source string"
-        )
-    root = tempfile.mkdtemp(prefix="ingest_compact_q_")
-    landing = os.path.join(root, "landing")
-    corpus_path = os.path.join(root, "corpus")
-    for i in range(2):
-        docs.where(F.col("doc_id") % 2 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(landing, f"f{i}"))
-        stream = (
-            spark.readStream.schema(
-                "doc_id bigint, text string, lang string, source string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(landing, "*"))
-        )
-        q = ingest_deduplicated(
-            stream,
-            id_col="doc_id",
-            text_col="text",
-            corpus_path=corpus_path,
-            checkpoint=os.path.join(root, "ckpt"),
-            method="bloom",
-            num_bits=4096,
-            num_hashes=3,
-            available_now=True,
-            compact_after=1,
         )
         q.awaitTermination()
     return spark.read.parquet(corpus_path).select(

@@ -9,7 +9,6 @@ from news_data_pipeline_spark.streaming.ops import (
 )
 from news_data_pipeline_spark.streaming.sinks import (
     apply_cdc,
-    compact_bloom_partitions,
     ingest_deduplicated,
     run_available_now,
     split_to_silver_and_quarantine,
@@ -22,7 +21,6 @@ from news_data_pipeline_spark.streaming.state import (
 
 __all__ = [
     "apply_cdc",
-    "compact_bloom_partitions",
     "enrich_stream_with_dim",
     "ingest_deduplicated",
     "interval_join_streams",

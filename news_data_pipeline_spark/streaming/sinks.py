@@ -185,218 +185,6 @@ def publish_snapshots(
     return writer.start()
 
 
-def _batch_partition_ids(spark, path: str) -> set:
-    """``batch_id`` partition values present under ``path`` — a
-    driver-side directory listing (O(#batches), no data scan), empty if
-    the path does not exist. Used to prove the ``_bloom`` side table
-    covers every corpus partition before trusting it."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return set()
-    out = set()
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if name.startswith("batch_id="):
-            out.add(int(name.split("=", 1)[1]))
-    return out
-
-
-def _fs(spark, path: str):
-    """Hadoop FileSystem + Path for ``path`` (driver-side metadata IO)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def _write_json_sidecar(spark, path: str, payload: dict) -> None:
-    """Overwrite a tiny JSON metadata file at ``path`` via the Hadoop
-    FS API — bytes-sized driver-side IO, invisible to Spark table
-    readers when the file name is underscore-prefixed."""
-    import json
-
-    fs, p = _fs(spark, path)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(payload).encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _read_json_sidecar(spark, path: str) -> dict | None:
-    """Read a JSON sidecar written by ``_write_json_sidecar``; ``None``
-    if absent or unparsable (callers treat that as "re-derive")."""
-    import json
-
-    fs, p = _fs(spark, path)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        # py4j copies byte[] args, so stream.read(buf) can't fill a
-        # Python bytearray — drain JVM-side via commons-io instead
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    try:
-        return json.loads(text)
-    except ValueError:
-        return None
-
-
-#: sentinel ``batch_id`` for the compacted bloom bit partition — real
-#: micro-batch ids are non-negative, so the probe read's
-#: ``batch_id != current`` filter always keeps it.
-_COMPACTED_BATCH_ID = -1
-
-
-def _bloom_partition_sizing(
-    spark, bloom_path: str, part_id: int, fmt: str
-) -> tuple | None:
-    """The ``(num_bits, num_hashes)`` one bloom bit partition was
-    hashed under, or ``None`` when unknowable (pre-stamping partition
-    — the caller must rebuild it). Prefers the ``_sizing.json``
-    sidecar (driver-side bytes read, no scan); partitions written
-    before sidecars fall back to one single-partition parquet read."""
-    side = _read_json_sidecar(
-        spark, f"{bloom_path}/batch_id={part_id}/_sizing.json"
-    )
-    if side is not None and {"num_bits", "num_hashes"} <= set(side):
-        return (side["num_bits"], side["num_hashes"])
-    try:
-        one = (
-            spark.read.format(fmt)
-            .load(f"{bloom_path}/batch_id={part_id}")
-        )
-        if {"num_bits", "num_hashes"} <= set(one.columns):
-            row = one.select("num_bits", "num_hashes").head(1)
-            if row:
-                return (row[0]["num_bits"], row[0]["num_hashes"])
-    except Exception:
-        pass
-    return None
-
-
-def compact_bloom_partitions(
-    spark,
-    corpus_path: str,
-    *,
-    num_bits: int,
-    num_hashes: int,
-    fmt: str = "parquet",
-) -> int:
-    """OR-merge every bloom bit partition under ``{corpus_path}/_bloom``
-    into the single sentinel partition ``batch_id=-1`` and record which
-    corpus partitions it covers in a ``_covered.json`` root sidecar.
-
-    Why: the per-partition layout is what makes replay idempotent (a
-    replayed batch overwrites exactly its own bits), but after hundreds
-    of triggers the per-trigger partition LISTING and the probe read's
-    footer count grow with batch count (``SCALE.md`` round-9 noted the
-    creep). Compaction restores O(1): one merged bit partition + one
-    sidecar carrying the sizing and the covered ids, so the coverage
-    and sizing guards keep working without per-partition metadata.
-
-    Safety: only partitions verified to be hashed under the CURRENT
-    ``(num_bits, num_hashes)`` are merged — merging foreign hash spaces
-    is the Bloom false-negative bug the sizing guard exists to stop;
-    mismatched partitions are left in place for the sink's rebuild
-    path. A batch replayed AFTER its bits were merged re-creates its
-    own partition; its stale bits remain inside the merged set, which
-    is only false-positive-direction (extra maybe-rows re-checked by
-    the corpus anti-join) — exact-parity is preserved.
-
-    Returns the number of per-batch partitions merged away.
-    """
-    from pyspark.sql import functions as F
-
-    bloom_path = f"{corpus_path}/_bloom"
-    parts = _batch_partition_ids(spark, bloom_path)
-    has_sentinel = _COMPACTED_BATCH_ID in parts
-    parts.discard(_COMPACTED_BATCH_ID)
-    prior = _read_json_sidecar(spark, f"{bloom_path}/_covered.json") or {}
-    prior_ok = (
-        prior.get("num_bits") == num_bits
-        and prior.get("num_hashes") == num_hashes
-    )
-    # the coverage claim in _covered.json is only meaningful while the
-    # sentinel partition that BACKS it exists: if the sentinel is lost
-    # (crash between the delete and rename in the swap below, or an
-    # external cleanup) the claimed-covered bits are gone, and trusting
-    # the sidecar here would write a NEW _covered.json whose sentinel
-    # holds only this call's mergeable bits — Bloom false negatives on
-    # the previously-covered partitions (round-11 ADVICE). The in-sink
-    # flow self-heals (rebuild precedes compaction); this guard makes
-    # the standalone path equally safe.
-    trusted_prior = prior_ok and has_sentinel
-    covered = set(prior.get("covered", [])) if trusted_prior else set()
-    mergeable = {
-        pid
-        for pid in parts
-        if _bloom_partition_sizing(spark, bloom_path, pid, fmt)
-        == (num_bits, num_hashes)
-    }
-    if not mergeable and trusted_prior:
-        return 0
-    sources = [f"{bloom_path}/batch_id={pid}" for pid in sorted(mergeable)]
-    if trusted_prior:
-        sources.append(f"{bloom_path}/batch_id={_COMPACTED_BATCH_ID}")
-    if not sources:
-        if prior and not has_sentinel:
-            # orphaned coverage claim with no sentinel behind it —
-            # remove it so no later call can be tempted to trust it
-            fs, _ = _fs(spark, bloom_path)
-            fs.delete(
-                spark._jvm.org.apache.hadoop.fs.Path(
-                    f"{bloom_path}/_covered.json"
-                ),
-                False,
-            )
-        return 0
-    merged = (
-        spark.read.format(fmt)
-        .load(sources)
-        .select("bit")
-        .distinct()
-        .withColumn("num_bits", F.lit(num_bits))
-        .withColumn("num_hashes", F.lit(num_hashes))
-    )
-    # stage the merge, then swap: the sentinel partition may be one of
-    # the inputs, so writing over it mid-read would corrupt the scan
-    staging = f"{bloom_path}/_compact_staging"
-    write_layer(merged, staging, mode="overwrite", fmt=fmt)
-    fs, _ = _fs(spark, bloom_path)
-    jvm = spark._jvm
-    dest = jvm.org.apache.hadoop.fs.Path(
-        f"{bloom_path}/batch_id={_COMPACTED_BATCH_ID}"
-    )
-    fs.delete(dest, True)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(staging), dest)
-    _write_json_sidecar(
-        spark,
-        f"{bloom_path}/batch_id={_COMPACTED_BATCH_ID}/_sizing.json",
-        {"num_bits": num_bits, "num_hashes": num_hashes},
-    )
-    _write_json_sidecar(
-        spark,
-        f"{bloom_path}/_covered.json",
-        {
-            "covered": sorted(covered | mergeable),
-            "num_bits": num_bits,
-            "num_hashes": num_hashes,
-        },
-    )
-    for pid in sorted(mergeable):
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{bloom_path}/batch_id={pid}"),
-            True,
-        )
-    return len(mergeable)
-
-
 def ingest_deduplicated(
     stream: DataFrame,
     *,
@@ -410,9 +198,6 @@ def ingest_deduplicated(
     shingle_n: int = 3,
     bands: int = 4,
     rows_per_band: int = 4,
-    num_bits: int = 1 << 20,
-    num_hashes: int = 4,
-    compact_after: int | None = None,
 ) -> StreamingQuery:
     """Continuously ingest documents, deduplicating each micro-batch
     against everything already accepted — the streaming twin of
@@ -420,27 +205,11 @@ def ingest_deduplicated(
 
     Per batch: batch-internal exact dedup first (deterministic
     keep-lowest-id — a batch can carry its own duplicates), then the
-    against-corpus probe (``method='exact'`` fingerprint anti-join,
-    ``'lsh'`` MinHash band-bucket probe for near-dups, or ``'bloom'``
-    — identical keep/drop to ``'exact'``, but a Bloom filter maintained
-    under ``{corpus_path}/_bloom`` routes definite-new rows past the
-    corpus anti-join entirely), and survivors append to the corpus as
-    their own ``batch_id=N`` partition. The ``_bloom`` side table is
-    invisible to corpus readers (Spark's file index skips
-    underscore-prefixed paths) and each batch writes only its own
-    survivors' bits — replay overwrites both partitions together.
-    Before trusting the filter, each trigger compares the corpus and
-    ``_bloom`` partition listings and backfills bits for any corpus
-    partition that lacks them (e.g. partitions ingested earlier via
-    ``method='exact'``) — a filter that misses corpus partitions would
-    produce Bloom false negatives against the real corpus and append
-    true duplicates, breaking the exact-parity contract. Each bit
-    partition also records the ``(num_bits, num_hashes)`` it was
-    hashed under (constant columns, RLE'd away by the format); a
-    partition whose recorded sizing differs from the current call's
-    (operator redeployed with new parameters) is rebuilt the same way
-    — merging bit sets from different hash spaces is the same
-    false-negative failure as a missing partition, just quieter.
+    against-corpus probe (``method='exact'`` fingerprint anti-join, or
+    ``'lsh'`` MinHash band-bucket probe for near-dups), and survivors
+    append to the corpus as their own ``batch_id=N`` partition. A
+    Bloom prefilter in front of the exact anti-join keeps the same rows
+    and measured slower (SCALE.md "Retired paths").
 
     Idempotence: a replayed batch (crash between write and checkpoint
     commit) overwrites its own partition, and the corpus read EXCLUDES
@@ -449,71 +218,23 @@ def ingest_deduplicated(
     the partition with nothing. Reading the parent path with
     ``basePath`` surfaces ``batch_id`` as an ordinary partition column,
     so the exclusion is partition pruning, not a scan-and-filter.
-
-    Sizing validation is sidecar-based and memoized: each bit
-    partition carries a ``_sizing.json`` (plus the stamped columns for
-    pre-sidecar compatibility); a trigger validates only partitions it
-    has not seen, with driver-side bytes reads — steady state does no
-    validation IO at all (the round-8 guard re-scanned the whole bit
-    table with ``mergeSchema`` every micro-batch). When
-    ``compact_after`` is set, a trigger that leaves at least that many
-    per-batch bit partitions OR-merges them into one sentinel
-    partition via ``compact_bloom_partitions`` — the per-trigger
-    partition listing and probe-read footer count stay O(1) over
-    unbounded batch counts instead of growing with ingest history.
     """
     from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
-    from news_data_pipeline_spark.functions.text import fingerprint
     from news_data_pipeline_spark.operators.dedup import (
-        bloom_dedup_against_corpus,
         exact_dedup_against_corpus,
         fingerprint_dedup,
         lsh_dedup_against_corpus,
     )
-    from news_data_pipeline_spark.operators.sketches import bloom_bits
 
-    if method not in ("exact", "lsh", "bloom"):
-        raise ValueError(
-            f"method must be 'exact', 'lsh' or 'bloom', got {method!r}"
-        )
+    if method not in ("exact", "lsh"):
+        raise ValueError(f"method must be 'exact' or 'lsh', got {method!r}")
     if "batch_id" in stream.columns:
         raise ValueError(
             "ingest_deduplicated reserves 'batch_id' for the corpus "
             "partition column; rename it first"
         )
-    bloom_path = f"{corpus_path}/_bloom"
-
-    def _stamped_bits(fp_frame: DataFrame) -> DataFrame:
-        # bit partitions carry their sizing so a later trigger can
-        # detect (and rebuild) partitions hashed under other parameters
-        return (
-            bloom_bits(
-                fp_frame, "__fp", num_bits=num_bits, num_hashes=num_hashes
-            )
-            .withColumn("num_bits", F.lit(num_bits))
-            .withColumn("num_hashes", F.lit(num_hashes))
-        )
-
-    def _write_bits(spark, fp_frame: DataFrame, part_id: int) -> None:
-        part_path = f"{bloom_path}/batch_id={part_id}"
-        write_layer(
-            _stamped_bits(fp_frame), part_path, mode="overwrite", fmt=fmt
-        )
-        # sizing sidecar: lets later triggers validate this partition
-        # with a driver-side bytes read instead of a parquet scan
-        _write_json_sidecar(
-            spark,
-            f"{part_path}/_sizing.json",
-            {"num_bits": num_bits, "num_hashes": num_hashes},
-        )
-
-    # bloom partitions whose sizing has been confirmed at the current
-    # (num_bits, num_hashes) — validation is memoized across triggers so
-    # steady state does zero per-partition IO (the round-8 guard read
-    # the WHOLE bit table with mergeSchema every micro-batch)
-    validated: set[int] = set()
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         if not batch.head(1):
@@ -539,110 +260,6 @@ def ingest_deduplicated(
                 deduped = exact_dedup_against_corpus(
                     deduped, corpus, text_col
                 )
-            elif method == "bloom":
-                # The filter is only trustworthy if it covers EVERY
-                # corpus partition: a corpus written (partly) by
-                # method='exact'/'lsh' has partitions with no bits, and
-                # probing a filter that misses them yields Bloom false
-                # negatives against the real corpus — appending true
-                # duplicates. Compare partition listings each trigger
-                # (O(#batches) driver-side) and backfill any corpus
-                # partition that lacks bits before probing.
-                corpus_parts = _batch_partition_ids(spark, corpus_path)
-                bloom_parts = _batch_partition_ids(spark, bloom_path)
-                corpus_parts.discard(batch_id)
-                bloom_parts.discard(batch_id)
-                # Coverage alone isn't enough: a partition written
-                # under DIFFERENT (num_bits, num_hashes) — operator
-                # redeployed with new sizing — would merge a foreign
-                # hash space into the bit set and produce Bloom false
-                # negatives just like a missing partition. Each
-                # unvalidated partition's sizing is read from its
-                # ``_sizing.json`` sidecar (driver-side bytes, no
-                # scan; pre-sidecar partitions fall back to one
-                # single-partition read of their stamped columns) and
-                # the verdict is memoized, so steady state re-checks
-                # nothing. Mismatched or pre-stamping partitions are
-                # rebuilt alongside the missing ones.
-                stale: set[int] = set()
-                for pid in sorted(bloom_parts - validated):
-                    if _bloom_partition_sizing(
-                        spark, bloom_path, pid, fmt
-                    ) == (num_bits, num_hashes):
-                        validated.add(pid)
-                    else:
-                        stale.add(pid)
-                # the compacted sentinel partition covers the corpus
-                # partitions listed in the root ``_covered.json``
-                covered_ids: set[int] = set()
-                if _COMPACTED_BATCH_ID in bloom_parts:
-                    if _COMPACTED_BATCH_ID in stale:
-                        # a sentinel hashed under foreign sizing would
-                        # merge a foreign hash space into EVERY probe
-                        # read: drop it; its covered partitions rebuild
-                        # below like any other missing partition
-                        fs, _ = _fs(spark, bloom_path)
-                        jvm = spark._jvm
-                        fs.delete(
-                            jvm.org.apache.hadoop.fs.Path(
-                                f"{bloom_path}/batch_id="
-                                f"{_COMPACTED_BATCH_ID}"
-                            ),
-                            True,
-                        )
-                        fs.delete(
-                            jvm.org.apache.hadoop.fs.Path(
-                                f"{bloom_path}/_covered.json"
-                            ),
-                            False,
-                        )
-                        stale.discard(_COMPACTED_BATCH_ID)
-                        bloom_parts.discard(_COMPACTED_BATCH_ID)
-                    else:
-                        meta = (
-                            _read_json_sidecar(
-                                spark, f"{bloom_path}/_covered.json"
-                            )
-                            or {}
-                        )
-                        if (
-                            meta.get("num_bits") == num_bits
-                            and meta.get("num_hashes") == num_hashes
-                        ):
-                            covered_ids = set(meta.get("covered", []))
-                ok_parts = (bloom_parts - stale) - {_COMPACTED_BATCH_ID}
-                for missing in sorted(
-                    corpus_parts - (ok_parts | covered_ids)
-                ):
-                    part_fp = (
-                        spark.read.format(fmt)
-                        .load(f"{corpus_path}/batch_id={missing}")
-                        .select(fingerprint(F.col(text_col)).alias("__fp"))
-                    )
-                    _write_bits(spark, part_fp, missing)
-                    validated.add(missing)
-                try:
-                    bits = (
-                        spark.read.option("basePath", bloom_path)
-                        .format(fmt)
-                        .load(bloom_path)
-                        .where(F.col("batch_id") != batch_id)
-                        .select("bit")
-                        .distinct()
-                    )
-                    bits.schema
-                except AnalysisException:
-                    # corpus predates the filter entirely and had no
-                    # partitions to backfill: build bits inline
-                    bits = None
-                deduped = bloom_dedup_against_corpus(
-                    deduped,
-                    corpus,
-                    text_col,
-                    num_bits=num_bits,
-                    num_hashes=num_hashes,
-                    corpus_bits=bits,
-                )
             else:
                 deduped = lsh_dedup_against_corpus(
                     deduped,
@@ -653,36 +270,12 @@ def ingest_deduplicated(
                     bands=bands,
                     rows_per_band=rows_per_band,
                 )
-        # bloom survivors feed two writes (corpus + filter bits):
-        # compute the dedup lineage once per batch
-        with (
-            _batch_cache(deduped.persist())
-            if method == "bloom"
-            else contextlib.nullcontext()
-        ):
-            write_layer(
-                deduped,
-                f"{corpus_path}/batch_id={batch_id}",
-                mode="overwrite",
-                fmt=fmt,
-            )
-            if method == "bloom":
-                surv_fp = deduped.select(
-                    fingerprint(F.col(text_col)).alias("__fp")
-                )
-                _write_bits(spark, surv_fp, batch_id)
-                validated.add(batch_id)
-        if method == "bloom" and compact_after is not None:
-            live = _batch_partition_ids(spark, bloom_path)
-            live.discard(_COMPACTED_BATCH_ID)
-            if len(live) >= compact_after:
-                compact_bloom_partitions(
-                    spark,
-                    corpus_path,
-                    num_bits=num_bits,
-                    num_hashes=num_hashes,
-                    fmt=fmt,
-                )
+        write_layer(
+            deduped,
+            f"{corpus_path}/batch_id={batch_id}",
+            mode="overwrite",
+            fmt=fmt,
+        )
 
     writer = stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint
@@ -928,10 +521,9 @@ def maintain_bloom_filter(
     available_now: bool = False,
 ) -> StreamingQuery:
     """Maintain a Bloom membership filter over a stream — the
-    set-membership twin of ``maintain_cms_sketch``, and the live half
-    of the incremental-dedup contract: new batches probe the merged
-    filter (``operators.sketches.bloom_probe``) and only
-    ``maybe_member`` rows pay the exact anti-join against history.
+    set-membership twin of ``maintain_cms_sketch``. Probe the merged
+    filter with ``operators.sketches.bloom_probe``; it is not a dedup
+    access path (SCALE.md "Retired paths").
 
     Each batch writes ITS OWN bit set to a ``batch_id=N`` partition
     (at most ``num_bits`` rows regardless of batch size); a replayed

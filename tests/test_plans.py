@@ -246,7 +246,6 @@ def test_new_library_ops_plan_contracts(spark):
 
     from news_data_pipeline_spark.functions.columns import union_evolved
     from news_data_pipeline_spark.operators.dedup import (
-        bloom_dedup_against_corpus,
         dup_ngram_char_coverage,
         top_ngram_char_fraction,
     )
@@ -266,13 +265,6 @@ def test_new_library_ops_plan_contracts(spark):
     frames = {
         "bloom_probe": bloom_probe(
             fps, "fp", bits, num_bits=256, num_hashes=3
-        ),
-        "bloom_dedup_against_corpus": bloom_dedup_against_corpus(
-            docs.where(F.col("doc_id") % 4 != 0),
-            docs.where(F.col("doc_id") % 4 == 0),
-            "text",
-            num_bits=256,
-            num_hashes=3,
         ),
         "perplexity_buckets": perplexity_buckets(
             docs, "doc_id", "text", "lang"

@@ -246,33 +246,3 @@ def test_bloom_probe_oracle_draft(spark):
         FROM pr
         """,
     )
-
-
-def test_bloom_dedup_incremental_oracle_draft(spark):
-    """The bloom-prefiltered incremental dedup query (r8 candidate
-    `bloom_dedup_incremental`): same split and same oracle as the
-    registered `dedup_incremental_exact` — the filter is an access
-    path, never a verdict change, so the SQL lifts verbatim."""
-    from news_data_pipeline_spark.operators import dedup
-
-    docs = _docs(spark)
-    corpus = docs.where(F.col("doc_id") % 4 == 0)
-    batch = docs.where(F.col("doc_id") % 4 != 0)
-    out = dedup.bloom_dedup_against_corpus(
-        batch, corpus, "text", num_bits=512, num_hashes=3
-    ).select("doc_id", "source", "lang")
-    _assert_match(
-        out,
-        """
-        WITH fp AS (
-            SELECT doc_id, source, lang,
-                   md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))
-                       AS f
-            FROM documents),
-        corpus AS (SELECT f FROM fp WHERE doc_id % 4 = 0)
-        SELECT b.doc_id, b.source, b.lang
-        FROM fp b
-        WHERE b.doc_id % 4 <> 0
-          AND NOT EXISTS (SELECT 1 FROM corpus c WHERE c.f = b.f)
-        """,
-    )

@@ -511,6 +511,62 @@ def test_ingest_deduplicated_validates(spark, tmp_path):
         )
 
 
+@pytest.mark.parametrize("method", ["exact", "lsh"])
+def test_ingest_deduplicated_replay_is_idempotent(spark, tmp_path, method):
+    """A batch replayed after a crash between its corpus write and its
+    checkpoint commit leaves the corpus as it was: the replay overwrites
+    its own ``batch_id`` partition and its corpus read excludes that
+    partition, so it cannot flag its own earlier output as duplicates."""
+    import os
+
+    landing = tmp_path / "docs_in"
+    os.makedirs(landing)
+    schema = "doc_id long, text string"
+    fox = "the quick brown fox jumps over the lazy dog"
+    spark.createDataFrame(
+        [(1, fox), (2, "a completely separate note about sailing ships")],
+        schema,
+    ).coalesce(1).write.mode("overwrite").parquet(str(landing / "f1"))
+    spark.createDataFrame(
+        [(10, fox), (11, "zebra xylophone quartz words never seen before")],
+        schema,
+    ).coalesce(1).write.mode("overwrite").parquet(str(landing / "f2"))
+    corpus_path = str(tmp_path / "corpus")
+    ckpt = tmp_path / "ckpt"
+
+    def ingest():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(landing / "*"))
+        )
+        stx.ingest_deduplicated(
+            stream,
+            id_col="doc_id",
+            text_col="text",
+            corpus_path=corpus_path,
+            checkpoint=str(ckpt),
+            method=method,
+            available_now=True,
+        ).awaitTermination()
+        return sorted(
+            (r["doc_id"], r["batch_id"])
+            for r in spark.read.parquet(corpus_path).collect()
+        )
+
+    first = ingest()
+    assert first == [(1, 0), (2, 0), (11, 1)]
+    # drop the newest commit: the restarted query re-runs batch 1
+    newest = max(
+        int(n) for n in os.listdir(ckpt / "commits") if n.isdigit()
+    )
+    assert newest == 1
+    os.remove(ckpt / "commits" / str(newest))
+    os.remove(ckpt / "commits" / f".{newest}.crc")
+    assert ingest() == first
+    assert (ckpt / "commits" / str(newest)).exists()
+
+
 def test_user_event_islands_model(spark):
     """Gaps-and-islands vs a driver-side model over sf0.001 events."""
     import pandas as pd
@@ -864,648 +920,3 @@ def test_stream_static_dim_enrichment_matches_batch(spark, landing):
     )
     # user 11 rows present and unenriched
     assert (3, None) in got and (5, None) in got
-
-
-def test_ingest_deduplicated_bloom_matches_exact(spark, tmp_path):
-    """method='bloom' accepts EXACTLY the documents method='exact'
-    accepts (no false negatives -> same anti-join verdicts), maintains
-    its filter under _bloom without polluting the corpus read, and the
-    filter equals the bits of the accepted survivors."""
-    import os
-
-    landing = tmp_path / "docs_in"
-    os.makedirs(landing)
-    schema = "doc_id long, text string"
-    spark.createDataFrame(
-        [(1, "alpha document"), (2, "beta document"), (3, "Alpha DOCUMENT")],
-        schema,
-    ).coalesce(1).write.mode("overwrite").parquet(str(landing / "f1"))
-    spark.createDataFrame(
-        [(10, "alpha document"), (11, "gamma document")], schema
-    ).coalesce(1).write.mode("overwrite").parquet(str(landing / "f2"))
-
-    def run(method, out):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(landing / "*"))
-        )
-        q = stx.ingest_deduplicated(
-            stream,
-            id_col="doc_id",
-            text_col="text",
-            corpus_path=str(tmp_path / out),
-            checkpoint=str(tmp_path / f"ckpt_{out}"),
-            method=method,
-            num_bits=64,  # tiny: force false positives through the
-            num_hashes=3,  # maybe-path resolution join
-            available_now=True,
-        )
-        q.awaitTermination()
-        return spark.read.parquet(str(tmp_path / out))
-
-    exact = run("exact", "corpus_exact")
-    bloom = run("bloom", "corpus_bloom")
-    assert sorted(
-        map(tuple, exact.select("doc_id", "text").collect())
-    ) == sorted(map(tuple, bloom.select("doc_id", "text").collect()))
-    # the _bloom side table exists but is invisible to the corpus read
-    assert os.path.isdir(tmp_path / "corpus_bloom" / "_bloom")
-    assert "bit" not in bloom.columns
-    # the maintained filter == bits of the accepted survivors' prints
-    import pyspark.sql.functions as F
-
-    from news_data_pipeline_spark.functions.text import fingerprint
-    from news_data_pipeline_spark.operators.sketches import bloom_bits
-
-    streamed = (
-        spark.read.option(
-            "basePath", str(tmp_path / "corpus_bloom" / "_bloom")
-        )
-        .parquet(str(tmp_path / "corpus_bloom" / "_bloom"))
-        .select("bit")
-        .distinct()
-    )
-    want = bloom_bits(
-        bloom.select(fingerprint(F.col("text")).alias("__fp")),
-        "__fp", num_bits=64, num_hashes=3,
-    )
-    assert sorted(r.bit for r in streamed.collect()) == sorted(
-        r.bit for r in want.collect()
-    )
-
-
-def test_ingest_deduplicated_bloom_covers_exact_era_partitions(
-    spark, tmp_path
-):
-    """Switching an existing corpus from method='exact' to 'bloom' must
-    not trust a filter that lacks bits for the exact-era partitions.
-    Regression: after the FIRST bloom batch the ``_bloom`` path exists,
-    so a later bloom batch would read an incomplete filter, get a
-    false negative for a fingerprint that lives only in an exact-era
-    partition, and append a true duplicate. The fix backfills bits for
-    every corpus partition the filter is missing before probing."""
-    import os
-
-    landing = tmp_path / "docs_in"
-    os.makedirs(landing)
-    schema = "doc_id long, text string"
-    corpus_path = str(tmp_path / "corpus")
-
-    def run(method):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(landing / "*"))
-        )
-        q = stx.ingest_deduplicated(
-            stream,
-            id_col="doc_id",
-            text_col="text",
-            corpus_path=corpus_path,
-            checkpoint=str(tmp_path / "ckpt"),
-            method=method,
-            num_bits=64,
-            num_hashes=3,
-            available_now=True,
-        )
-        q.awaitTermination()
-
-    def write(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(landing / name))
-
-    # exact-era corpus: two partitions, no _bloom side table
-    write("f1", [(1, "alpha document"), (2, "beta document")])
-    write("f2", [(3, "gamma document")])
-    run("exact")
-    assert not os.path.isdir(tmp_path / "corpus" / "_bloom")
-
-    # first bloom batch creates the filter — it must backfill bits for
-    # exact-era partitions 0 and 1, not just write its own
-    write("f3", [(4, "delta document")])
-    run("bloom")
-    bloom_dir = tmp_path / "corpus" / "_bloom"
-    assert sorted(
-        d for d in os.listdir(bloom_dir) if d.startswith("batch_id=")
-    ) == ["batch_id=0", "batch_id=1", "batch_id=2"]
-
-    # second bloom batch carries a duplicate of an EXACT-era document:
-    # with an incomplete filter this was a Bloom false negative and the
-    # duplicate was appended
-    write("f4", [(5, "alpha document"), (6, "epsilon document")])
-    run("bloom")
-    got = sorted(
-        map(tuple, spark.read.parquet(corpus_path)
-            .select("doc_id", "text").collect())
-    )
-    assert got == [
-        (1, "alpha document"),
-        (2, "beta document"),
-        (3, "gamma document"),
-        (4, "delta document"),
-        (6, "epsilon document"),
-    ]
-
-
-def test_ingest_deduplicated_bloom_rebuilds_resized_partitions(
-    spark, tmp_path
-):
-    """Redeploying the bloom sink with new (num_bits, num_hashes) must
-    not merge bit partitions hashed under the OLD sizing into the
-    probe set (ADVICE r8): mixing hash spaces produces Bloom false
-    negatives against the real corpus — the true-duplicate-append
-    failure the coverage backfill exists to prevent. Each partition
-    records its sizing; any partition recorded under other parameters
-    (or predating the stamping entirely) is rebuilt before probing."""
-    import os
-
-    landing = tmp_path / "docs_in"
-    os.makedirs(landing)
-    schema = "doc_id long, text string"
-    corpus_path = str(tmp_path / "corpus")
-    bloom_dir = tmp_path / "corpus" / "_bloom"
-
-    def run(num_bits, num_hashes):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(landing / "*"))
-        )
-        q = stx.ingest_deduplicated(
-            stream,
-            id_col="doc_id",
-            text_col="text",
-            corpus_path=corpus_path,
-            checkpoint=str(tmp_path / "ckpt"),
-            method="bloom",
-            num_bits=num_bits,
-            num_hashes=num_hashes,
-            available_now=True,
-        )
-        q.awaitTermination()
-
-    def write(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(landing / name))
-
-    def recorded_params():
-        meta = (
-            spark.read.option("basePath", str(bloom_dir))
-            .option("mergeSchema", "true")
-            .parquet(str(bloom_dir))
-        )
-        return {
-            (r.batch_id, r.num_bits, r.num_hashes)
-            for r in meta.select(
-                "batch_id", "num_bits", "num_hashes"
-            ).distinct().collect()
-        }
-
-    write("f1", [(1, "alpha document"), (2, "beta document")])
-    run(num_bits=64, num_hashes=3)
-    assert recorded_params() == {(0, 64, 3)}
-
-    # redeploy with different sizing; the batch carries a duplicate of
-    # an old-era document — probing a merged 64-bit/128-bit space was
-    # a false negative appending it as new
-    write("f2", [(3, "alpha document"), (4, "gamma document")])
-    run(num_bits=128, num_hashes=2)
-    got = sorted(
-        map(tuple, spark.read.parquet(corpus_path)
-            .select("doc_id", "text").collect())
-    )
-    assert got == [
-        (1, "alpha document"),
-        (2, "beta document"),
-        (4, "gamma document"),
-    ]
-    # partition 0 was rebuilt under the new sizing alongside the new
-    # partition — one uniform hash space
-    assert recorded_params() == {(0, 128, 2), (1, 128, 2)}
-
-    # a partition that predates the stamping entirely (no sizing
-    # columns at all) is treated as mismatched and rebuilt too
-    legacy = (
-        spark.read.parquet(str(bloom_dir / "batch_id=0"))
-        .select("bit")
-        .collect()
-    )
-    spark.createDataFrame(legacy, "bit bigint").write.mode(
-        "overwrite"
-    ).parquet(str(bloom_dir / "batch_id=0"))
-    write("f3", [(5, "beta document"), (6, "delta document")])
-    run(num_bits=128, num_hashes=2)
-    got = sorted(
-        map(tuple, spark.read.parquet(corpus_path)
-            .select("doc_id", "text").collect())
-    )
-    assert got == [
-        (1, "alpha document"),
-        (2, "beta document"),
-        (4, "gamma document"),
-        (6, "delta document"),
-    ]
-    assert recorded_params() == {
-        (0, 128, 2), (1, 128, 2), (2, 128, 2)
-    }
-
-
-def test_ingest_deduplicated_bloom_compaction(spark, tmp_path):
-    """``compact_after`` OR-merges per-batch bit partitions into the
-    sentinel ``batch_id=-1`` partition with a ``_covered.json`` root
-    sidecar — the per-trigger partition listing stays O(1) over
-    unbounded ingest history — while keep/drop decisions remain exactly
-    the keep/drop of ``method='exact'`` (duplicates of compacted-era
-    documents must still be caught through the merged bits)."""
-    import os
-
-    landing = tmp_path / "docs_in"
-    os.makedirs(landing)
-    schema = "doc_id long, text string"
-    corpus_path = str(tmp_path / "corpus")
-    bloom_dir = tmp_path / "corpus" / "_bloom"
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(landing / "*"))
-        )
-        q = stx.ingest_deduplicated(
-            stream,
-            id_col="doc_id",
-            text_col="text",
-            corpus_path=corpus_path,
-            checkpoint=str(tmp_path / "ckpt"),
-            method="bloom",
-            num_bits=64,
-            num_hashes=3,
-            available_now=True,
-            compact_after=2,
-        )
-        q.awaitTermination()
-
-    def write(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(landing / name))
-
-    def bloom_partitions():
-        return sorted(
-            d for d in os.listdir(bloom_dir) if d.startswith("batch_id=")
-        )
-
-    write("f1", [(1, "alpha document"), (2, "beta document")])
-    write("f2", [(3, "gamma document")])
-    write("f3", [(4, "delta document")])
-    run()
-    # three triggers, threshold 2: batches 0-1 compacted when trigger 1
-    # hit the threshold; batch 2's own partition waits for the next one
-    assert bloom_partitions() == ["batch_id=-1", "batch_id=2"]
-    from news_data_pipeline_spark.streaming.sinks import (
-        _read_json_sidecar,
-    )
-
-    meta = _read_json_sidecar(spark, f"{bloom_dir}/_covered.json")
-    assert meta == {"covered": [0, 1], "num_bits": 64, "num_hashes": 3}
-
-    # duplicates of compacted-era docs are caught through merged bits;
-    # the new batch's own partition appears, then compacts again
-    write("f4", [(5, "alpha document"), (6, "epsilon document")])
-    write("f5", [(7, "gamma document"), (8, "zeta document")])
-    run()
-    got = sorted(
-        map(tuple, spark.read.parquet(corpus_path)
-            .select("doc_id", "text").collect())
-    )
-    assert got == [
-        (1, "alpha document"),
-        (2, "beta document"),
-        (3, "gamma document"),
-        (4, "delta document"),
-        (6, "epsilon document"),
-        (8, "zeta document"),
-    ]
-    assert bloom_partitions() == ["batch_id=-1", "batch_id=4"]
-    meta = _read_json_sidecar(spark, f"{bloom_dir}/_covered.json")
-    assert meta["covered"] == [0, 1, 2, 3]
-    # merged bits == bits of ALL accepted survivors' fingerprints
-    from news_data_pipeline_spark.functions.text import fingerprint
-    from news_data_pipeline_spark.operators.sketches import bloom_bits
-
-    streamed = (
-        spark.read.option("basePath", str(bloom_dir))
-        .parquet(str(bloom_dir))
-        .select("bit")
-        .distinct()
-    )
-    want = bloom_bits(
-        spark.read.parquet(corpus_path).select(
-            fingerprint(F.col("text")).alias("__fp")
-        ),
-        "__fp",
-        num_bits=64,
-        num_hashes=3,
-    )
-    assert sorted(r.bit for r in streamed.collect()) == sorted(
-        r.bit for r in want.collect()
-    )
-
-
-def test_bloom_compaction_resize_rebuilds_covered_partitions(
-    spark, tmp_path
-):
-    """Redeploying with new (num_bits, num_hashes) AFTER compaction:
-    the sentinel partition was hashed under the old sizing, so its
-    bits must be dropped — not merged into the new hash space — and
-    every corpus partition it covered rebuilt under the new sizing.
-    A duplicate of a compacted-era document must still be caught."""
-    import os
-
-    landing = tmp_path / "docs_in"
-    os.makedirs(landing)
-    schema = "doc_id long, text string"
-    corpus_path = str(tmp_path / "corpus")
-    bloom_dir = tmp_path / "corpus" / "_bloom"
-
-    def run(num_bits, num_hashes, compact_after=2):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(landing / "*"))
-        )
-        q = stx.ingest_deduplicated(
-            stream,
-            id_col="doc_id",
-            text_col="text",
-            corpus_path=corpus_path,
-            checkpoint=str(tmp_path / "ckpt"),
-            method="bloom",
-            num_bits=num_bits,
-            num_hashes=num_hashes,
-            available_now=True,
-            compact_after=compact_after,
-        )
-        q.awaitTermination()
-
-    def write(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(landing / name))
-
-    write("f1", [(1, "alpha document"), (2, "beta document")])
-    write("f2", [(3, "gamma document")])
-    run(num_bits=64, num_hashes=3)
-    assert sorted(
-        d for d in os.listdir(bloom_dir) if d.startswith("batch_id=")
-    ) == ["batch_id=-1"]
-
-    # redeploy at 128/2 WITHOUT compaction so the rebuild is visible:
-    # the stale sentinel is deleted, covered partitions 0..1 rebuilt
-    # per-batch, and the alpha duplicate is caught (a merged
-    # 64-bit/128-bit probe space was the false-negative bug)
-    write("f3", [(4, "alpha document"), (5, "delta document")])
-    run(num_bits=128, num_hashes=2, compact_after=None)
-    got = sorted(
-        map(tuple, spark.read.parquet(corpus_path)
-            .select("doc_id", "text").collect())
-    )
-    assert got == [
-        (1, "alpha document"),
-        (2, "beta document"),
-        (3, "gamma document"),
-        (5, "delta document"),
-    ]
-    parts = sorted(
-        d for d in os.listdir(bloom_dir) if d.startswith("batch_id=")
-    )
-    assert parts == ["batch_id=0", "batch_id=1", "batch_id=2"]
-    assert not os.path.exists(bloom_dir / "_covered.json")
-    meta = (
-        spark.read.option("basePath", str(bloom_dir))
-        .parquet(str(bloom_dir))
-    )
-    assert {
-        (r.batch_id, r.num_bits, r.num_hashes)
-        for r in meta.select("batch_id", "num_bits", "num_hashes")
-        .distinct()
-        .collect()
-    } == {(0, 128, 2), (1, 128, 2), (2, 128, 2)}
-
-
-def test_compact_bloom_partitions_standalone(spark, tmp_path):
-    """``compact_bloom_partitions`` as an ad-hoc maintenance call:
-    merges only partitions verified at the CURRENT sizing, leaves
-    mismatched ones for the sink's rebuild path, and is a no-op when
-    there is nothing new to merge."""
-    import os
-
-    landing = tmp_path / "docs_in"
-    os.makedirs(landing)
-    schema = "doc_id long, text string"
-    corpus_path = str(tmp_path / "corpus")
-    bloom_dir = tmp_path / "corpus" / "_bloom"
-
-    def write(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(landing / name))
-
-    write("f1", [(1, "alpha document")])
-    write("f2", [(2, "beta document")])
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(landing / "*"))
-    )
-    q = stx.ingest_deduplicated(
-        stream,
-        id_col="doc_id",
-        text_col="text",
-        corpus_path=corpus_path,
-        checkpoint=str(tmp_path / "ckpt"),
-        method="bloom",
-        num_bits=64,
-        num_hashes=3,
-        available_now=True,
-    )
-    q.awaitTermination()
-    # fake one partition written under a foreign sizing (collect, then
-    # overwrite — a lazy read of the path being overwritten would race)
-    bits = (
-        spark.read.parquet(str(bloom_dir / "batch_id=1"))
-        .select("bit")
-        .collect()
-    )
-    (
-        spark.createDataFrame(bits, "bit bigint")
-        .withColumn("num_bits", F.lit(32))
-        .withColumn("num_hashes", F.lit(2))
-        .write.mode("overwrite")
-        .parquet(str(bloom_dir / "batch_id=1"))
-    )
-
-    merged = stx.compact_bloom_partitions(
-        spark, corpus_path, num_bits=64, num_hashes=3
-    )
-    assert merged == 1  # only the current-sizing partition
-    parts = sorted(
-        d for d in os.listdir(bloom_dir) if d.startswith("batch_id=")
-    )
-    assert parts == ["batch_id=-1", "batch_id=1"]
-    from news_data_pipeline_spark.streaming.sinks import (
-        _read_json_sidecar,
-    )
-
-    meta = _read_json_sidecar(spark, f"{bloom_dir}/_covered.json")
-    assert meta["covered"] == [0]
-    # idempotent: nothing new to merge
-    assert (
-        stx.compact_bloom_partitions(
-            spark, corpus_path, num_bits=64, num_hashes=3
-        )
-        == 0
-    )
-
-
-def test_compact_bloom_lost_sentinel_invalidates_coverage(spark, tmp_path):
-    """Round-11 ADVICE regression: if the ``batch_id=-1`` sentinel is
-    lost (crash between the delete and rename of the compaction swap,
-    or external cleanup) while ``_covered.json`` survives, a standalone
-    ``compact_bloom_partitions`` call must NOT re-assert the orphaned
-    coverage claim — doing so would write a new sidecar claiming
-    covered|mergeable while the new sentinel holds only mergeable's
-    bits, i.e. Bloom false negatives on the previously-covered
-    partitions and true duplicates appended by later batches."""
-    import os
-    import shutil
-
-    landing = tmp_path / "docs_in"
-    os.makedirs(landing)
-    schema = "doc_id long, text string"
-    corpus_path = str(tmp_path / "corpus")
-    bloom_dir = tmp_path / "corpus" / "_bloom"
-
-    def write(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(landing / name))
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(landing / "*"))
-        )
-        q = stx.ingest_deduplicated(
-            stream,
-            id_col="doc_id",
-            text_col="text",
-            corpus_path=corpus_path,
-            checkpoint=str(tmp_path / "ckpt"),
-            method="bloom",
-            num_bits=64,
-            num_hashes=3,
-            available_now=True,
-        )
-        q.awaitTermination()
-
-    write("f1", [(1, "alpha document")])
-    write("f2", [(2, "beta document")])
-    run()
-    assert (
-        stx.compact_bloom_partitions(
-            spark, corpus_path, num_bits=64, num_hashes=3
-        )
-        == 2
-    )
-    # a third batch lands after compaction
-    write("f3", [(3, "gamma document")])
-    run()
-    # simulate the crash: sentinel partition lost, sidecar survives
-    shutil.rmtree(bloom_dir / "batch_id=-1")
-    assert os.path.exists(bloom_dir / "_covered.json")
-
-    merged = stx.compact_bloom_partitions(
-        spark, corpus_path, num_bits=64, num_hashes=3
-    )
-    assert merged == 1  # only the post-compaction batch partition
-    from news_data_pipeline_spark.streaming.sinks import (
-        _read_json_sidecar,
-    )
-
-    meta = _read_json_sidecar(spark, f"{bloom_dir}/_covered.json")
-    # pre-fix this read [0, 1, 2]: a false claim — the new sentinel
-    # only holds batch 2's bits
-    assert meta["covered"] == [2]
-    # exact-parity end-to-end: partitions 0/1 are now plain missing,
-    # so the next batch rebuilds them and a replayed duplicate of
-    # doc 1 is still rejected
-    write("f4", [(1, "alpha document"), (4, "delta document")])
-    run()
-    got = sorted(
-        map(
-            tuple,
-            spark.read.parquet(corpus_path)
-            .select("doc_id", "text")
-            .collect(),
-        )
-    )
-    assert got == [
-        (1, "alpha document"),
-        (2, "beta document"),
-        (3, "gamma document"),
-        (4, "delta document"),
-    ]
-
-
-def test_compact_bloom_orphan_sidecar_removed(spark, tmp_path):
-    """Companion to the lost-sentinel regression: when there is
-    nothing mergeable either, the orphaned ``_covered.json`` must be
-    deleted (not silently left claiming coverage with no bits)."""
-    import os
-    import shutil
-
-    landing = tmp_path / "docs_in"
-    os.makedirs(landing)
-    schema = "doc_id long, text string"
-    corpus_path = str(tmp_path / "corpus")
-    bloom_dir = tmp_path / "corpus" / "_bloom"
-
-    spark.createDataFrame(
-        [(1, "alpha document")], schema
-    ).coalesce(1).write.parquet(str(landing / "f1"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(landing / "*"))
-    )
-    q = stx.ingest_deduplicated(
-        stream,
-        id_col="doc_id",
-        text_col="text",
-        corpus_path=corpus_path,
-        checkpoint=str(tmp_path / "ckpt"),
-        method="bloom",
-        num_bits=64,
-        num_hashes=3,
-        available_now=True,
-    )
-    q.awaitTermination()
-    assert (
-        stx.compact_bloom_partitions(
-            spark, corpus_path, num_bits=64, num_hashes=3
-        )
-        == 1
-    )
-    shutil.rmtree(bloom_dir / "batch_id=-1")
-    assert (
-        stx.compact_bloom_partitions(
-            spark, corpus_path, num_bits=64, num_hashes=3
-        )
-        == 0
-    )
-    assert not os.path.exists(bloom_dir / "_covered.json")
