@@ -13,4 +13,6 @@ rules. Python UDFs only where Catalyst genuinely can't express the
 semantics, and then always Arrow-vectorized.
 """
 
+# No pyspark import here: the Python worker daemon (_daemon.py) imports
+# this package before it removes Spark's archives from sys.path.
 __version__ = "0.1.0"

@@ -68,19 +68,16 @@ def tf_idf_top_terms(
     )
 
 
-def doclen_expr(text):
-    """Row-local document length: the count of non-empty tokens under
-    the SAME split-on-whitespace rule as ``word_shingles`` (the shared
-    tokenizer) — ``dl == sum of tf`` by definition. Factored out of
-    ``bm25_rank`` so the parity with the shared tokenizer is pinned at
-    the operator boundary (``tests/test_terms.py``); any tokenizer
-    change must keep this expression in sync or the test trips."""
-    return F.size(
-        F.filter(
-            F.split(F.trim(text), r"\s+"),
-            lambda w: F.length(w) > 0,
-        )
-    ).cast("long")
+def doc_tokens(text):
+    """Row-local token array: the non-empty tokens under the SAME
+    split-on-whitespace rule as ``word_shingles`` (the shared
+    tokenizer). Empty and whitespace-only texts give an empty array,
+    NULL text gives NULL. ``bm25_rank``'s ``dl`` is its size, so ``dl
+    == sum of tf`` (pinned against ``word_shingles`` in
+    ``tests/test_terms.py``). ``array_remove`` rather than a ``filter``
+    lambda: higher-order functions are interpreted per element, while
+    ``array_remove`` is compiled with the rest of the projection."""
+    return F.array_remove(F.split(F.trim(text), r"\s+"), "")
 
 
 def bm25_rank(
@@ -99,51 +96,67 @@ def bm25_rank(
         IDF(t) * tf * (k1+1) / (tf + k1 * (1 - b + b * dl/avgdl))
     with the Lucene-style smoothed IDF(t) = ln((N - df + 0.5)/(df + 0.5) + 1)
     (always positive, so a term in >half the corpus dampens instead of
-    flipping sign).
+    flipping sign). A document is a row with at least one token; ids
+    are unique (as for ``word_shingles(distinct=True)``). Duplicated
+    query terms count once.
 
-    Shape at scale: term frequencies and document lengths both key by
-    doc id (one shuffle each, map-side combined); the per-term document
-    frequencies and the (avgdl, N) corpus aggregate are tiny and ride
-    in as broadcasts — the query-term posting lists are the only rows
-    scored, so cost tracks matching docs, not the corpus. Scores round
-    to 4dp BEFORE ranking (reproducible ordering), ties break on id.
+    Shape at scale: one row-local pass. Each row splits its text once
+    and derives ``dl`` and every query term's ``tf`` from that token
+    array, keeping only the terms it holds. One one-row aggregate over
+    the same rows carries (avgdl, N, df per query term) and rides in as
+    a broadcast; the query-term list is a bounded driver-side list. The
+    postings are exploded, scored against the broadcast row and summed
+    per id, so only the partial sums of matching documents are shuffled.
+    No corpus-wide term shuffle, no join on id, and ``df`` is not a
+    window over ``term``: that runs each term's whole posting list in
+    one task, so its parallelism is capped at the number of query terms.
+    Scores round to 4dp BEFORE ranking (reproducible ordering), ties
+    break on id.
     """
-    from news_data_pipeline_spark.operators.dedup import word_shingles
     from news_data_pipeline_spark.operators.fanout import fan_out
 
-    # Filter to the query terms BEFORE the (id, term) aggregation
-    # (guide §2.3 — shuffle fewer bytes): the full corpus-wide
-    # (id, term) shuffle the old ``term_frequencies`` call paid carried
-    # every distinct (id, term) partial only to discard all but the
-    # query terms'. Document length needs NO aggregation at all — it is
-    # the per-row token count, computed row-locally as the size of the
-    # non-empty-token split array (dl == sum of tf by definition; the
-    # `> 0` filter keeps exactly the docs that had a doclen row before:
-    # empty/whitespace/null texts produce 0/NULL and are excluded, as
-    # docs with zero token rows were). Identical values: dl, avgdl, N,
-    # df and every tf of a query term are unchanged.
-    doclen = (
-        fan_out(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
-        )
-        .select("id", doclen_expr(F.col("__t")).alias("dl"))
-        .where(F.col("dl") > 0)
+    terms = list(dict.fromkeys(query_terms))
+    tok = F.col("__tok")
+    dl = F.size(tok).cast("long")
+    # occurrences of t, compiled like doc_tokens (no lambda)
+    tf = {t: dl - F.size(F.array_remove(tok, t)) for t in terms}
+    # One split per row: dl and each query term's tf come from the same
+    # token array (materialized first, so Catalyst keeps one split).
+    tokens = fan_out(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
+    ).select("id", doc_tokens(F.col("__t")).alias("__tok"))
+    # Rows without tokens (empty, whitespace-only or NULL text) are not
+    # documents: they count in neither N nor avgdl and hold no posting.
+    # Conditional aggregates, not a row filter: Spark would copy a
+    # filter below fan_out's exchange and tokenize every text twice.
+    stats = tokens.agg(
+        F.avg(F.when(dl > 0, dl)).alias("avgdl"),
+        F.count_if(dl > 0).alias("n_docs"),
+        F.map_from_arrays(
+            F.array(*[F.lit(t) for t in terms]).cast("array<string>"),
+            F.array(*[F.count_if(tf[t] > 0) for t in terms]).cast("array<bigint>"),
+        ).alias("__df"),
     )
-    stats = doclen.agg(
-        F.avg("dl").alias("avgdl"), F.count(F.lit(1)).alias("n_docs")
+    # (term, tf) for the query terms the row holds. Exploding this
+    # expression rather than a column keeps Spark from inferring a
+    # non-empty filter and copying it below the exchange.
+    postings = F.filter(
+        F.array(
+            *[F.struct(F.lit(t).alias("term"), tf[t].alias("tf")) for t in terms]
+        ).cast("array<struct<term:string,tf:bigint>>"),
+        lambda p: p["tf"] > 0,
     )
-    qtf = (
-        word_shingles(df, id_col, text_col, n=1, distinct=False)
-        .withColumnRenamed("shingle", "term")
-        .where(F.col("term").isin(list(query_terms)))
-        .groupBy("id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = qtf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     contrib = (
-        qtf.join(F.broadcast(dfreq), on="term")
+        tokens.select("id", dl.alias("dl"), F.explode(postings).alias("__p"))
         .join(F.broadcast(stats))
-        .join(doclen, on="id")
+        .select(
+            "id",
+            "dl",
+            "avgdl",
+            "n_docs",
+            F.col("__p.tf").alias("tf"),
+            F.element_at("__df", F.col("__p.term")).alias("df"),
+        )
         .withColumn(
             "c",
             F.log(

@@ -570,8 +570,9 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 documents for the query {spark, hash, join} under BM25
-    (operators.terms.bm25_rank): posting-list-sized scoring with
-    broadcast corpus stats, global top-k via TakeOrderedAndProject.
+    (operators.terms.bm25_rank): one row-local tokenize per document,
+    the one-row (avgdl, N, df per term) stats broadcast into the
+    exploded postings, global top-k via TakeOrderedAndProject.
     The oracle repeats the arithmetic sub-expression-for-sub-expression
     ((1.2 + 1), (0.25 + 0.75*...)) so both engines round the same
     doubles."""

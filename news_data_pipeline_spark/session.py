@@ -148,6 +148,21 @@ def get_spark(
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
+    # Python workers start through _daemon.py. Spark puts pyspark.zip
+    # (which holds no bytecode), the py4j zip and the spark-core jar
+    # ahead of site-packages on every worker's path, so a fresh worker
+    # compiles pyspark from source (~1.0 CPU s to import pyspark.worker
+    # and the pandas serializers, against ~0.22 s from the installed
+    # package) and every task's importlib.invalidate_caches() re-reads
+    # the directories of the 16 zipimporters over those archives (~170
+    # ms CPU per Arrow task; measured on a 4-core host). The daemon
+    # drops the archives when the installed pyspark is the same
+    # release, else keeps Spark's path. A static conf: sessions only
+    # passed through tune() keep Spark's own daemon, and executors must
+    # be able to import this package, as they must for its UDFs.
+    builder = builder.config(
+        "spark.python.daemon.module", "news_data_pipeline_spark._daemon"
+    )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return tune(spark)

@@ -48,11 +48,73 @@ def test_bm25_prefers_rare_term_and_saturates_tf(spark):
     assert rows[0]["bm25"] == expect
     # tf saturation: doc 2 (tf=4) scores < 4x doc 3 (tf=1) on 'common'
     assert rows[1]["bm25"] < 4 * rows[2]["bm25"]
+    assert [(r["id"], r["bm25"]) for r in rows] == _bm25_by_hand(
+        df.collect(), ["needle", "common"]
+    )
+
+    # More inputs: NULL and whitespace-only texts are not documents, a
+    # token that merely contains a query term does not match it, and
+    # duplicated or absent query terms change nothing. k covers every
+    # row, so the whole score set is compared.
+    edge = spark.createDataFrame(
+        df.collect()
+        + [(5, None), (6, "needles uncommon filler"), (7, " \t "), (8, "common")],
+        "doc_id long, body string",
+    )
+    terms = ["common", "needle", "common", "absent"]
+    got = [
+        (r["id"], r["bm25"])
+        for r in bm25_rank(edge, "doc_id", "body", terms, k=20).collect()
+    ]
+    assert [i for i, _ in got] == [1, 2, 8, 3]
+    assert got == _bm25_by_hand(edge.collect(), terms)
+
+
+def _bm25_by_hand(rows, terms, k1=1.2, b=0.75):
+    """BM25 of every matching row, in the operator's arithmetic order,
+    with its 6dp-per-term then 4dp settle; sorted as the operator ranks."""
+    import math
+
+    docs = {i: t.split() for i, t in rows if t is not None and t.split()}
+    n = len(docs)
+    avgdl = sum(len(w) for w in docs.values()) / n
+    terms = list(dict.fromkeys(terms))
+    df = {t: sum(t in w for w in docs.values()) for t in terms}
+    out = []
+    for i, words in docs.items():
+        units = 0
+        for t in terms:
+            tf = words.count(t)
+            if tf:
+                idf = math.log((n - df[t] + 0.5) / (df[t] + 0.5) + 1)
+                c = idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * len(words) / avgdl))
+                units += math.floor(c * 1e6 + 0.5)
+        if any(t in words for t in terms):
+            out.append((i, math.floor(units / 1e6 * 1e4 + 0.5) / 1e4))
+    return sorted(out, key=lambda r: (-r[1], r[0]))
+
+
+def test_bm25_search_plan_is_one_row_local_pass(spark):
+    # One tokenize-and-explode per row, the (avgdl, N, df) row as the
+    # only broadcast: no join on id or term, no window over term, and
+    # at most one scan per pass (stats, scoring).
+    from tests.conftest import SF_DIR
+    from news_data_pipeline_spark.queries.llmdata import bm25_search
+
+    out = bm25_search(spark, SF_DIR)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("Generate ") == 1
+    assert final.count("FileScan parquet") <= 2
+    for node in ("BroadcastHashJoin", "SortMergeJoin", "Window"):
+        assert node not in final
 
 
 def test_bm25_doclen_matches_shared_tokenizer(spark):
-    """ADVICE r14: ``bm25_rank`` computes dl with an inline
-    split/trim/length-filter instead of the shared ``word_shingles``
+    """ADVICE r14: ``bm25_rank`` computes dl with its own
+    split/trim/empty-token removal instead of the shared ``word_shingles``
     tokenizer. Pin the parity at the operator boundary — dl must equal
     the shared tokenizer's per-doc token count (== sum of tf over all
     terms) on texts exercising the edge rules (leading/trailing/mixed
@@ -81,14 +143,14 @@ def test_bm25_doclen_matches_shared_tokenizer(spark):
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    # the operator's OWN dl expression (factored to doclen_expr so this
-    # parity is pinned at the boundary, not against a test-local copy)
-    from news_data_pipeline_spark.operators.terms import doclen_expr
+    # the operator's OWN dl: bm25_rank takes the size of doc_tokens, so
+    # the parity is pinned at the boundary, not against a test-local copy
+    from news_data_pipeline_spark.operators.terms import doc_tokens
 
     doclen = (
         df.select(
             F.col("doc_id").alias("id"),
-            doclen_expr(F.col("body")).alias("dl"),
+            F.size(doc_tokens(F.col("body"))).alias("dl"),
         )
         .where(F.col("dl") > 0)
     )

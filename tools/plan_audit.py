@@ -46,7 +46,7 @@ KNOWN_BNLJ = {
     "dsir_importance_weights": "two 1-row model-total aggregates (raw/target) broadcast into the smoothed log-ratios",
     "pq_ivf_adc_topk": "x4 = nlist=16 centroid frame into the 5-query probe assign + the nlist=16 one-row centroid array into the corpus cell assign + one-row codebook array (one struct per (sub, cid), a local relation under the bounded-codebook contract) into the corpus encode + the same codebook array into the 5-query LUT",
     "pq_ivf_rerank_topk": "x4 = the four sites of pq_ivf_adc_topk inside its ADC shortlist subtree: 5-query probe assign (nlist=16 centroid frame), corpus cell assign (nlist=16 one-row centroid array), corpus encode and 5-query LUT (one-row codebook array (one struct per (sub, cid), a local relation under the bounded-codebook contract))",
-    "bm25_search": "1-row corpus stats (N, avgdl) broadcast to scorers",
+    "bm25_search": "x1 = one-row (avgdl, N, per-query-term df map) aggregate broadcast into the exploded postings; the map has one entry per query term, a bounded driver-side list",
     "cosine_topk_bruteforce": "bounded query-vector set broadcast (contract: small query side)",
     "cosine_topk_ivf": "nlist centroids + query vectors broadcast (both bounded)",
     "multimodal_embedding_topk": "query embedding set broadcast (bounded)",
