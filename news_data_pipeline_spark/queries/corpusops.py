@@ -16,11 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from news_data_pipeline_spark.functions.exact import settled_round
 from news_data_pipeline_spark.queries.registry import register
-from news_data_pipeline_spark.sources.catalog import (
-    dataset_fingerprint,
-    evict_stale_artifacts as _evict_stale,
-    load_table,
-)
+from news_data_pipeline_spark.sources.catalog import ArtifactCache, load_table
 
 # SQL twin of operators.sampling.hash_bucket over a salted concat_ws key
 # (salt \x1f group \x1f key) — chr(31) is the unit separator literal.
@@ -701,7 +697,7 @@ _PQ_PREFIX = """
 """
 
 
-_PQ_CODEBOOK_ROWS: dict = {}
+_PQ_CODEBOOK_ROWS = ArtifactCache("embeddings")
 
 
 def _pq_trained_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -711,33 +707,24 @@ def _pq_trained_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     index-build time; every query then reuses the artifact. The five PQ
     registry queries previously each re-ran the Lloyd pass — at sf0.1
     roughly two-thirds of the family's 12.8 s bench cost was redundant
-    retraining of an identical codebook. The cache stores only the
-    COLLECTED k*m*sub_dim scalar rows — the same bounded driver-side
-    artifact ``pq_train`` itself materializes per Lloyd iteration —
-    keyed by ``(dataset directory, content fingerprint)`` — the
-    fingerprint (file/size/mtime of the embeddings table, round-11
-    ADVICE) means regenerating the dataset at the same path retrains
-    rather than serving stale codebooks — and rebuilds a local-relation
-    DataFrame on the CALLING session, so no session-bound object is
-    ever cached. Training is deterministic (first-k seeds, settled
+    retraining of an identical codebook. The ``ArtifactCache`` holds
+    only the COLLECTED k*m*sub_dim scalar rows — the same bounded
+    driver-side artifact ``pq_train`` itself materializes per Lloyd
+    iteration — and a local-relation DataFrame is rebuilt on the
+    CALLING session. Training is deterministic (first-k seeds, settled
     integer-unit means), so a cache hit is value-identical to
     retraining; ``tests/test_pq.py`` pins that equivalence.
     """
-    key = (sf_dir, dataset_fingerprint(sf_dir, "embeddings"))
-    rows = _PQ_CODEBOOK_ROWS.get(key)
-    if rows is None:
-        from news_data_pipeline_spark.operators.pq import pq_train
+    from news_data_pipeline_spark.operators.pq import _local_codebook, pq_train
 
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         cb = pq_train(emb, m=4, k=16, sub_dim=16, iters=1)
-        rows = [
+        return [
             (r["sub"], r["cid"], r["j"], r["value"]) for r in cb.collect()
         ]
-        _evict_stale(_PQ_CODEBOOK_ROWS, sf_dir)
-        _PQ_CODEBOOK_ROWS[key] = rows
-    from news_data_pipeline_spark.operators.pq import _local_codebook
 
-    return _local_codebook(spark, rows)
+    return _local_codebook(spark, _PQ_CODEBOOK_ROWS.get(sf_dir, build))
 
 
 @register(
@@ -1651,52 +1638,46 @@ _PQR_PREFIX = """
 """
 
 
-_PQR_ARTIFACTS: dict = {}
+_PQR_ARTIFACTS = ArtifactCache("embeddings")
 
 
-def _pqr_frozen_artifacts(spark: SparkSession, emb, sf_dir: str):
-    """Train-once frozen index artifacts for the residual-PQ family,
-    keyed by (dataset directory, content fingerprint) so a regenerated
-    dataset retrains instead of serving stale artifacts (the same
-    discipline as
-    ``_pq_trained_codebooks`` / ``_spq_frozen_artifacts``: only bounded
-    collected rows — 16 centroids + k*m*sub_dim codebook scalars — on
-    the driver; DataFrames rebuilt on the calling session). The values
-    are exactly what the in-plan derivation produces (centroids =
-    first-nlist-by-id, codebooks = one deterministic Lloyd pass over
-    the residuals), so a cache hit is value-identical to retraining —
-    the round-10 A/B that measured checkpointing NOT paying
-    (stage-count overhead, see ``pq_ivf_residual_topk``'s operator
-    docstring) found per-run retraining of these frozen artifacts was
-    the actual recoverable cost."""
+def _pqr_frozen_artifacts(spark: SparkSession, sf_dir: str):
+    """Train-once frozen artifacts of the residual-PQ family
+    (``pq_ivf_residual_topk``, ``streamed_pq_codes``), the
+    ``_PQR_PREFIX`` oracle's ``cent`` and ``cb1``: the first 16
+    non-NULL vectors by ``vec_id`` (its ``v`` CTE drops NULLs) and one
+    deterministic Lloyd pass over their residuals, cached as bounded
+    collected rows, so a hit is value-identical to retraining. The
+    round-10 A/B found per-run retraining, not lineage (checkpointing
+    did not pay), was the recoverable cost."""
     from news_data_pipeline_spark.operators.pq import (
+        _local_codebook,
         pq_residuals,
         pq_train,
     )
 
-    key = (sf_dir, dataset_fingerprint(sf_dir, "embeddings"))
-    art = _PQR_ARTIFACTS.get(key)
-    if art is None:
-        cent_rows = [
-            (
-                r["vec_id"],
-                list(r["embedding"]) if r["embedding"] is not None else None,
-            )
-            for r in emb.orderBy("vec_id")
-            .limit(16)
+    cent_schema = "cid bigint, c_vec array<double>"
+
+    def build():
+        emb = (
+            load_table(spark, sf_dir, "embeddings")
+            .where(F.col("embedding").isNotNull())
             .select(
                 "vec_id",
                 F.col("embedding").cast("array<double>").alias("embedding"),
             )
-            .collect()
+        )
+        cent_rows = [
+            (r["vec_id"], list(r["embedding"]))
+            for r in emb.orderBy("vec_id").limit(16).collect()
         ]
-        centroids = spark.createDataFrame(
-            cent_rows, "cid bigint, c_vec array<double>"
+        residuals = pq_residuals(
+            emb, spark.createDataFrame(cent_rows, cent_schema)
         )
         cb_rows = [
             (r["sub"], r["cid"], r["j"], r["value"])
             for r in pq_train(
-                pq_residuals(emb, centroids),
+                residuals,
                 id_col="id",
                 vec_col="rvec",
                 m=4,
@@ -1705,14 +1686,11 @@ def _pqr_frozen_artifacts(spark: SparkSession, emb, sf_dir: str):
                 iters=1,
             ).collect()
         ]
-        art = (cent_rows, cb_rows)
-        _evict_stale(_PQR_ARTIFACTS, sf_dir)
-        _PQR_ARTIFACTS[key] = art
-    cent_rows, cb_rows = art
-    from news_data_pipeline_spark.operators.pq import _local_codebook
+        return cent_rows, cb_rows
 
+    cent_rows, cb_rows = _PQR_ARTIFACTS.get(sf_dir, build)
     return (
-        spark.createDataFrame(cent_rows, "cid bigint, c_vec array<double>"),
+        spark.createDataFrame(cent_rows, cent_schema),
         _local_codebook(spark, cb_rows),
     )
 
@@ -1792,7 +1770,7 @@ def pq_ivf_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
-    centroids, codebooks = _pqr_frozen_artifacts(spark, emb, sf_dir)
+    centroids, codebooks = _pqr_frozen_artifacts(spark, sf_dir)
     return pq_ivf_residual_topk(
         queries, emb, sub_dim=16, m=4, kcodes=16, iters=1,
         k=10, nlist=16, nprobe=4,

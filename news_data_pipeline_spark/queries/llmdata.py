@@ -19,11 +19,7 @@ from news_data_pipeline_spark.functions.exact import (
 from news_data_pipeline_spark.operators import dedup, similarity
 from news_data_pipeline_spark.operators.fanout import fan_out
 from news_data_pipeline_spark.queries.registry import register
-from news_data_pipeline_spark.sources.catalog import (
-    dataset_fingerprint,
-    evict_stale_artifacts as _evict_stale,
-    load_table,
-)
+from news_data_pipeline_spark.sources.catalog import ArtifactCache, load_table
 
 # DuckDB twin of functions.text.word_count / token_count — keep in sync.
 # CASE keeps parity with word_count's blank-string -> 0 special case
@@ -3850,7 +3846,7 @@ def multimodal_crossmodal_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_XMODAL_INDEX: dict = {}
+_XMODAL_INDEX = ArtifactCache("documents")
 
 
 def _build_xmodal_artifacts(spark: SparkSession, docs: DataFrame):
@@ -3938,59 +3934,58 @@ def _build_xmodal_artifacts(spark: SparkSession, docs: DataFrame):
 
 
 def _crossmodal_frozen_index(spark: SparkSession, sf_dir: str):
-    """Build-once frozen IndexIVFPQ for the crossmodal family, keyed
-    by (dataset directory, content fingerprint of the documents table)
-    — a dataset regenerated at the same path rebuilds the index instead
-    of serving stale artifacts, and a cached session-temp root reaped
-    by tmp cleanup is detected and rebuilt rather than failing the
-    read (both round-11 ADVICE): (corpus embeddings, centroids,
-    codebooks, stored codes). A retrieval deployment builds all four at ingest and serves
-    every query from them; re-deriving them per query is bench-shape,
-    not production shape (round-9 verdict on
-    ``multimodal_crossmodal_topk``'s remaining cost).
+    """Build-once frozen IndexIVFPQ for the crossmodal family: (corpus
+    embeddings, centroids, codebooks, stored codes). A retrieval
+    deployment builds all four at ingest and serves every query from
+    them; re-deriving them per query is bench-shape, not production
+    shape (round-9 verdict on ``multimodal_crossmodal_topk``'s
+    remaining cost).
 
-    Cache discipline (extends the r7 ``_pq_trained_codebooks``
-    precedent): bounded artifacts (m*k*sub_dim codebook scalars, nlist
-    centroid rows) live as collected rows in driver memory; the
+    Bounded artifacts (m*k*sub_dim codebook scalars, nlist centroid
+    rows) live as collected rows in the ``ArtifactCache``; the
     CORPUS-SIZED artifacts (cid-carrying codes, raw embedding column)
     are never held on the driver — they spool once to session-temp
     parquet, the same on-disk shard layout
     ``streaming.sinks.maintain_pq_codes`` writes, and every run reads
-    them back as ordinary scans. Training and encoding are
-    deterministic (first-16-by-id centroids/seeds, settled integer
-    units), so a cache hit is value-identical to a rebuild — the
-    DuckDB oracle re-verifies the full semantics on every gate run.
+    them back as ordinary scans. A hit whose root was reaped by tmp
+    cleanup rebuilds rather than failing the read, and a rebuild for a
+    regenerated ``documents`` table deletes the stale root. Training
+    and encoding are deterministic (first-16-by-id centroids/seeds,
+    settled integer units), so a cache hit is value-identical to a
+    rebuild — the DuckDB oracle re-verifies the full semantics on
+    every gate run.
 
     Empty corpus: artifacts degrade to empty frames without touching
     disk (an empty parquet write round-trips, but there is nothing to
     amortize)."""
+    import os
+    import shutil
+
     cb_schema = "sub int, cid int, j int, value double"
     cent_schema = "cid bigint, c_vec array<double>"
     emb_schema = "id long, embedding array<double>"
     codes_schema = "id long, sub int, code int, cid bigint"
 
-    import os
-
-    key = (sf_dir, dataset_fingerprint(sf_dir, "documents"))
-    art = _XMODAL_INDEX.get(key)
-    if art is not None:
-        # the corpus-sized shards live in session-temp parquet, which
-        # an aggressive tmp cleaner can reap mid-session: validate the
-        # root before serving, rebuild on loss (round-11 ADVICE)
-        root = art[0]
-        if root is not None and not (
-            os.path.isdir(os.path.join(root, "vectors"))
-            and os.path.isdir(os.path.join(root, "codes"))
-        ):
-            art = None
-    if art is None:
+    def build():
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
-        art = _build_xmodal_artifacts(spark, docs)
-        _evict_stale(_XMODAL_INDEX, sf_dir)
-        _XMODAL_INDEX[key] = art
-    root, cb_rows, cent_rows = art
+        return _build_xmodal_artifacts(spark, docs)
+
+    def alive(art):
+        root = art[0]
+        return root is None or (
+            os.path.isdir(os.path.join(root, "vectors"))
+            and os.path.isdir(os.path.join(root, "codes"))
+        )
+
+    def release(art):
+        if art[0] is not None:
+            shutil.rmtree(art[0], ignore_errors=True)
+
+    root, cb_rows, cent_rows = _XMODAL_INDEX.get(
+        sf_dir, build, alive=alive, release=release
+    )
     if root is None:
         return (
             spark.createDataFrame([], emb_schema),
@@ -3998,8 +3993,6 @@ def _crossmodal_frozen_index(spark: SparkSession, sf_dir: str):
             spark.createDataFrame([], cb_schema),
             spark.createDataFrame([], codes_schema),
         )
-    import os
-
     from news_data_pipeline_spark.operators.pq import _local_codebook
 
     return (

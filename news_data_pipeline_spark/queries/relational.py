@@ -9,8 +9,6 @@ materialization), windows always partitioned.
 
 from __future__ import annotations
 
-import threading
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -27,7 +25,7 @@ from news_data_pipeline_spark.functions.exact import (
 )
 from news_data_pipeline_spark.operators.joins import anti_join, dim_join, semi_join
 from news_data_pipeline_spark.queries.registry import register
-from news_data_pipeline_spark.sources.catalog import load_table
+from news_data_pipeline_spark.sources.catalog import ArtifactCache, load_table
 
 
 # --- aggregation: TPC-H Q1-style pricing summary (A1/A2/A5 family) -------
@@ -1860,9 +1858,9 @@ def salted_events_segment_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_DBS: dict = {}
-_ORDERKEY_DBS: dict = {}
-_CUSTKEY_DBS: dict = {}
+_BUCKETED_DBS = ArtifactCache("customer", "orders")
+_ORDERKEY_DBS = ArtifactCache("orders", "lineitem")
+_CUSTKEY_DBS = ArtifactCache("customer", "orders")
 # Bucket-count policy for the orderkey/custkey artifacts: 32 matches
 # the local harness's core count and keeps per-bucket bytes sane at
 # gate/bench SFs. At 64M+ rows a fixed 32 pins the bucketed scan's
@@ -1872,67 +1870,34 @@ _CUSTKEY_DBS: dict = {}
 # in the hundreds of MB, i.e. thousands of buckets at 100 TB.
 _ORDERKEY_NUM_BUCKETS = 32
 _CUSTKEY_NUM_BUCKETS = 32
-# serializes each memo's miss/drop/build/cache sequence: the memos are
-# module-level and check_oracle runs registered queries on 4 threads
-# sharing one SparkSession, so two concurrent misses could each build,
-# then one's DROP ... CASCADE sweep would reap the other's freshly
-# created database before it was read (round-11 ADVICE)
-_BUCKETED_DBS_LOCK = threading.Lock()
 
 
 def _bucketed_artifact_db(
     spark: SparkSession,
     sf_dir: str,
     *,
-    memo: dict,
+    cache: ArtifactCache,
     prefix: str,
-    fingerprint_tables: tuple,
     table_names: tuple,
     build,
 ) -> str:
-    """Fingerprint-cached metastore database of bucketed tables — the
-    write-once/read-many storage lever's memo machinery, shared by
-    every bucketed artifact family. Built once per (sf_dir, content
-    fingerprint) and reused across invocations; paying the bucketed
-    writes on every query run (round-10 shape) measured only the write
-    cost the lever exists to amortize. The database name is
-    per-creation unique (round-11 ADVICE: a fixed name meant concurrent
-    sessions sharing a metastore clobbered each other's tables via the
-    DROP ... CASCADE), and its location lives under the tracked
-    session-temp parent, so interpreter exit reclaims it; a cache hit
-    re-validates both the location and the catalog entries and rebuilds
-    if either was reaped (``cleanup_session_tmp``). ``build(db)`` must
-    create exactly ``table_names`` inside ``db``."""
+    """Metastore database of bucketed tables, built once per dataset
+    by ``cache`` — the write-once/read-many storage lever of every
+    bucketed artifact family (paying the writes per query run measured
+    only the cost the lever exists to amortize). The name is unique per
+    creation (round-11 ADVICE: a fixed name let sessions sharing a
+    metastore clobber each other's tables) and the location lives under
+    the session-temp parent. A hit whose location or catalog entries
+    were reaped (``cleanup_session_tmp``) rebuilds; an evicted database
+    is dropped. ``build(db)`` must create ``table_names`` in ``db``."""
     import os
     import tempfile
     import uuid
 
-    from news_data_pipeline_spark.sources.catalog import (
-        dataset_fingerprint,
-        evict_stale_artifacts,
-    )
+    def drop(art) -> None:
+        spark.sql(f"DROP DATABASE IF EXISTS {art[0]} CASCADE")
 
-    key = (sf_dir, dataset_fingerprint(sf_dir, *fingerprint_tables))
-    with _BUCKETED_DBS_LOCK:
-        hit = memo.get(key)
-        if hit is not None:
-            db, loc = hit
-            if (
-                os.path.isdir(loc)
-                and spark.catalog.databaseExists(db)
-                and all(
-                    spark.catalog.tableExists(f"{db}.{t}")
-                    for t in table_names
-                )
-            ):
-                return db
-        # drop any stale database for this path (mutated dataset or
-        # reaped location) before rebuilding, so the metastore does not
-        # accumulate orphan entries over a long session
-        for k, (old_db, _old_loc) in list(memo.items()):
-            if k[0] == sf_dir:
-                spark.sql(f"DROP DATABASE IF EXISTS {old_db} CASCADE")
-        evict_stale_artifacts(memo, sf_dir)
+    def create():
         db = f"{prefix}_{uuid.uuid4().hex[:8]}"
         loc = tempfile.mkdtemp(prefix=f"{prefix}_")
         spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
@@ -1940,13 +1905,22 @@ def _bucketed_artifact_db(
             build(db)
         except BaseException:
             # a half-built database (first table written, second
-            # failed) must not linger in the metastore: it is not
-            # cached, so a retry would build a FRESH db and orphan this
-            # one for the session's lifetime
-            spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+            # failed) is not cached, so a retry would build a FRESH db
+            # and orphan this one for the session's lifetime
+            drop((db, loc))
             raise
-        memo[key] = (db, loc)
-        return db
+        return db, loc
+
+    def alive(art) -> bool:
+        db, loc = art
+        return (
+            os.path.isdir(loc)
+            and spark.catalog.databaseExists(db)
+            and all(spark.catalog.tableExists(f"{db}.{t}") for t in table_names)
+        )
+
+    db, _loc = cache.get(sf_dir, create, alive=alive, release=drop)
+    return db
 
 
 def _bucketed_join_db(spark: SparkSession, sf_dir: str) -> str:
@@ -1973,8 +1947,7 @@ def _bucketed_join_db(spark: SparkSession, sf_dir: str) -> str:
 
     return _bucketed_artifact_db(
         spark, sf_dir,
-        memo=_BUCKETED_DBS, prefix="bucketed_q",
-        fingerprint_tables=("customer", "orders"),
+        cache=_BUCKETED_DBS, prefix="bucketed_q",
         table_names=("b_customer", "b_orders"),
         build=build,
     )
@@ -2017,8 +1990,7 @@ def _orderkey_tables(
 
     db = _bucketed_artifact_db(
         spark, sf_dir,
-        memo=_ORDERKEY_DBS, prefix="bucketed_ok",
-        fingerprint_tables=("orders", "lineitem"),
+        cache=_ORDERKEY_DBS, prefix="bucketed_ok",
         table_names=("orders", "lineitem"),
         build=build,
     )
@@ -2066,8 +2038,7 @@ def _custkey_tables(
 
     db = _bucketed_artifact_db(
         spark, sf_dir,
-        memo=_CUSTKEY_DBS, prefix="bucketed_ck",
-        fingerprint_tables=("customer", "orders"),
+        cache=_CUSTKEY_DBS, prefix="bucketed_ck",
         table_names=("customer", "orders"),
         build=build,
     )

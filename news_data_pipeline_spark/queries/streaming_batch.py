@@ -22,15 +22,11 @@ from news_data_pipeline_spark.functions.exact import (
     sql_exact_sum,
 )
 from news_data_pipeline_spark.queries.registry import register
-from news_data_pipeline_spark.sources.catalog import (
-    dataset_fingerprint,
-    evict_stale_artifacts as _evict_stale,
-    load_table,
-)
+from news_data_pipeline_spark.sources.catalog import ArtifactCache, load_table
 
 
 # --- round 14: bucketed-by-user_id events artifact ------------------------
-_USERID_DBS: dict = {}
+_USERID_DBS = ArtifactCache("events")
 _USERID_NUM_BUCKETS = 32
 
 
@@ -72,8 +68,7 @@ def _userid_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     db = _bucketed_artifact_db(
         spark, sf_dir,
-        memo=_USERID_DBS, prefix="bucketed_uid",
-        fingerprint_tables=("events",),
+        cache=_USERID_DBS, prefix="bucketed_uid",
         table_names=("events",),
         build=build,
     )
@@ -1793,68 +1788,15 @@ def _pqr_oracle() -> str:
     """
 
 
-_SPQ_ARTIFACTS: dict = {}
-
-
-def _spq_frozen_artifacts(spark: SparkSession, emb, sf_dir: str):
-    """Train-once frozen index artifacts for ``streamed_pq_codes``,
-    keyed by (dataset directory, content fingerprint) — a regenerated
-    dataset retrains instead of serving stale artifacts (the r7
-    ``_pq_trained_codebooks``
-    discipline: only bounded collected rows — 16 centroids +
-    k*m*sub_dim codebook scalars — ever live on the driver; DataFrames
-    are rebuilt on the calling session). Training is deterministic, so
-    a cache hit is value-identical to retraining — and retraining per
-    run was ~40% of the query's wall-clock for artifacts whose entire
-    point is that they are frozen across micro-batches."""
-    from news_data_pipeline_spark.operators.pq import (
-        pq_residuals,
-        pq_train,
-    )
-
-    key = (sf_dir, dataset_fingerprint(sf_dir, "embeddings"))
-    art = _SPQ_ARTIFACTS.get(key)
-    if art is None:
-        cent_rows = [
-            (r["vec_id"], list(r["embedding"]))
-            for r in emb.orderBy("vec_id").limit(16).collect()
-        ]
-        centroids = spark.createDataFrame(
-            cent_rows, "cid bigint, c_vec array<double>"
-        )
-        cb_rows = [
-            (r["sub"], r["cid"], r["j"], r["value"])
-            for r in pq_train(
-                pq_residuals(emb, centroids),
-                id_col="id",
-                vec_col="rvec",
-                m=4,
-                k=16,
-                sub_dim=16,
-                iters=1,
-            ).collect()
-        ]
-        art = (cent_rows, cb_rows)
-        _evict_stale(_SPQ_ARTIFACTS, sf_dir)
-        _SPQ_ARTIFACTS[key] = art
-    cent_rows, cb_rows = art
-    from news_data_pipeline_spark.operators.pq import _local_codebook
-
-    return (
-        spark.createDataFrame(cent_rows, "cid bigint, c_vec array<double>"),
-        _local_codebook(spark, cb_rows),
-    )
-
-
 @register("streamed_pq_codes", oracle=_pqr_oracle())
 def streamed_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming residual IVF×PQ index maintenance
     (streaming.sinks.maintain_pq_codes + read_pq_codes — the
     by_residual=true twin of streamed_sq_codes, completing the
     streamed-index family for the FAISS-default layout): coarse
-    centroids and residual codebooks train ONCE (frozen artifacts,
-    bounded collected rows cached per dataset dir —
-    ``_spq_frozen_artifacts``), then vectors stream through two
+    centroids and residual codebooks train ONCE (the frozen artifact
+    ``corpusops._pqr_frozen_artifacts`` shares with
+    ``pq_ivf_residual_topk``), then vectors stream through two
     availableNow micro-batches, each writing its own cid-carrying
     code partition; the merged table must equal one whole-corpus
     residual encode exactly. Codes append per batch, the artifacts
@@ -1871,6 +1813,9 @@ def streamed_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
+    from news_data_pipeline_spark.queries.corpusops import (
+        _pqr_frozen_artifacts,
+    )
     from news_data_pipeline_spark.streaming.sinks import (
         maintain_pq_codes,
         read_pq_codes,
@@ -1888,7 +1833,7 @@ def streamed_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "id bigint, sub int, code int, cid bigint"
         )
-    centroids, codebooks = _spq_frozen_artifacts(spark, emb, sf_dir)
+    centroids, codebooks = _pqr_frozen_artifacts(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="pq_stream_q_")
     landing = os.path.join(root, "landing")
     for i in range(2):

@@ -11,6 +11,7 @@ every operator downstream sees identical shapes on every scale factor.
 from __future__ import annotations
 
 import os
+import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -36,14 +37,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def dataset_fingerprint(sf_dir: str, *names: str) -> tuple:
     """Content fingerprint of one or more fixture tables: sorted
     ``(relpath, size, mtime_ns)`` of every data file under each table
-    path. The frozen-artifact memo caches (``_pq_trained_codebooks``,
-    ``_pqr_frozen_artifacts``, ``_spq_frozen_artifacts``,
-    ``_crossmodal_frozen_index``) fold this into their keys so a
-    dataset REGENERATED AT THE SAME PATH within one session can never
-    serve stale centroids/codebooks (round-11 ADVICE: keying on
-    ``sf_dir`` alone had no invalidation). A missing table fingerprints
-    as an empty entry set rather than raising — the caller's read is
-    where absence should surface.
+    path. ``ArtifactCache`` folds it into its keys, so a dataset
+    REGENERATED AT THE SAME PATH within one session rebuilds instead of
+    serving stale artifacts. A missing table fingerprints as an empty
+    entry set rather than raising — the caller's read is where absence
+    should surface.
 
     Local-FS walk: the gate fixtures are local paths. A cluster
     deployment would take the same triple from a Hadoop FileSystem
@@ -71,14 +69,48 @@ def dataset_fingerprint(sf_dir: str, *names: str) -> tuple:
     return tuple(sorted(entries))
 
 
-def evict_stale_artifacts(cache: dict, sf_dir: str) -> None:
-    """Drop a frozen-artifact memo cache's entries for ``sf_dir``
-    (keys are ``(sf_dir, fingerprint)`` tuples) before inserting the
-    freshly-trained one: one live dataset per path, so a directory
-    regenerated many times within a session cannot grow the cache
-    unboundedly, and a stale fingerprint can never be served again."""
-    for k in [k for k in cache if isinstance(k, tuple) and k[0] == sf_dir]:
-        del cache[k]
+class ArtifactCache:
+    """Build-once artifacts derived from fixture tables (PQ codebooks,
+    frozen indexes, BPE merges, bucketed databases), reused by every
+    query of the session: collected rows, paths or catalog names, never
+    a DataFrame bound to the session that built it.
+
+    Entries are keyed by ``(sf_dir, dataset_fingerprint(sf_dir,
+    *tables))``, so regenerating a table at the same path rebuilds.
+    ``get`` holds the lock from lookup to insert, so concurrent misses
+    (the oracle gate runs queries on threads sharing one session) build
+    once. A build first evicts every entry for ``sf_dir`` through
+    ``release`` (one live artifact per path); one that raises caches
+    nothing.
+    """
+
+    def __init__(self, *tables: str):
+        self.tables = tables
+        self._entries: dict[tuple, object] = {}
+        self._lock = threading.Lock()
+
+    def get(self, sf_dir: str, build, alive=None, release=None):
+        """The artifact for ``sf_dir``'s current tables: ``build()`` on
+        a miss, or when ``alive(artifact)`` says a hit was lost (a
+        reaped temp directory, a dropped database)."""
+        key = (sf_dir, dataset_fingerprint(sf_dir, *self.tables))
+        with self._lock:
+            if key in self._entries:
+                art = self._entries[key]
+                if alive is None or alive(art):
+                    return art
+            for k in [k for k in self._entries if k[0] == sf_dir]:
+                old = self._entries.pop(k)
+                if release is not None:
+                    release(old)
+            art = build()
+            self._entries[key] = art
+            return art
+
+    def entries(self, sf_dir: str) -> list:
+        """The artifacts cached for ``sf_dir`` (at most one)."""
+        with self._lock:
+            return [v for k, v in self._entries.items() if k[0] == sf_dir]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

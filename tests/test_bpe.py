@@ -110,3 +110,40 @@ def test_num_merges_guard(spark):
         assert "num_merges" in str(e)
     else:
         raise AssertionError("num_merges=0 must raise")
+
+
+def test_merge_table_retrains_when_documents_regenerated(spark, tmp_path):
+    # The registered merge table is cached per documents-table content:
+    # a corpus rewritten at the same path must serve the new corpus's
+    # merges, not the first corpus's.
+    import time
+
+    from news_data_pipeline_spark.queries.tokenizer import (
+        NUM_MERGES,
+        bpe_merge_table,
+    )
+
+    sf_dir = str(tmp_path / "sfbpe")
+
+    def write_docs(texts):
+        spark.createDataFrame(
+            list(enumerate(texts)), "doc_id long, text string"
+        ).coalesce(1).write.mode("overwrite").parquet(
+            f"{sf_dir}/documents.parquet"
+        )
+        return sorted(
+            tuple(r)
+            for r in bpe_train(
+                _symbols(spark, texts), NUM_MERGES
+            )[0].collect()
+        )
+
+    def served():
+        return sorted(tuple(r) for r in bpe_merge_table(spark, sf_dir).collect())
+
+    first = write_docs(["low lower lowest", "low low slow"])
+    assert served() == first
+    time.sleep(0.05)  # the mtime moves even on coarse filesystems
+    second = write_docs(["newer news knew", "new newest sewn"])
+    assert second != first
+    assert served() == second

@@ -257,22 +257,21 @@ def test_pq_ivf_rerank_orders_by_exact_cosine(spark):
         assert sims == sorted(sims, reverse=True)
 
 
-def test_codebook_cache_is_value_identical_and_keyed(spark):
+def test_codebook_cache_is_value_identical_and_keyed(spark, monkeypatch):
     # The train-once artifact must serve rows identical to a fresh
     # train, rebuild on the calling session (no cached DataFrame), and
     # key strictly by dataset directory.
     from news_data_pipeline_spark.queries import corpusops as co
 
-    from news_data_pipeline_spark.sources.catalog import (
-        evict_stale_artifacts,
-    )
+    from news_data_pipeline_spark.sources.catalog import ArtifactCache
 
     sf_dir = "/root/testdata/sf0.001"
-    evict_stale_artifacts(co._PQ_CODEBOOK_ROWS, sf_dir)
+    # an empty cache, so the first call trains
+    monkeypatch.setattr(co, "_PQ_CODEBOOK_ROWS", ArtifactCache("embeddings"))
     first = sorted(
         tuple(r) for r in co._pq_trained_codebooks(spark, sf_dir).collect()
     )
-    assert any(k[0] == sf_dir for k in co._PQ_CODEBOOK_ROWS)
+    assert co._PQ_CODEBOOK_ROWS.entries(sf_dir)
 
     calls = []
     orig = pq_train
@@ -529,16 +528,15 @@ def _write_synth_embeddings(spark, sf_dir, seed_shift):
 def test_frozen_artifact_caches_invalidate_on_dataset_mutation(
     spark, tmp_path
 ):
-    """Round-11 ADVICE: memo keys carry a content fingerprint, so a
+    """Round-11 ADVICE: cache keys carry a content fingerprint, so a
     dataset REGENERATED AT THE SAME PATH retrains instead of serving
-    stale centroids/codebooks — across all three driver-memory artifact
-    caches (plain PQ codebooks, residual-PQ, streamed residual-PQ)."""
+    stale centroids/codebooks — for both driver-memory PQ artifact
+    caches (plain PQ codebooks and the residual-PQ artifact that
+    ``pq_ivf_residual_topk`` and ``streamed_pq_codes`` share)."""
     import os
     import time
 
     from news_data_pipeline_spark.queries import corpusops as co
-    from news_data_pipeline_spark.queries import streaming_batch as sb
-    from news_data_pipeline_spark.sources.catalog import load_table
 
     sf_dir = str(tmp_path / "sfx")
     os.makedirs(sf_dir)
@@ -547,17 +545,11 @@ def test_frozen_artifact_caches_invalidate_on_dataset_mutation(
     cb1 = sorted(
         tuple(r) for r in co._pq_trained_codebooks(spark, sf_dir).collect()
     )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-    )
-    pqr_c1, pqr_cb1 = co._pqr_frozen_artifacts(spark, emb, sf_dir)
+    pqr_c1, pqr_cb1 = co._pqr_frozen_artifacts(spark, sf_dir)
     pqr1 = (
         sorted(tuple(r) for r in pqr_c1.collect()),
         sorted(tuple(r) for r in pqr_cb1.collect()),
     )
-    spq_c1, spq_cb1 = sb._spq_frozen_artifacts(spark, emb, sf_dir)
-    spq1 = sorted(tuple(r) for r in spq_cb1.collect())
 
     # regenerate the dataset at the SAME path with different content;
     # ensure the mtime_ns actually moves even on coarse filesystems
@@ -567,25 +559,17 @@ def test_frozen_artifact_caches_invalidate_on_dataset_mutation(
     cb2 = sorted(
         tuple(r) for r in co._pq_trained_codebooks(spark, sf_dir).collect()
     )
-    emb2 = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-    )
-    pqr_c2, pqr_cb2 = co._pqr_frozen_artifacts(spark, emb2, sf_dir)
+    pqr_c2, pqr_cb2 = co._pqr_frozen_artifacts(spark, sf_dir)
     pqr2 = (
         sorted(tuple(r) for r in pqr_c2.collect()),
         sorted(tuple(r) for r in pqr_cb2.collect()),
     )
-    spq_c2, spq_cb2 = sb._spq_frozen_artifacts(spark, emb2, sf_dir)
-    spq2 = sorted(tuple(r) for r in spq_cb2.collect())
 
     assert cb2 != cb1  # retrained on the mutated content
     assert pqr2 != pqr1
-    assert spq2 != spq1
     # and the evict-on-insert keeps exactly one live entry per path
-    assert sum(1 for k in co._PQ_CODEBOOK_ROWS if k[0] == sf_dir) == 1
-    assert sum(1 for k in co._PQR_ARTIFACTS if k[0] == sf_dir) == 1
-    assert sum(1 for k in sb._SPQ_ARTIFACTS if k[0] == sf_dir) == 1
+    assert len(co._PQ_CODEBOOK_ROWS.entries(sf_dir)) == 1
+    assert len(co._PQR_ARTIFACTS.entries(sf_dir)) == 1
 
 
 def test_xmodal_index_invalidates_on_mutation_and_reaped_root(
@@ -615,10 +599,8 @@ def test_xmodal_index_invalidates_on_mutation_and_reaped_root(
     emb1, cent1, cb1, codes1 = ld._crossmodal_frozen_index(spark, sf_dir)
     first_codes = sorted(tuple(r) for r in codes1.collect())
     first_cb = sorted(tuple(r) for r in cb1.collect())
-    root1 = next(
-        k2 for k2 in ld._XMODAL_INDEX if k2[0] == sf_dir
-    )
-    art_root = ld._XMODAL_INDEX[root1][0]
+    (art,) = ld._XMODAL_INDEX.entries(sf_dir)
+    art_root = art[0]
 
     # cache hit serves the same root without rebuilding
     _, _, _, codes_again = ld._crossmodal_frozen_index(spark, sf_dir)
@@ -631,11 +613,14 @@ def test_xmodal_index_invalidates_on_mutation_and_reaped_root(
     )
     assert sorted(tuple(r) for r in codes_r.collect()) == first_codes
     assert sorted(tuple(r) for r in cb_r.collect()) == first_cb
+    (rebuilt,) = ld._XMODAL_INDEX.entries(sf_dir)
 
-    # (b) dataset regenerated at the same path: artifacts change
+    # (b) dataset regenerated at the same path: artifacts change and
+    # the stale root is deleted
     time.sleep(0.05)
     write_docs([f"omega text {i} differs" for i in range(24)])
     emb2, cent2, cb2, codes2 = ld._crossmodal_frozen_index(spark, sf_dir)
     second_codes = sorted(tuple(r) for r in codes2.collect())
     assert second_codes != first_codes
-    assert sum(1 for k in ld._XMODAL_INDEX if k[0] == sf_dir) == 1
+    assert len(ld._XMODAL_INDEX.entries(sf_dir)) == 1
+    assert not os.path.exists(rebuilt[0])

@@ -213,3 +213,70 @@ def test_update_recorded_drops_retired_names(tmp_path):
     assert set(rows) == set(live)
     assert rows[live[0]] == "3"
     assert rows[live[1]] == "4"
+
+
+_PROBE_BASE = '''
+from news_data_pipeline_spark.sources.catalog import load_table
+
+
+def helper(x):
+    return x + 1
+
+
+def unrelated(x):
+    return x * 2
+
+
+def probe_query(spark, sf_dir):
+    from news_data_pipeline_spark.{mod} import imported_helper
+
+    return imported_helper(helper(load_table))
+
+
+def imported_helper(x):
+    return x
+'''
+
+
+def test_signature_tracks_reached_helpers(tmp_path, monkeypatch):
+    """A query's signature covers the package code it reaches — module
+    globals it calls and names its body imports — and nothing else."""
+    import importlib.util
+    import sys
+
+    from news_data_pipeline_spark.queries import registry
+
+    mod = "_signature_probe"
+    name = f"news_data_pipeline_spark.{mod}"
+
+    def signature(variant: str, source: str) -> str:
+        path = tmp_path / f"{variant}.py"
+        path.write_text(source.replace("{mod}", mod))
+        spec = importlib.util.spec_from_file_location(name, path)
+        module = importlib.util.module_from_spec(spec)
+        monkeypatch.setitem(sys.modules, name, module)
+        spec.loader.exec_module(module)
+        monkeypatch.setitem(
+            registry.QUERIES, "probe",
+            registry.Query(fn=module.probe_query, oracle="SELECT 1"),
+        )
+        return registry.query_signature("probe")
+
+    base = signature("base", _PROBE_BASE)
+    assert signature(
+        "helper", _PROBE_BASE.replace("x + 1", "x + 2")
+    ) != base
+    assert signature(
+        "imported", _PROBE_BASE.replace("return x\n", "return -x\n")
+    ) != base
+    assert signature(
+        "unrelated", _PROBE_BASE.replace("x * 2", "x * 3")
+    ) == base
+    reformatted = _PROBE_BASE.replace(
+        "def helper(x):\n    return x + 1",
+        "def helper(\n    x\n):\n\n    return x+1",
+    ).replace(
+        "imported_helper(helper(load_table))",
+        "imported_helper(\n        helper(load_table)\n    )",
+    )
+    assert signature("reformatted", reformatted) == base

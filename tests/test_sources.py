@@ -129,9 +129,7 @@ def test_bucketed_join_db_cached_and_invalidated(spark, tmp_path):
     assert total1 == 20
 
     # reaped session-temp location: rebuild, not a failed read
-    loc1 = next(
-        v[1] for k, v in rel._BUCKETED_DBS.items() if k[0] == sf_dir
-    )
+    ((_db, loc1),) = rel._BUCKETED_DBS.entries(sf_dir)
     shutil.rmtree(loc1)
     db2 = rel._bucketed_join_db(spark, sf_dir)
     assert spark.catalog.tableExists(f"{db2}.b_customer")
@@ -144,7 +142,7 @@ def test_bucketed_join_db_cached_and_invalidated(spark, tmp_path):
     assert db3 != db2
     assert not spark.catalog.databaseExists(db2)
     assert spark.table(f"{db3}.b_orders").count() == 24
-    assert sum(1 for k in rel._BUCKETED_DBS if k[0] == sf_dir) == 1
+    assert len(rel._BUCKETED_DBS.entries(sf_dir)) == 1
 
     # a mid-build failure must not orphan a half-built database in the
     # metastore (the second write fails -> db dropped, nothing cached)
@@ -175,7 +173,7 @@ def test_bucketed_join_db_cached_and_invalidated(spark, tmp_path):
     # db must not appear
     assert dbs_before - after == {db3}
     assert not (after - dbs_before)
-    assert sum(1 for k in rel._BUCKETED_DBS if k[0] == sf_dir) == 0
+    assert rel._BUCKETED_DBS.entries(sf_dir) == []
     # and a clean retry rebuilds end-to-end
     db4 = rel._bucketed_join_db(spark, sf_dir)
     assert spark.table(f"{db4}.b_orders").count() == 28
@@ -960,12 +958,9 @@ def test_orderkey_tables_bucketed_cached_and_shuffle_free(spark, tmp_path):
 
     write_fixture(20)
     orders, lineitem = rel._orderkey_tables(spark, sf_dir)
-    db1 = next(v[0] for k, v in rel._ORDERKEY_DBS.items() if k[0] == sf_dir)
+    ((db1, _loc),) = rel._ORDERKEY_DBS.entries(sf_dir)
     o2, l2 = rel._orderkey_tables(spark, sf_dir)  # cache hit, same db
-    assert (
-        next(v[0] for k, v in rel._ORDERKEY_DBS.items() if k[0] == sf_dir)
-        == db1
-    )
+    assert [db for db, _ in rel._ORDERKEY_DBS.entries(sf_dir)] == [db1]
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -991,7 +986,7 @@ def test_orderkey_tables_bucketed_cached_and_shuffle_free(spark, tmp_path):
     time.sleep(0.05)
     write_fixture(24)
     _o3, l3 = rel._orderkey_tables(spark, sf_dir)
-    db2 = next(v[0] for k, v in rel._ORDERKEY_DBS.items() if k[0] == sf_dir)
+    ((db2, _loc),) = rel._ORDERKEY_DBS.entries(sf_dir)
     assert db2 != db1
     assert not spark.catalog.databaseExists(db1)
     assert l3.count() == 72
@@ -1026,12 +1021,9 @@ def test_custkey_tables_bucketed_cached_and_shuffle_free(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/orders.parquet")
 
     customer, orders = rel._custkey_tables(spark, sf_dir)
-    db1 = next(v[0] for k, v in rel._CUSTKEY_DBS.items() if k[0] == sf_dir)
+    ((db1, _loc),) = rel._CUSTKEY_DBS.entries(sf_dir)
     rel._custkey_tables(spark, sf_dir)  # cache hit, same db
-    assert (
-        next(v[0] for k, v in rel._CUSTKEY_DBS.items() if k[0] == sf_dir)
-        == db1
-    )
+    assert [db for db, _ in rel._CUSTKEY_DBS.entries(sf_dir)] == [db1]
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -1111,9 +1103,7 @@ def test_bucketed_artifact_db_concurrent_miss_single_build(spark, tmp_path):
         d.name for d in spark.catalog.listDatabases()
     } - dbs_before
     assert len(created) == 1, created  # one build, no orphans
-    assert (
-        sum(1 for k in rel._ORDERKEY_DBS if k[0] == sf_dir) == 1
-    )
+    assert len(rel._ORDERKEY_DBS.entries(sf_dir)) == 1
 
 
 def test_zorder_rectangle_scan_layer_prunes_value_dimension(spark):

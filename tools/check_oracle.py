@@ -7,6 +7,10 @@ comparison (floats with tolerance). Use before every commit:
 
     python tools/check_oracle.py [sf_dir] [query_name ...]
 
+Each passing line prints the query's seconds and their split: the
+Spark side (build the frame and collect it) and the rest (the DuckDB
+oracle plus the comparison).
+
 NOTE on the printed per-query seconds: checks run on ``--jobs``
 concurrent threads (default 4) sharing one Spark scheduler, so each
 query's wall-clock includes its neighbors' overlap — two queries
@@ -228,6 +232,7 @@ def check_one(spark, duck_local, sf_dir, name, fn, oracle):
         sdf = frame.toPandas()
     except Exception:
         return (f"FAIL {name}: spark raised\n{traceback.format_exc()}", True, 0)
+    t_spark = time.time() - t0
     if oracle is None:
         return (
             f"ok   {name}: rows-only ({len(sdf)} rows, {time.time()-t0:.1f}s)",
@@ -257,8 +262,10 @@ def check_one(spark, duck_local, sf_dir, name, fn, oracle):
     ok, why, rescued = rows_equal(srows, drows)
     if not ok:
         return (f"FAIL {name}: {why}", True, rescued)
+    t = time.time() - t0
     return (
-        f"ok   {name}: {len(srows)} rows match ({time.time()-t0:.1f}s)",
+        f"ok   {name}: {len(srows)} rows match ({t:.1f}s: spark "
+        f"{t_spark:.1f}s, duckdb + compare {t - t_spark:.1f}s)",
         False,
         0,
     )
