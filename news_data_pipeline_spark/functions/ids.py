@@ -10,8 +10,11 @@ exchange, no collision-by-truncation, stable across runs and engines.
 
 from __future__ import annotations
 
+import decimal
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column
+from pyspark.sql.types import DecimalType, FractionalType
 
 
 def surrogate_key(*cols: Column | str, algo: str = "md5") -> Column:
@@ -135,19 +138,33 @@ def global_running_sum(
     summed = ranged.withColumn(
         "__ps", F.sum(value_col).over(w)
     ).localCheckpoint(eager=True)
+    # partition total = sum of the values, NOT max(__ps): with negative
+    # values the running sum is not monotone, so its max overshoots the
+    # true total and every later partition's offset would be wrong
     totals = (
         summed.groupBy("__pid").agg(F.sum(value_col).alias("__tot")).collect()
     )
-    offsets: list[tuple[int, float]] = []
-    acc = 0.0
+    # offsets take the sum's own type (bigint for integral values), so
+    # the output keeps the value's type instead of widening to double
+    run_type = summed.schema["__ps"].dataType
+    if isinstance(run_type, DecimalType):
+        acc = decimal.Decimal(0)
+    elif isinstance(run_type, FractionalType):
+        acc = 0.0
+    else:
+        acc = 0
+    offsets = []
     for row in sorted(totals, key=lambda r: r["__pid"]):
         offsets.append((row["__pid"], acc))
-        acc += row["__tot"] or 0.0
+        if row["__tot"] is not None:
+            acc += row["__tot"]
     if not offsets:  # empty input
         return summed.withColumn(out_col, F.col("__ps")).drop(
             "__pid", "__ps"
         )
-    offset_df = spark.createDataFrame(offsets, "__pid int, __offset double")
+    offset_df = spark.createDataFrame(
+        offsets, f"__pid int, __offset {run_type.simpleString()}"
+    )
     return (
         summed.join(F.broadcast(offset_df), on="__pid")
         .withColumn(out_col, F.col("__ps") + F.col("__offset"))

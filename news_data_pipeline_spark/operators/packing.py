@@ -17,63 +17,10 @@ only driver-side data is one row per partition.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-
-def global_running_sum(
-    df: DataFrame,
-    order_by: Sequence[str],
-    value_col: str,
-    *,
-    out_col: str = "running_sum",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Running sum of ``value_col`` over a GLOBAL sort order — without a
-    single-partition window.
-
-    Same shape as ``global_row_number`` (see that docstring for why the
-    eager ``localCheckpoint`` is load-bearing: range boundaries are
-    sampled per job, so the offsets pass and the caller's action must
-    see the SAME partitioning). ``order_by`` should be a total order
-    (include a unique tie-break key) for cross-run determinism.
-    ``out_col`` is INCLUSIVE of the current row.
-    """
-    spark = df.sparkSession
-    order_cols = list(order_by)
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(n, *order_cols).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    summed = ranged.withColumn(
-        "__run", F.sum(F.col(value_col).cast("long")).over(w)
-    ).localCheckpoint(eager=True)
-    # partition total = sum of the values, NOT max(__run): with negative
-    # values the running sum is not monotone, so its max overshoots the
-    # true total and every later partition's offset would be wrong
-    totals = summed.groupBy("__pid").agg(
-        F.sum(F.col(value_col).cast("long")).alias("__tot")
-    ).collect()
-    offsets: list[tuple[int, int]] = []
-    acc = 0
-    for row in sorted(totals, key=lambda r: r["__pid"]):
-        offsets.append((row["__pid"], acc))
-        acc += row["__tot"] or 0
-    if not offsets:  # empty input
-        return summed.withColumn(out_col, F.col("__run")).drop("__pid", "__run")
-    offset_df = spark.createDataFrame(offsets, "__pid int, __offset long")
-    return (
-        summed.join(F.broadcast(offset_df), on="__pid")
-        .withColumn(out_col, F.col("__run") + F.col("__offset"))
-        .drop("__pid", "__run", "__offset")
-    )
+from news_data_pipeline_spark.functions.ids import global_running_sum
 
 
 def pack_sequences(
@@ -106,7 +53,8 @@ def pack_sequences(
     * ``n_ctx`` — number of context windows spanned.
 
     Cost: one range shuffle + one broadcast join (see
-    ``global_running_sum``); everything else is codegen arithmetic.
+    ``functions.ids.global_running_sum``); everything else is codegen
+    arithmetic.
 
     Determinism contract: ``id_col`` must be unique and non-null.
     Duplicate ids (or >1 NULL id) tie on the full sort key, so their

@@ -1671,6 +1671,9 @@ def _pqr_frozen_artifacts(spark: SparkSession, sf_dir: str):
             (r["vec_id"], list(r["embedding"]))
             for r in emb.orderBy("vec_id").limit(16).collect()
         ]
+        if not cent_rows:
+            # no non-NULL vector: nothing to train on or to encode
+            return [], []
         residuals = pq_residuals(
             emb, spark.createDataFrame(cent_rows, cent_schema)
         )

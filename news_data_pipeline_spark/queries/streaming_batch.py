@@ -4,7 +4,7 @@ These are the batch twins of the Structured Streaming operators in
 ``news_data_pipeline_spark.streaming`` — Spark's ``window`` /
 ``session_window`` functions have identical semantics in batch and
 streaming, so the oracle validates the semantics here and the streaming
-tests (tests/test_streaming.py) validate the readStream/watermark
+tests (tests/test_streaming.py) validate the stream-source/watermark
 plumbing against these same results.
 
 The reference has no streaming at all (future work,
@@ -1438,6 +1438,27 @@ def cdc_apply_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- streamed sketch maintenance twins (round 8) ---------------------------
 
+def _landed_stream(
+    frame: DataFrame, key: str, root: str, n: int, part: int | None = None
+) -> DataFrame:
+    """Land ``frame`` under ``root/landing`` as one parquet file per
+    part ``key % n == i`` (only ``part`` when given) and open a stream
+    over every file landed there, one file per trigger: the arrival
+    pattern the streamed twins replay through their sinks."""
+    import os
+
+    landing = os.path.join(root, "landing")
+    for i in range(n) if part is None else [part]:
+        frame.where(F.col(key) % n == i).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(landing, f"f{i}"))
+    return (
+        frame.sparkSession.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(landing, "*"))
+    )
+
+
 _SK_DEPTH, _SK_WIDTH = 4, 256
 _SK_MELT = "\n        UNION ALL ".join(
     f"SELECT CAST({j} AS INT) AS row, b{j} AS bucket, n FROM tb"
@@ -1494,18 +1515,8 @@ def streamed_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     root = tempfile.mkdtemp(prefix="cms_stream_q_")
-    landing = os.path.join(root, "landing")
-    for i in range(3):
-        docs.where(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(landing, f"f{i}"))
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(landing, "*"))
-    )
     q = maintain_cms_sketch(
-        stream,
+        _landed_stream(docs, "doc_id", root, 3),
         id_col="doc_id",
         text_col="text",
         sketch_path=os.path.join(root, "sketch"),
@@ -1559,18 +1570,8 @@ def streamed_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.md5("text").alias("fp")
     )
     root = tempfile.mkdtemp(prefix="bloom_stream_q_")
-    landing = os.path.join(root, "landing")
-    for i in range(3):
-        fps.where(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(landing, f"f{i}"))
-    stream = (
-        spark.readStream.schema("doc_id bigint, fp string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(landing, "*"))
-    )
     q = maintain_bloom_filter(
-        stream,
+        _landed_stream(fps, "doc_id", root, 3),
         term_col="fp",
         filter_path=os.path.join(root, "filter"),
         checkpoint=os.path.join(root, "ckpt"),
@@ -1672,7 +1673,6 @@ def streamed_ingest_dedup_corpus(
             [], "doc_id bigint, lang string, source string"
         )
     root = tempfile.mkdtemp(prefix="ingest_dedup_q_")
-    landing = os.path.join(root, "landing")
     corpus_path = os.path.join(root, "corpus")
     # one sink call per arriving batch: the checkpoint carries ingest
     # state across calls, and ordering is by construction (a
@@ -1680,18 +1680,8 @@ def streamed_ingest_dedup_corpus(
     # mtime ordering was A/B'd in round 11 at 2.99 vs 3.12 s median —
     # within noise, so the shape that cannot misorder wins)
     for i in range(2):
-        docs.where(F.col("doc_id") % 2 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(landing, f"f{i}"))
-        stream = (
-            spark.readStream.schema(
-                "doc_id bigint, text string, lang string, source string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(landing, "*"))
-        )
         q = ingest_deduplicated(
-            stream,
+            _landed_stream(docs, "doc_id", root, 2, part=i),
             id_col="doc_id",
             text_col="text",
             corpus_path=corpus_path,
@@ -1755,18 +1745,8 @@ def streamed_sq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame([], "id bigint, j int, code int")
     bounds = sq_train(emb)
     root = tempfile.mkdtemp(prefix="sq_stream_q_")
-    landing = os.path.join(root, "landing")
-    for i in range(3):
-        emb.where(F.col("vec_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(landing, f"f{i}"))
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(landing, "*"))
-    )
     q = maintain_sq_codes(
-        stream,
+        _landed_stream(emb, "vec_id", root, 3),
         bounds,
         id_col="vec_id",
         vec_col="embedding",
@@ -1835,18 +1815,8 @@ def streamed_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     centroids, codebooks = _pqr_frozen_artifacts(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="pq_stream_q_")
-    landing = os.path.join(root, "landing")
-    for i in range(2):
-        emb.where(F.col("vec_id") % 2 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(landing, f"f{i}"))
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(landing, "*"))
-    )
     q = maintain_pq_codes(
-        stream,
+        _landed_stream(emb, "vec_id", root, 2),
         centroids,
         codebooks,
         id_col="vec_id",

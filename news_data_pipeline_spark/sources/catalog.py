@@ -138,42 +138,3 @@ def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
     """Expose every fixture as a temp view so ``spark.sql`` works too."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def read_layer(
-    spark: SparkSession,
-    path: str,
-    *,
-    fmt: str = "parquet",
-    merge_schema: bool = False,
-    require_success: bool = False,
-) -> DataFrame:
-    """Read a written layer back; ``merge_schema=True`` unions the
-    schemas of all files so layers whose shape evolved across appends
-    (new columns in later batches) read as one frame with nulls for
-    rows written before a column existed.
-
-    Schema evolution is the reference's declared future work
-    (``docs/pipeline_overview.md:161``) — implemented here via parquet
-    schema merging; Delta-enabled clusters get the same from
-    ``mergeSchema`` on the Delta reader. Merging reads every file
-    footer, so leave it off for stable-schema layers (the default).
-
-    ``require_success=True`` refuses directories without the
-    ``_SUCCESS`` marker — a writer that died mid-job leaves files but no
-    marker, and a plain read would silently return truncated data (the
-    parquet-layer stand-in for Delta's transaction-log guarantee).
-    """
-    if require_success:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/_SUCCESS")
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(p):
-            raise IOError(
-                f"layer at {path} has no _SUCCESS marker — refusing to read "
-                "a possibly partial write (pass require_success=False to force)"
-            )
-    reader = spark.read.format(fmt)
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.load(path)

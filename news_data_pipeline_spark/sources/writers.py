@@ -120,19 +120,43 @@ def read_layer(
     path: str,
     *,
     fmt: str | None = "parquet",
+    merge_schema: bool = False,
     require_success: bool = True,
 ) -> DataFrame:
-    """Writer-side alias of ``catalog.read_layer`` with the ``_SUCCESS``
-    gate ON by default — the paranoid default for layers this module's
-    writers produce (Delta gets the same guarantee from its transaction
-    log, ``_lib_dq_helpers.py:39-47``). ``fmt=None`` resolves via
-    ``default_layer_format``, mirroring ``write_layer`` so a
-    write/read pair under ``fmt=None`` always agrees on the format."""
-    from news_data_pipeline_spark.sources.catalog import read_layer as _read
+    """Read a written layer back.
 
+    ``require_success`` (on by default) refuses directories without the
+    ``_SUCCESS`` marker: a writer that died mid-job leaves files but no
+    marker, and a plain read would silently return truncated data (the
+    parquet-layer stand-in for Delta's transaction-log guarantee,
+    ``_lib_dq_helpers.py:39-47``). ``fmt=None`` resolves via
+    ``default_layer_format``, mirroring ``write_layer`` so a write/read
+    pair under ``fmt=None`` always agrees on the format.
+
+    ``merge_schema=True`` unions the schemas of all files, so a layer
+    whose shape evolved across appends (new columns in later batches)
+    reads as one frame with nulls for rows written before a column
+    existed. Schema evolution is the reference's declared future work
+    (``docs/pipeline_overview.md:161``); Delta-enabled clusters get the
+    same from ``mergeSchema`` on the Delta reader. Merging reads every
+    file footer, so leave it off for stable-schema layers (the
+    default).
+    """
     if fmt is None:
         fmt = default_layer_format(spark)
-    return _read(spark, path, fmt=fmt, require_success=require_success)
+    if require_success:
+        jvm = spark._jvm
+        p = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/_SUCCESS")
+        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+        if not fs.exists(p):
+            raise IOError(
+                f"layer at {path} has no _SUCCESS marker — refusing to read "
+                "a possibly partial write (pass require_success=False to force)"
+            )
+    reader = spark.read.format(fmt)
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    return reader.load(path)
 
 
 class VersionedLayer:

@@ -5,16 +5,25 @@ micro-batch is an ordinary DataFrame, so the same one-pass rule engine
 (``dq.run_dq``) splits it and both sides are written transactionally per
 batch — the streaming version of the reference's quarantine flow
 (``02:43-52``).
+
+Every sink starts through ``_start``. The partition sinks (DQ split,
+dedup ingest, and the sketch and code-table maintenance sinks) write
+each batch through ``_write_batch`` and read back through
+``_read_batches``, so replay safety and what an unwritten path reads
+as are decided in one place.
 """
 
 from __future__ import annotations
 
 import contextlib
 import datetime
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from news_data_pipeline_spark.dq.engine import (
     DQResult,
@@ -61,6 +70,78 @@ def _batch_cache(cached: DataFrame | DQResult) -> Iterator[None]:
         cached.unpersist()
 
 
+def _start(
+    stream: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    available_now: bool,
+    output_mode: str | None = None,
+) -> StreamingQuery:
+    """Start ``process`` as the stream's ``foreachBatch`` body on
+    ``checkpoint``; ``available_now`` drains the backlog, then stops."""
+    writer = stream.writeStream
+    if output_mode is not None:
+        writer = writer.outputMode(output_mode)
+    writer = writer.foreachBatch(process).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _write_batch(
+    batch: DataFrame | DQResult,
+    batch_id: int,
+    outputs: Callable[[], dict[str, DataFrame]],
+    *,
+    fmt: str = "parquet",
+) -> None:
+    """Write one micro-batch as its own ``batch_id=N`` partition of each
+    output path: the replay contract of every partition sink here.
+
+    ``foreachBatch`` alone is only at-least-once: a crash between a
+    write and the checkpoint commit replays the batch under the same
+    id. Each output therefore OVERWRITES ``path/batch_id=N``, so a
+    replay rewrites its own directory instead of appending duplicates
+    (or, for a sketch, double-counting), and readers scan the parent
+    path with ``batch_id`` as an ordinary partition column
+    (``_read_batches``). An empty batch writes nothing; ``outputs``
+    (``{path: frame}``) is built only for a non-empty one. ``batch``
+    may be a ``run_dq`` split, whose emptiness probe builds its cache.
+    """
+    if batch.isEmpty():
+        return
+    for path, frame in outputs().items():
+        write_layer(
+            frame, f"{path}/batch_id={batch_id}", mode="overwrite", fmt=fmt
+        )
+
+
+def _read_batches(
+    spark: SparkSession,
+    path: str,
+    empty_schema: StructType | str,
+    *,
+    fmt: str = "parquet",
+    skip_batch: int | None = None,
+) -> DataFrame:
+    """Every partition ``_write_batch`` wrote under ``path``, with
+    ``batch_id`` dropped (``skip_batch`` leaves that batch out). A path
+    no batch has written yet (empty stream, fresh deployment) reads as
+    an empty frame of ``empty_schema``, the schema the sink writes, not
+    as an ``AnalysisException``."""
+    try:
+        raw = spark.read.option("basePath", path).format(fmt).load(path)
+        # force schema resolution: an unwritten path must fail here
+        raw.schema
+    except AnalysisException:
+        return spark.createDataFrame([], empty_schema)
+    if skip_batch is not None:
+        raw = raw.where(F.col("batch_id") != skip_batch)
+    return raw.drop("batch_id")
+
+
 def split_to_silver_and_quarantine(
     stream: DataFrame,
     rules: list[Rule],
@@ -73,14 +154,8 @@ def split_to_silver_and_quarantine(
     available_now: bool = False,
 ) -> StreamingQuery:
     """Per-micro-batch DQ split: valid rows land under silver, violations
-    (with JSON payload + reasons) under the quarantine audit path.
-
-    Idempotence: foreachBatch alone is only at-least-once (a crash
-    between a write and the checkpoint commit replays the batch), so
-    each batch writes to its own ``batch_id=N`` hive partition with
-    OVERWRITE — a replayed batch rewrites the same directory instead of
-    appending duplicates. Readers scan the parent path and see
-    ``batch_id`` as an ordinary partition column.
+    (with JSON payload + reasons) under the quarantine audit path, each
+    batch as its own replay-safe partition (``_write_batch``).
 
     The annotated frame both sides read is cached per batch and sized
     by AQE, so a small batch writes one file per side even when a
@@ -91,36 +166,24 @@ def split_to_silver_and_quarantine(
         # Both split sides are consumed -> cache the annotated frame
         # once; the emptiness probe is the job that builds it.
         res = run_dq(batch, rules, cache=True)
-        with _batch_cache(res):
-            if res.isEmpty():
-                return
-            write_layer(
-                res.valid,
-                f"{silver_path}/batch_id={batch_id}",
-                mode="overwrite",
-                fmt=fmt,
-            )
-            processed_at = datetime.datetime.now(datetime.timezone.utc).strftime(
-                "%Y-%m-%d %H:%M:%S"
-            )
-            quarantined = to_quarantine_records(
-                res.quarantined,
-                source_table=source_table,
-                ingestion_time=processed_at,
-            )
-            write_layer(
-                quarantined,
-                f"{quarantine_path}/batch_id={batch_id}",
-                mode="overwrite",
-                fmt=fmt,
-            )
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        def sides() -> dict[str, DataFrame]:
+            processed_at = datetime.datetime.now(
+                datetime.timezone.utc
+            ).strftime("%Y-%m-%d %H:%M:%S")
+            return {
+                silver_path: res.valid,
+                quarantine_path: to_quarantine_records(
+                    res.quarantined,
+                    source_table=source_table,
+                    ingestion_time=processed_at,
+                ),
+            }
+
+        with _batch_cache(res):
+            _write_batch(res, batch_id, sides, fmt=fmt)
+
+    return _start(stream, _process, checkpoint, available_now)
 
 
 def publish_snapshots(
@@ -175,14 +238,7 @@ def publish_snapshots(
             min_age_seconds=vacuum_min_age_seconds,
         )
 
-    writer = (
-        aggregated.writeStream.outputMode("complete")
-        .foreachBatch(_publish)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(aggregated, _publish, checkpoint, available_now, "complete")
 
 
 def ingest_deduplicated(
@@ -211,17 +267,12 @@ def ingest_deduplicated(
     Bloom prefilter in front of the exact anti-join keeps the same rows
     and measured slower (SCALE.md "Retired paths").
 
-    Idempotence: a replayed batch (crash between write and checkpoint
-    commit) overwrites its own partition, and the corpus read EXCLUDES
-    the current ``batch_id`` — otherwise a replay would see its own
-    prior output as "corpus", flag every row duplicate, and overwrite
-    the partition with nothing. Reading the parent path with
-    ``basePath`` surfaces ``batch_id`` as an ordinary partition column,
-    so the exclusion is partition pruning, not a scan-and-filter.
+    Replay-safe per ``_write_batch``, and the corpus read EXCLUDES the
+    current ``batch_id``: otherwise a replay would see its own prior
+    output as "corpus", flag every row duplicate, and overwrite the
+    partition with nothing. The exclusion is partition pruning, not a
+    scan-and-filter.
     """
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import functions as F
-
     from news_data_pipeline_spark.operators.dedup import (
         exact_dedup_against_corpus,
         fingerprint_dedup,
@@ -237,29 +288,17 @@ def ingest_deduplicated(
         )
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        if not batch.head(1):
-            return
-        spark = batch.sparkSession
-        deduped = fingerprint_dedup(batch, text_col, id_col)
-        try:
-            corpus = (
-                spark.read.option("basePath", corpus_path)
-                .format(fmt)
-                .load(corpus_path)
-                .where(F.col("batch_id") != batch_id)
-                .drop("batch_id")
+        def survivors() -> dict[str, DataFrame]:
+            deduped = fingerprint_dedup(batch, text_col, id_col)
+            corpus = _read_batches(
+                batch.sparkSession,
+                corpus_path,
+                batch.schema,
+                fmt=fmt,
+                skip_batch=batch_id,
             )
-            # force schema resolution now: an empty/first-run path must
-            # fall into the no-corpus branch, not fail mid-probe
-            corpus.schema
-            have_corpus = True
-        except AnalysisException:
-            have_corpus = False
-        if have_corpus:
             if method == "exact":
-                deduped = exact_dedup_against_corpus(
-                    deduped, corpus, text_col
-                )
+                deduped = exact_dedup_against_corpus(deduped, corpus, text_col)
             else:
                 deduped = lsh_dedup_against_corpus(
                     deduped,
@@ -270,19 +309,11 @@ def ingest_deduplicated(
                     bands=bands,
                     rows_per_band=rows_per_band,
                 )
-        write_layer(
-            deduped,
-            f"{corpus_path}/batch_id={batch_id}",
-            mode="overwrite",
-            fmt=fmt,
-        )
+            return {corpus_path: deduped}
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        _write_batch(batch, batch_id, survivors, fmt=fmt)
+
+    return _start(stream, _process, checkpoint, available_now)
 
 
 def run_available_now(
@@ -324,7 +355,6 @@ def apply_cdc_batch(
     query) exercises the identical code path the streaming sink does.
     """
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from news_data_pipeline_spark.operators.upsert import merge_upsert
 
@@ -414,14 +444,7 @@ def apply_cdc(
             delete_value=delete_value,
         )
 
-    writer = (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _process, checkpoint, available_now, "update")
 
 
 def maintain_cms_sketch(
@@ -433,7 +456,6 @@ def maintain_cms_sketch(
     checkpoint: str,
     depth: int = 4,
     width: int = 256,
-    fmt: str = "parquet",
     available_now: bool = False,
 ) -> StreamingQuery:
     """Maintain a count-min token sketch over a document stream — the
@@ -442,46 +464,36 @@ def maintain_cms_sketch(
     contributes its own constant-size sketch, and the current corpus
     sketch is just the counter-sum of all of them.
 
-    Each batch writes ITS OWN sketch to a ``batch_id=N`` partition
-    (``depth * width`` rows at most, regardless of batch size), so a
-    replayed batch (crash between write and checkpoint commit)
-    overwrites its own partition instead of double-counting — the same
-    idempotence contract as ``ingest_deduplicated``. Readers merge with
-    ``read_cms_sketch``; a compaction job may fold old partitions into
-    one at any time without changing any estimate, because counter
+    Each batch writes ITS OWN sketch (``depth * width`` rows at most,
+    regardless of batch size) as a replay-safe partition
+    (``_write_batch``), so a replay cannot double-count. Readers merge
+    with ``read_cms_sketch``; a compaction job may fold old partitions
+    into one at any time without changing any estimate, because counter
     addition is associative.
     """
-    from pyspark.sql import functions as F
-
     from news_data_pipeline_spark.operators.dedup import word_shingles
     from news_data_pipeline_spark.operators.sketches import cms_sketch
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        if not batch.head(1):
-            return
-        tokens = word_shingles(
-            batch, id_col, text_col, n=1, distinct=False
-        ).withColumnRenamed("shingle", "token")
-        counts = tokens.groupBy("token").agg(
-            F.count(F.lit(1)).cast("long").alias("n")
-        )
-        sketch = cms_sketch(counts, "token", "n", depth=depth, width=width)
-        write_layer(
-            sketch,
-            f"{sketch_path}/batch_id={batch_id}",
-            mode="overwrite",
-            fmt=fmt,
-        )
+        def sketch() -> dict[str, DataFrame]:
+            tokens = word_shingles(
+                batch, id_col, text_col, n=1, distinct=False
+            ).withColumnRenamed("shingle", "token")
+            counts = tokens.groupBy("token").agg(
+                F.count(F.lit(1)).cast("long").alias("n")
+            )
+            return {
+                sketch_path: cms_sketch(
+                    counts, "token", "n", depth=depth, width=width
+                )
+            }
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        _write_batch(batch, batch_id, sketch)
+
+    return _start(stream, _process, checkpoint, available_now)
 
 
-def read_cms_sketch(spark, sketch_path: str, *, fmt: str = "parquet"):
+def read_cms_sketch(spark, sketch_path: str):
     """Merge every per-batch sketch partition into the current corpus
     sketch: one groupBy-sum over at most ``n_batches * depth * width``
     rows. Point-query it with ``operators.sketches.cms_estimates``.
@@ -490,20 +502,9 @@ def read_cms_sketch(spark, sketch_path: str, *, fmt: str = "parquet"):
     deployment) reads as the EMPTY sketch — the monoid identity — not
     an error: every estimate against it is 0, which is the true count
     of everything an empty stream has seen."""
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import functions as F
-
-    try:
-        raw = (
-            spark.read.option("basePath", sketch_path)
-            .format(fmt)
-            .load(sketch_path)
-        )
-        raw.schema
-    except AnalysisException:
-        return spark.createDataFrame(
-            [], "row int, bucket bigint, counter bigint"
-        )
+    raw = _read_batches(
+        spark, sketch_path, "row int, bucket bigint, counter bigint"
+    )
     return raw.groupBy("row", "bucket").agg(
         F.sum("counter").cast("long").alias("counter")
     )
@@ -517,7 +518,6 @@ def maintain_bloom_filter(
     checkpoint: str,
     num_bits: int = 4096,
     num_hashes: int = 4,
-    fmt: str = "parquet",
     available_now: bool = False,
 ) -> StreamingQuery:
     """Maintain a Bloom membership filter over a stream — the
@@ -525,37 +525,30 @@ def maintain_bloom_filter(
     filter with ``operators.sketches.bloom_probe``; it is not a dedup
     access path (SCALE.md "Retired paths").
 
-    Each batch writes ITS OWN bit set to a ``batch_id=N`` partition
-    (at most ``num_bits`` rows regardless of batch size); a replayed
-    batch overwrites its partition, and since the merge is
-    union+distinct (bit-OR — idempotent, unlike CMS counter addition),
-    even a duplicated partition could never corrupt the filter. A
-    compaction job may fold old partitions into one at any time.
+    Each batch writes ITS OWN bit set (at most ``num_bits`` rows
+    regardless of batch size) as a replay-safe partition
+    (``_write_batch``); since the merge is union+distinct (bit-OR —
+    idempotent, unlike CMS counter addition), even a duplicated
+    partition could never corrupt the filter. A compaction job may
+    fold old partitions into one at any time.
     """
     from news_data_pipeline_spark.operators.sketches import bloom_bits
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        if not batch.head(1):
-            return
-        bits = bloom_bits(
-            batch, term_col, num_bits=num_bits, num_hashes=num_hashes
-        )
-        write_layer(
-            bits,
-            f"{filter_path}/batch_id={batch_id}",
-            mode="overwrite",
-            fmt=fmt,
+        _write_batch(
+            batch,
+            batch_id,
+            lambda: {
+                filter_path: bloom_bits(
+                    batch, term_col, num_bits=num_bits, num_hashes=num_hashes
+                )
+            },
         )
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _process, checkpoint, available_now)
 
 
-def read_bloom_filter(spark, filter_path: str, *, fmt: str = "parquet"):
+def read_bloom_filter(spark, filter_path: str):
     """Merge every per-batch bit partition into the current corpus
     filter: one distinct over at most ``n_batches * num_bits`` rows.
     Probe it with ``operators.sketches.bloom_probe``.
@@ -563,18 +556,9 @@ def read_bloom_filter(spark, filter_path: str, *, fmt: str = "parquet"):
     A filter path no batch has written yet reads as the EMPTY filter
     (no bits set — every probe reports definitely-not-a-member, which
     is true of an empty corpus), not an error."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        raw = (
-            spark.read.option("basePath", filter_path)
-            .format(fmt)
-            .load(filter_path)
-        )
-        raw.schema
-    except AnalysisException:
-        return spark.createDataFrame([], "bit bigint")
-    return raw.select("bit").distinct()
+    return _read_batches(spark, filter_path, "bit bigint").select(
+        "bit"
+    ).distinct()
 
 
 def maintain_sq_codes(
@@ -585,7 +569,6 @@ def maintain_sq_codes(
     vec_col: str,
     codes_path: str,
     checkpoint: str,
-    fmt: str = "parquet",
     available_now: bool = False,
 ) -> StreamingQuery:
     """Maintain an SQ8 code table over a vector stream — the
@@ -593,33 +576,28 @@ def maintain_sq_codes(
     family: each micro-batch encodes its vectors under the FROZEN
     ``bounds`` artifact (operators.sq.sq_train output — frozen is what
     makes per-batch codes mergeable; re-training bounds per batch
-    would silently re-scale history) and writes its own ``batch_id=N``
-    partition. A replayed batch overwrites its partition — the same
-    idempotence contract as every maintenance sink here. Readers merge
-    with ``read_sq_codes``; re-quantize from raw vectors if the bounds
+    would silently re-scale history) and writes them as its own
+    replay-safe partition (``_write_batch``). Readers merge with
+    ``read_sq_codes``; re-quantize from raw vectors if the bounds
     artifact is ever retrained.
     """
     from news_data_pipeline_spark.operators.sq import sq_encode
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        if not batch.head(1):
-            return
-        write_layer(
-            sq_encode(batch, bounds, id_col=id_col, vec_col=vec_col),
-            f"{codes_path}/batch_id={batch_id}",
-            mode="overwrite",
-            fmt=fmt,
+        _write_batch(
+            batch,
+            batch_id,
+            lambda: {
+                codes_path: sq_encode(
+                    batch, bounds, id_col=id_col, vec_col=vec_col
+                )
+            },
         )
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _process, checkpoint, available_now)
 
 
-def read_sq_codes(spark, codes_path: str, *, fmt: str = "parquet"):
+def read_sq_codes(spark, codes_path: str):
     """The current merged code table: every batch partition, batch_id
     dropped (each vector id appears in exactly one batch, so the union
     IS the table — no re-aggregation needed, unlike the CMS counters).
@@ -628,18 +606,9 @@ def read_sq_codes(spark, codes_path: str, *, fmt: str = "parquet"):
     posexplode's position; ``id`` takes the caller's id type, assumed
     bigint here), so a union with freshly encoded codes neither fails
     nor silently widens on the empty branch."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        raw = (
-            spark.read.option("basePath", codes_path)
-            .format(fmt)
-            .load(codes_path)
-        )
-        raw.schema
-    except AnalysisException:
-        return spark.createDataFrame([], "id bigint, j int, code int")
-    return raw.select("id", "j", "code")
+    return _read_batches(
+        spark, codes_path, "id bigint, j int, code int"
+    ).select("id", "j", "code")
 
 
 def maintain_pq_codes(
@@ -652,7 +621,6 @@ def maintain_pq_codes(
     codes_path: str,
     checkpoint: str,
     sub_dim: int = 16,
-    fmt: str = "parquet",
     available_now: bool = False,
 ) -> StreamingQuery:
     """Maintain a residual IVF×PQ code table over a vector stream —
@@ -662,45 +630,38 @@ def maintain_pq_codes(
     codebooks) artifacts (``operators.pq.pq_residual_encode`` —
     frozen is what makes per-batch codes mergeable; re-training either
     artifact per batch would silently re-quantize history against a
-    different geometry) and writes its own ``batch_id=N`` partition,
-    cell id stored with every code. A replayed batch overwrites its
-    partition — the same idempotence contract as every maintenance
-    sink here. Readers merge with ``read_pq_codes``; re-encode from
-    raw vectors if either artifact is ever retrained (an explicit
-    re-index, exactly as in FAISS)."""
+    different geometry) and writes them, cell id stored with every
+    code, as its own replay-safe partition (``_write_batch``). Readers
+    merge with ``read_pq_codes``; re-encode from raw vectors if either
+    artifact is ever retrained (an explicit re-index, exactly as in
+    FAISS)."""
     from news_data_pipeline_spark.operators.pq import pq_residual_encode
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        if not batch.head(1):
-            return
-        write_layer(
-            # rebalance before the shard write (guide §6): the r14
-            # row-local encode is narrow, so the shard would otherwise
-            # inherit the batch's input partitioning — tiny files the
-            # merged reader then pays per probe; the hint coalesces to
-            # advisory-sized outputs at any batch size
-            pq_residual_encode(
-                batch,
-                centroids,
-                codebooks,
-                id_col=id_col,
-                vec_col=vec_col,
-                sub_dim=sub_dim,
-            ).hint("rebalance"),
-            f"{codes_path}/batch_id={batch_id}",
-            mode="overwrite",
-            fmt=fmt,
+        # rebalance before the shard write (guide §6): the r14
+        # row-local encode is narrow, so the shard would otherwise
+        # inherit the batch's input partitioning — tiny files the
+        # merged reader then pays per probe; the hint coalesces to
+        # advisory-sized outputs at any batch size
+        _write_batch(
+            batch,
+            batch_id,
+            lambda: {
+                codes_path: pq_residual_encode(
+                    batch,
+                    centroids,
+                    codebooks,
+                    id_col=id_col,
+                    vec_col=vec_col,
+                    sub_dim=sub_dim,
+                ).hint("rebalance")
+            },
         )
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _process, checkpoint, available_now)
 
 
-def read_pq_codes(spark, codes_path: str, *, fmt: str = "parquet"):
+def read_pq_codes(spark, codes_path: str):
     """The current merged residual-code table: every batch partition,
     batch_id dropped (each vector id appears in exactly one batch, so
     the union IS the table — no re-aggregation needed). An unwritten
@@ -708,17 +669,6 @@ def read_pq_codes(spark, codes_path: str, *, fmt: str = "parquet"):
     ``pq_residual_encode`` actually writes (``sub``/``code`` INT,
     ``cid`` from the centroid frame's id type — bigint here, matching
     the first-``nlist``-by-id convention; ``id`` assumed bigint)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        raw = (
-            spark.read.option("basePath", codes_path)
-            .format(fmt)
-            .load(codes_path)
-        )
-        raw.schema
-    except AnalysisException:
-        return spark.createDataFrame(
-            [], "id bigint, sub int, code int, cid bigint"
-        )
-    return raw.select("id", "sub", "code", "cid")
+    return _read_batches(
+        spark, codes_path, "id bigint, sub int, code int, cid bigint"
+    ).select("id", "sub", "code", "cid")

@@ -169,6 +169,13 @@ def test_global_running_sum_matches_single_window(spark):
         for r in df.withColumn("rs", F.sum("v").over(w)).collect()
     }
     assert got == want
+    # integral values keep their type: the offsets are bigint, not double
+    longs = spark.range(50).select("id", (F.col("id") % 7).alias("v"))
+    run = global_running_sum(longs, "id", "v", num_partitions=3)
+    assert dict(run.dtypes)["running_sum"] == "bigint"
+    assert run.agg(F.max("running_sum")).first()[0] == sum(
+        i % 7 for i in range(50)
+    )
     # empty input
     empty = spark.createDataFrame([], "id long, v double")
     assert global_running_sum(empty, "id", "v").count() == 0

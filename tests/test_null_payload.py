@@ -71,3 +71,25 @@ def test_ann_recall_hits_are_counts_on_null_vectors(
     rows = entry.queries()[name](spark, null_payload_sf_dir).collect()
     assert [r["nprobe"] for r in sorted(rows)] == [1, 2, 4, 8, 16]
     assert all(r["n_hits"] == 0 for r in rows)
+
+
+def test_pq_ivf_residual_topk_skips_training_without_vectors(
+    spark, tmp_path, monkeypatch
+):
+    # with no non-NULL embedding the frozen artifacts are empty: the
+    # residual-PQ trainer must not run for a 0-row answer
+    from news_data_pipeline_spark.operators import pq
+    from news_data_pipeline_spark.queries.corpusops import (
+        pq_ivf_residual_topk,
+    )
+
+    spark.createDataFrame(
+        [(i, None, i % 3) for i in range(20)],
+        "vec_id bigint, embedding array<float>, label int",
+    ).coalesce(1).write.parquet(str(tmp_path / "embeddings.parquet"))
+
+    def no_training(*args, **kwargs):
+        raise AssertionError("pq_train ran on an empty frame")
+
+    monkeypatch.setattr(pq, "pq_train", no_training)
+    assert pq_ivf_residual_topk(spark, str(tmp_path)).count() == 0

@@ -5,10 +5,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from news_data_pipeline_spark.operators.packing import (
-    global_running_sum,
-    pack_sequences,
-)
+from news_data_pipeline_spark.functions.ids import global_running_sum
+from news_data_pipeline_spark.operators.packing import pack_sequences
 from news_data_pipeline_spark.operators.sampling import mixture_sample
 
 

@@ -213,8 +213,7 @@ def test_compaction_reduces_file_count(spark, tmp_path):
 
 
 def test_schema_evolution_read(spark, tmp_path):
-    from news_data_pipeline_spark.sources.catalog import read_layer
-    from news_data_pipeline_spark.sources.writers import write_layer
+    from news_data_pipeline_spark.sources.writers import read_layer, write_layer
 
     path = str(tmp_path / "evolving")
     v1 = spark.createDataFrame([(1, "a")], ["id", "title"])

@@ -567,6 +567,135 @@ def test_ingest_deduplicated_replay_is_idempotent(spark, tmp_path, method):
     assert (ckpt / "commits" / str(newest)).exists()
 
 
+@pytest.mark.parametrize("sink", ["cms", "bloom", "sq", "pq", "dq_split"])
+def test_partition_sink_replay_is_idempotent(spark, tmp_path, sink):
+    """Every per-batch partition sink survives a replay: a batch re-run
+    after a crash between its write and its checkpoint commit
+    overwrites its own ``batch_id`` partition, so the merged read is
+    unchanged (sketch counters are not doubled) and the commit is
+    written again."""
+    import os
+
+    from news_data_pipeline_spark.operators import pq, sq
+    from news_data_pipeline_spark.streaming import sinks
+
+    out = str(tmp_path / "out")
+    docs = "doc_id long, text string"
+    texts = [
+        (1, "alpha alpha beta"),
+        (2, "beta gamma"),
+        (3, "alpha delta delta"),
+        (4, "gamma gamma gamma"),
+    ]
+    vecs = "vec_id long, embedding array<double>"
+    vec_rows = [
+        (i, [float((i * 7 + d * 3) % 11) for d in range(4)]) for i in range(8)
+    ]
+    if sink == "cms":
+        schema, rows = docs, texts
+
+        def start(stream, ckpt):
+            return sinks.maintain_cms_sketch(
+                stream, id_col="doc_id", text_col="text", sketch_path=out,
+                checkpoint=ckpt, depth=4, width=64, available_now=True,
+            )
+
+        def read():
+            return sinks.read_cms_sketch(spark, out)
+    elif sink == "bloom":
+        schema, rows = "fp string", [(t,) for _, t in texts]
+
+        def start(stream, ckpt):
+            return sinks.maintain_bloom_filter(
+                stream, term_col="fp", filter_path=out, checkpoint=ckpt,
+                num_bits=64, num_hashes=3, available_now=True,
+            )
+
+        def read():
+            return sinks.read_bloom_filter(spark, out)
+    elif sink == "sq":
+        schema, rows = vecs, vec_rows
+        bounds = sq.sq_train(spark.createDataFrame(vec_rows, vecs))
+
+        def start(stream, ckpt):
+            return sinks.maintain_sq_codes(
+                stream, bounds, id_col="vec_id", vec_col="embedding",
+                codes_path=out, checkpoint=ckpt, available_now=True,
+            )
+
+        def read():
+            return sinks.read_sq_codes(spark, out)
+    elif sink == "pq":
+        schema, rows = vecs, vec_rows
+        every = spark.createDataFrame(vec_rows, vecs)
+        cent = every.orderBy("vec_id").limit(2).select(
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("c_vec")
+        )
+        cb = pq.pq_train(
+            pq.pq_residuals(every, cent), id_col="id", vec_col="rvec",
+            m=2, k=4, sub_dim=2, iters=1,
+        )
+
+        def start(stream, ckpt):
+            return sinks.maintain_pq_codes(
+                stream, cent, cb, id_col="vec_id", vec_col="embedding",
+                sub_dim=2, codes_path=out, checkpoint=ckpt,
+                available_now=True,
+            )
+
+        def read():
+            return sinks.read_pq_codes(spark, out)
+    else:
+        schema, rows = EVENT_SCHEMA, EVENTS
+        out = str(tmp_path / "silver")
+
+        def start(stream, ckpt):
+            return sinks.split_to_silver_and_quarantine(
+                stream, [NotNull("user_id")], silver_path=out,
+                quarantine_path=str(tmp_path / "quarantine"),
+                checkpoint=ckpt, available_now=True,
+            )
+
+        def read():
+            # a replay stamps a new ingestion time on its quarantine rows
+            quarantine = spark.read.parquet(str(tmp_path / "quarantine"))
+            return spark.read.parquet(out).unionByName(
+                quarantine.drop("ingestion_time"), allowMissingColumns=True
+            )
+
+    landing = tmp_path / "landing"
+    half = len(rows) // 2
+    for name, part in (("f1", rows[:half]), ("f2", rows[half:])):
+        spark.createDataFrame(part, schema).coalesce(1).write.parquet(
+            str(landing / name)
+        )
+    ckpt = tmp_path / "ckpt"
+
+    def run():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(landing / "*"))
+        )
+        start(stream, str(ckpt)).awaitTermination()
+        return sorted(map(str, read().collect())), sorted(os.listdir(out))
+
+    first = run()
+    assert first[1] == ["batch_id=0", "batch_id=1"]
+    # drop the newest commit: the restarted query re-runs batch 1
+    newest = max(int(n) for n in os.listdir(ckpt / "commits") if n.isdigit())
+    assert newest == 1
+    os.remove(ckpt / "commits" / str(newest))
+    os.remove(ckpt / "commits" / f".{newest}.crc")
+    assert run() == first
+    assert (ckpt / "commits" / str(newest)).exists()
+    if sink == "cms":
+        # each hash row counts every token exactly once
+        n_tokens = sum(len(t.split()) for _, t in texts)
+        for r in read().groupBy("row").agg(F.sum("counter")).collect():
+            assert r[1] == n_tokens
+
+
 def test_user_event_islands_model(spark):
     """Gaps-and-islands vs a driver-side model over sf0.001 events."""
     import pandas as pd

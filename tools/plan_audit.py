@@ -2,7 +2,10 @@
 
 Compiles (never executes, except operators whose construction runs
 eager checkpoints) every registered query at sf0.001 and extracts the
-scale-relevant plan facts:
+scale-relevant plan facts. Each query is constructed twice and the
+second frame is audited: a query served from a build-once artifact
+cache plans its build on the first call and its replay on every later
+one.
 
 * exchanges (shuffles) and whether any is a single-partition funnel
 * join strategies (broadcast-hash vs sort-merge vs nested-loop)
@@ -65,6 +68,7 @@ KNOWN_BNLJ = {
     "tfidf_cosine_pairs": "1-row doc-count broadcast into idf; x4 because the weights subtree (which carries it) recurs under norms and both posting sides",
     "bpe_word_encodings": "x6 = one 1-row merge-pair broadcast per replayed rank (merges.where(rank==k) over the NUM_MERGES-row local artifact; apply_pair contract)",
     "bpe_symbol_vocab": "x6 = one 1-row merge-pair broadcast per replayed rank (same apply_merges chain as bpe_word_encodings)",
+    "bpe_document_token_counts": "x6 = one 1-row merge-pair broadcast per replayed rank (the apply_merges chain of bpe_word_encodings over the cached merge table); its 12 exchanges are those 6 broadcasts + the broadcast per-(doc, word) counts + 2 round-robin fan-outs of the two documents scans + the word hash the merge windows reuse + the (doc, word) count hash + the per-doc sum hash",
     "pq_partitioned_cell_scan": "x3 = nlist=16 centroid frame into the 5-query probe assign, twice (the main plan and the dynamic-pruning subquery that prunes the cid-partitioned code table to the probed cells) + one-row codebook array (one struct per (sub, cid), a local relation under the bounded-codebook contract) into the 5-query LUT; the corpus-side assign and encode ran once at artifact build",
     "ann_recall_nprobe_curve": "x5 = 10-query broadcast into the exact arm + the nlist=16 one-row centroid array into the corpus cell assign, twice (candidate scoring and the column-pruned cell-size table) + 10 queries x nlist=16 centroid frame in the ranked probe assign, twice (hits arm and vectors-read arm) — every side contract-bounded, output 5 rows",
     "ann_recall_trained_curve": "x5 = same decomposition as ann_recall_nprobe_curve (the trained centroids are a collected nlist=16 literal, so every broadcast side stays contract-bounded)",
@@ -137,6 +141,9 @@ def ts_residual_joins(df) -> tuple[int, int]:
 
 
 def audit(spark, name: str, fn) -> dict:
+    # The first call of a cache-served query builds its artifact; every
+    # later call in the session runs the replay plan, so audit that one.
+    fn(spark, SF_DIR)
     df = fn(spark, SF_DIR)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
