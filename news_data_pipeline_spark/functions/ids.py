@@ -34,11 +34,6 @@ def surrogate_key(*cols: Column | str, algo: str = "md5") -> Column:
     raise ValueError(f"unknown algo: {algo}")
 
 
-def monotonic_row_id() -> Column:
-    """Partition-local monotonic id — unique, not dense, no shuffle."""
-    return F.monotonically_increasing_id()
-
-
 def global_row_number(
     df,
     order_by,

@@ -161,16 +161,6 @@ def punct_ratio(col: Column) -> Column:
     )
 
 
-def stopword_ratio(col: Column) -> Column:
-    all_stops = tuple(w for ws in LANG_MARKERS.values() for w in ws)
-    # settled integer-ratio round (see language_score)
-    return settled_round(
-        _word_matches(col, all_stops)
-        / F.greatest(word_count(col), F.lit(1)).cast("double"),
-        4,
-    )
-
-
 def quality_score(col: Column) -> Column:
     """Composite [0,1] quality heuristic: length band + low punctuation.
 

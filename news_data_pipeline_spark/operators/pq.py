@@ -371,63 +371,73 @@ def _train_on_vectors(
             F.col("x").alias("value"),
         )
     )
-    schema = "sub int, cid int, j int, value double"
     for _ in range(iters):
-        cb1 = _codebook_struct(cb)
-        # one narrow pass: explode components WITH the row-local code
-        # attached (the exploded form joined comp x assigned on
-        # (id, sub) — a corpus-sized shuffle both sides)
-        coded = (
-            vecs.join(F.broadcast(cb1), how="cross")
-            .select("v", _codes_array(sub_dim).alias("__codes"))
-            .select(F.posexplode("v").alias("p", "x"), "__codes")
-            .select(
-                F.floor(F.col("p") / sub_dim).cast("int").alias("sub"),
-                (F.col("p") % sub_dim + 1).alias("j"),
-                "x",
-                "__codes",
-            )
-            .withColumn(
-                "cid",
-                F.element_at(
-                    F.filter(
-                        F.col("__codes"),
-                        lambda s: s["sub"] == F.col("sub"),
-                    ),
-                    1,
-                )["code"],
-            )
-            .where(F.col("cid").isNotNull())
-        )
-        means = coded.groupBy("sub", "cid", "j").agg(
-            # order-free mean: 10dp settled components, exact sum —
-            # count includes null-component rows exactly like the
-            # joined form's COUNT(1) did
-            settled_round(
-                F.sum(settled_units(F.col("x"), 10))
-                / 1e10
-                / F.count(F.lit(1)),
-                6,
-            ).alias("value")
-        )
-        # empty cells keep their previous centroid; one bounded collect
-        # per iteration (k*m*sub_dim rows — the module's driver-side
-        # contract), same as the exploded form
-        cb = (
-            cb.withColumnRenamed("value", "__prev")
-            .join(means, on=["sub", "cid", "j"], how="left")
-            .select(
-                "sub",
-                "cid",
-                "j",
-                F.coalesce(F.col("value"), F.col("__prev")).alias("value"),
-            )
-        )
-        rows = [
-            (r["sub"], r["cid"], r["j"], r["value"]) for r in cb.collect()
-        ]
-        cb = _local_codebook(spark, rows, schema)
+        cb1 = _codebook_struct(cb)  # the first call collects the seeds
+        if not getattr(cb, "_ndps_cb_rows", True):
+            # no seed (no non-NULL vector with id < k): Lloyd keeps an
+            # empty codebook empty, so no iteration needs to run
+            return _local_codebook(spark, [])
+        cb = _lloyd_step(vecs, cb, cb1, sub_dim)
     return cb
+
+
+def _lloyd_step(
+    vecs: DataFrame, cb: DataFrame, cb1: DataFrame, sub_dim: int
+) -> DataFrame:
+    """One Lloyd iteration of ``_train_on_vectors``: the codebook ``cb``
+    (``cb1`` is its one-row broadcast form) re-meaned over the
+    row-local assignments of ``vecs``, returned as a local codebook."""
+    # one narrow pass: explode components WITH the row-local code
+    # attached (the exploded form joined comp x assigned on
+    # (id, sub) — a corpus-sized shuffle both sides)
+    coded = (
+        vecs.join(F.broadcast(cb1), how="cross")
+        .select("v", _codes_array(sub_dim).alias("__codes"))
+        .select(F.posexplode("v").alias("p", "x"), "__codes")
+        .select(
+            F.floor(F.col("p") / sub_dim).cast("int").alias("sub"),
+            (F.col("p") % sub_dim + 1).alias("j"),
+            "x",
+            "__codes",
+        )
+        .withColumn(
+            "cid",
+            F.element_at(
+                F.filter(
+                    F.col("__codes"),
+                    lambda s: s["sub"] == F.col("sub"),
+                ),
+                1,
+            )["code"],
+        )
+        .where(F.col("cid").isNotNull())
+    )
+    means = coded.groupBy("sub", "cid", "j").agg(
+        # order-free mean: 10dp settled components, exact sum —
+        # count includes null-component rows exactly like the
+        # joined form's COUNT(1) did
+        settled_round(
+            F.sum(settled_units(F.col("x"), 10))
+            / 1e10
+            / F.count(F.lit(1)),
+            6,
+        ).alias("value")
+    )
+    # empty cells keep their previous centroid; one bounded collect
+    # per iteration (k*m*sub_dim rows — the module's driver-side
+    # contract), same as the exploded form
+    cb = (
+        cb.withColumnRenamed("value", "__prev")
+        .join(means, on=["sub", "cid", "j"], how="left")
+        .select(
+            "sub",
+            "cid",
+            "j",
+            F.coalesce(F.col("value"), F.col("__prev")).alias("value"),
+        )
+    )
+    rows = [(r["sub"], r["cid"], r["j"], r["value"]) for r in cb.collect()]
+    return _local_codebook(vecs.sparkSession, rows)
 
 
 def pq_encode(

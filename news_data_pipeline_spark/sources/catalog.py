@@ -132,9 +132,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every fixture as a temp view so ``spark.sql`` works too."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -10,20 +10,13 @@ line corrupt for type mismatches, missing fields, AND extra fields
 delimiters parse correctly — so the quarantine boundary is the CSV
 grammar itself, not a naive split.
 
-Reads go through a TEXT scan + ``from_csv`` expression rather than the
-CSV file source, for the same reason as ``read_jsonl``: the file
-source forbids plans referencing only its internal corrupt column
+Reads go through the text scan and the parse-and-quarantine core of
+``read_jsonl`` (``jsonl._parse_lines``, which also drops blank lines)
+with a ``from_csv`` expression, rather than the CSV file source: the
+file source forbids plans referencing only its internal corrupt column
 (SPARK-26243), which breaks exactly the quarantine queries this reader
 exists for. The text scan still splits, prunes, and parallelizes like
 any file source, and the parse is JVM-side Univocity either way.
-
-Relationship to ``sources/files.py::read_csv_with_quarantine``: that is
-the file-source fast path (PERMISSIVE CSV source, corrupt rows kept by
-carrying the typed columns alongside — the SPARK-26243 workaround).
-This module is the expression-parse path, exactly as ``jsonl.py`` is
-for ``read_json_with_quarantine``: use it when the plan touches ONLY
-the quarantine column, or for the bounded-shard ``write_csv`` the file
-path has no twin for.
 
 Headers: a text scan has no per-file "first line" notion, so
 ``skip_header=True`` drops lines that EXACTLY match the canonical
@@ -37,9 +30,14 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
-from news_data_pipeline_spark.sources.jsonl import CORRUPT_COL, _as_struct
+from news_data_pipeline_spark.sources.jsonl import (
+    _as_struct,
+    _parse_lines,
+    _read_lines,
+)
+from news_data_pipeline_spark.sources.writers import _shard_writer
 
 
 def parse_csv_lines(
@@ -55,36 +53,13 @@ def parse_csv_lines(
     value column, a constructed frame) get the identical quarantine
     grammar as file reads — one parser definition, one corrupt taxonomy.
     """
-    spark = lines.sparkSession
-    struct = _as_struct(spark, schema)
-    if CORRUPT_COL in struct.fieldNames():
-        raise ValueError(
-            f"schema must not declare {CORRUPT_COL!r}; it is appended "
-            "automatically"
-        )
-    with_corrupt = StructType(
-        list(struct.fields) + [StructField(CORRUPT_COL, StringType(), True)]
-    )
-    parsed = lines.select(
-        F.from_csv(
-            F.col(value_col),
-            with_corrupt.simpleString(),
-            {
-                "mode": "PERMISSIVE",
-                "columnNameOfCorruptRecord": CORRUPT_COL,
-                "sep": delimiter,
-            },
-        ).alias("__row"),
-        F.col(value_col).alias("__raw"),
-    )
-    return parsed.select(
-        *[F.col(f"__row.{f.name}") for f in struct.fields],
-        # a blank/unparseable line nulls the whole struct; both that and
-        # the parser-flagged corrupt cases quarantine the RAW line
-        F.when(
-            F.col(f"__row.{CORRUPT_COL}").isNotNull() | F.col("__row").isNull(),
-            F.col("__raw"),
-        ).alias(CORRUPT_COL),
+    return _parse_lines(
+        lines,
+        _as_struct(lines.sparkSession, schema),
+        lambda raw, struct, options: F.from_csv(
+            raw, struct.simpleString(), {**options, "sep": delimiter}
+        ),
+        value_col,
     )
 
 
@@ -107,11 +82,7 @@ def read_csv(
     stream produce identical rows per file.
     """
     struct = _as_struct(spark, schema)
-    lines = (
-        spark.readStream.format("text").load(path)
-        if streaming
-        else spark.read.text(path)
-    )
+    lines = _read_lines(spark, path, streaming)
     if skip_header:
         header = delimiter.join(f.name for f in struct.fields)
         lines = lines.where(F.col("value") != F.lit(header))
@@ -132,15 +103,6 @@ def write_csv(
     rolls files inside each task — no extra shuffle). Same compression
     caveat as ``write_jsonl``: gzip is not splittable; leave ``None``
     when the next scan must parallelize per file."""
-    writer = df.write.mode(mode).option("sep", delimiter).option(
-        "header", str(header).lower()
-    )
-    if max_records_per_file is not None:
-        if max_records_per_file < 1:
-            raise ValueError(
-                f"max_records_per_file must be >= 1, got {max_records_per_file}"
-            )
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    if compression is not None:
-        writer = writer.option("compression", compression)
-    writer.csv(path)
+    _shard_writer(df, mode, max_records_per_file, compression).option(
+        "sep", delimiter
+    ).option("header", str(header).lower()).csv(path)

@@ -1,5 +1,5 @@
-"""JSONL corpus interchange: declared-schema reads with corrupt-record
-quarantine, and bounded-shard writes.
+"""Line-oriented corpus interchange: declared-schema reads with
+corrupt-record quarantine, and bounded-shard writes.
 
 JSON-lines is the lingua franca of LLM training corpora (one document
 object per line; WebDataset/HF dumps, filtering-pipeline handoffs).
@@ -10,21 +10,83 @@ inferred (inference costs a full extra pass at 100 TB and silently
 widens types on dirty data), and malformed lines are captured, not
 dropped — the quarantine philosophy of the DQ engine extended to the
 parse boundary.
+
+``_parse_lines`` is the one parse-and-quarantine core: ``read_jsonl``
+and ``sources.csvio`` (``read_csv``, ``parse_csv_lines``) differ only
+in the parser expression they hand it. A NULL, empty or
+whitespace-only line is not a record: the core drops it before
+parsing, so it is neither a valid all-NULL row nor a quarantined
+payload.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from news_data_pipeline_spark.sources.writers import _shard_writer
+
 CORRUPT_COL = "_corrupt_record"
+
+# Java's \s class: a line made only of these holds no record
+_BLANK = " \t\n\x0b\f\r"
 
 
 def _as_struct(spark: SparkSession, schema: str | StructType) -> StructType:
     if isinstance(schema, StructType):
         return schema
     return StructType.fromDDL(schema)
+
+
+def _read_lines(spark: SparkSession, path: str, streaming: bool) -> DataFrame:
+    """The ``value`` text scan of ``path``; ``streaming=True`` reads the
+    landing directory incrementally through ``readStream``."""
+    if streaming:
+        return spark.readStream.format("text").load(path)
+    return spark.read.text(path)
+
+
+def _parse_lines(
+    lines: DataFrame,
+    struct: StructType,
+    parse: Callable[[Column, StructType, dict[str, str]], Column],
+    value_col: str = "value",
+) -> DataFrame:
+    """Parse the string column ``value_col`` against ``struct`` with
+    ``parse(raw, schema, options)`` (``from_json``, or ``from_csv`` with
+    its ``sep``) in PERMISSIVE mode: ``struct``'s columns plus
+    ``_corrupt_record``, which holds the raw line when the parser flags
+    it or yields no row at all, and is NULL otherwise. Blank lines are
+    dropped first (module docstring)."""
+    if CORRUPT_COL in struct.fieldNames():
+        raise ValueError(
+            f"schema must not declare {CORRUPT_COL!r}; it is appended "
+            "automatically"
+        )
+    with_corrupt = StructType(
+        list(struct.fields) + [StructField(CORRUPT_COL, StringType(), True)]
+    )
+    raw = F.col(value_col)
+    # ltrim, not trim: a line is blank iff its left trim is empty, and
+    # one trim copies each line once
+    parsed = lines.where(F.ltrim(raw, F.lit(_BLANK)) != "").select(
+        parse(
+            raw,
+            with_corrupt,
+            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
+        ).alias("__row"),
+        raw,
+    )
+    return parsed.select(
+        *[F.col(f"__row.{f.name}") for f in struct.fields],
+        F.when(
+            F.col(f"__row.{CORRUPT_COL}").isNotNull() | F.col("__row").isNull(),
+            raw,
+        ).alias(CORRUPT_COL),
+    )
 
 
 def read_jsonl(
@@ -45,43 +107,17 @@ def read_jsonl(
     Implementation: the file is scanned as TEXT and each line parsed
     with ``from_json`` in PERMISSIVE mode — a line that is not valid
     JSON (or whose values cannot fit the declared types) yields nulls
-    plus the raw line in ``_corrupt_record``. Parsing as an expression
-    rather than via the JSON file source deliberately sidesteps
-    SPARK-26243 (the file source forbids plans that reference only its
-    internal corrupt column, which breaks exactly the quarantine
-    queries this reader exists for); the text scan still splits,
-    prunes, and parallelizes like any file source, and the parse is
-    JVM-side Jackson either way. Use :func:`split_corrupt_records` to
-    separate the populations.
+    plus the raw line in ``_corrupt_record``; a missing field is sparse
+    (NULL), not corrupt. Parsing as an expression rather than via the
+    JSON file source deliberately sidesteps SPARK-26243 (the file
+    source forbids plans that reference only its internal corrupt
+    column, which breaks exactly the quarantine queries this reader
+    exists for); the text scan still splits, prunes, and parallelizes
+    like any file source, and the parse is JVM-side Jackson either way.
+    Use :func:`split_corrupt_records` to separate the populations.
     """
-    struct = _as_struct(spark, schema)
-    if CORRUPT_COL in struct.fieldNames():
-        raise ValueError(
-            f"schema must not declare {CORRUPT_COL!r}; it is appended "
-            "automatically"
-        )
-    with_corrupt = StructType(
-        list(struct.fields) + [StructField(CORRUPT_COL, StringType(), True)]
-    )
-    lines = (
-        spark.readStream.format("text").load(path)
-        if streaming
-        else spark.read.text(path)
-    )
-    parsed = lines.select(
-        F.from_json(
-            F.col("value"),
-            with_corrupt,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-        ).alias("__row"),
-        F.col("value"),
-    )
-    return parsed.select(
-        *[F.col(f"__row.{f.name}") for f in struct.fields],
-        F.when(
-            F.col(f"__row.{CORRUPT_COL}").isNotNull() | F.col("__row").isNull(),
-            F.col("value"),
-        ).alias(CORRUPT_COL),
+    return _parse_lines(
+        _read_lines(spark, path, streaming), _as_struct(spark, schema), F.from_json
     )
 
 
@@ -116,23 +152,12 @@ def write_jsonl(
     max_records_per_file: int | None = None,
     compression: str | None = None,
 ) -> None:
-    """Write a frame as JSONL, optionally bounding rows per shard.
-
-    ``maxRecordsPerFile`` rolls files inside each task — no extra
-    shuffle, same mechanism as ``write_sharded`` — so downstream
-    loaders that map one worker per file see bounded shards.
-    ``compression='gzip'/'zstd'`` trades CPU for the ~5-10x text
-    compression JSONL invites; leave None when the consumer needs
-    splittable files (gzip is not splittable — one giant .gz file
-    serializes the next scan).
+    """Write a frame as JSONL, optionally bounding rows per shard
+    (``writers._shard_writer``: the cap rolls files inside each task,
+    no extra shuffle, so downstream loaders that map one worker per
+    file see bounded shards). ``compression='gzip'/'zstd'`` trades CPU
+    for the ~5-10x text compression JSONL invites; leave None when the
+    consumer needs splittable files (gzip is not splittable — one giant
+    .gz file serializes the next scan).
     """
-    writer = df.write.mode(mode)
-    if max_records_per_file is not None:
-        if max_records_per_file < 1:
-            raise ValueError(
-                f"max_records_per_file must be >= 1, got {max_records_per_file}"
-            )
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    if compression is not None:
-        writer = writer.option("compression", compression)
-    writer.json(path)
+    _shard_writer(df, mode, max_records_per_file, compression).json(path)

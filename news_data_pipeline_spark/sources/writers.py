@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 
 
 
@@ -552,18 +552,29 @@ def write_sharded(
     COUNT too (coarse x fine: tasks x per-file cap). Without it the
     file count is input-partitions x ceil(rows_per_partition / cap).
     """
-    if max_records_per_file < 1:
-        raise ValueError(
-            f"max_records_per_file must be >= 1, got {max_records_per_file}"
-        )
     if num_shards is not None and num_shards < 1:
         # a dynamically-computed 0 (rows // shard_size) must fail fast,
         # not silently skip the repartition and emit an unbounded count
         raise ValueError(f"num_shards must be >= 1 or None, got {num_shards}")
     out = df.repartition(num_shards) if num_shards is not None else df
-    (
-        out.write.format(fmt)
-        .mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .save(path)
+    _shard_writer(out, mode, max_records_per_file).format(fmt).save(path)
+
+
+def _shard_writer(
+    df: DataFrame,
+    mode: str,
+    max_records_per_file: int | None,
+    compression: str | None = None,
+) -> DataFrameWriter:
+    """``df.write`` in ``mode`` with the optional per-file row cap
+    (``maxRecordsPerFile`` rolls files inside each task, no extra
+    shuffle) and ``compression`` — the bounded-shard options of
+    ``write_sharded``, ``jsonl.write_jsonl`` and ``csvio.write_csv``."""
+    if max_records_per_file is not None and max_records_per_file < 1:
+        raise ValueError(
+            f"max_records_per_file must be >= 1, got {max_records_per_file}"
+        )
+    options = {"maxRecordsPerFile": max_records_per_file, "compression": compression}
+    return df.write.mode(mode).options(
+        **{k: v for k, v in options.items() if v is not None}
     )

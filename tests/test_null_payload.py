@@ -93,3 +93,21 @@ def test_pq_ivf_residual_topk_skips_training_without_vectors(
 
     monkeypatch.setattr(pq, "pq_train", no_training)
     assert pq_ivf_residual_topk(spark, str(tmp_path)).count() == 0
+
+
+def test_pq_adc_topk_skips_lloyd_without_vectors(spark, tmp_path, monkeypatch):
+    # no non-NULL embedding means no seed: the PQ codebook artifact is
+    # empty without running a Lloyd iteration for a 0-row answer
+    from news_data_pipeline_spark.operators import pq
+    from news_data_pipeline_spark.queries.corpusops import pq_adc_topk
+
+    spark.createDataFrame(
+        [(i, None, i % 3) for i in range(20)],
+        "vec_id bigint, embedding array<float>, label int",
+    ).coalesce(1).write.parquet(str(tmp_path / "embeddings.parquet"))
+
+    def no_lloyd(*args, **kwargs):
+        raise AssertionError("a Lloyd iteration ran without seed vectors")
+
+    monkeypatch.setattr(pq, "_lloyd_step", no_lloyd)
+    assert pq_adc_topk(spark, str(tmp_path)).count() == 0

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from news_data_pipeline_spark.sources import rest
 
 
@@ -418,82 +420,6 @@ def test_zorder_clustering_bounds_both_dimensions(spark, tmp_path):
     assert sum(spans["y"]) / len(spans["y"]) <= 32
 
 
-def test_json_read_with_quarantine(spark, tmp_path):
-    """PERMISSIVE JSON read splits cleanly into (good, bad): typed rows
-    on one side, raw unparseable lines on the other, nothing dropped."""
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
-
-    from news_data_pipeline_spark.sources.files import (
-        read_json_with_quarantine,
-    )
-
-    schema = StructType([
-        StructField("id", LongType()),
-        StructField("title", StringType()),
-    ])
-    lines = [
-        '{"id": 1, "title": "ok"}',
-        '{"id": 2, "title": "also ok"}',
-        '{"id": "not-a-number", "title": "type clash"}',
-        '{"id": 3, "broken json',
-        '{"id": 4}',  # missing field: sparse, NOT corrupt
-    ]
-    (tmp_path / "part-0.jsonl").write_text("\n".join(lines) + "\n")
-
-    good, bad = read_json_with_quarantine(spark, str(tmp_path), schema)
-    good_rows = {r["id"]: r for r in good.collect()}
-    assert set(good_rows) == {1, 2, 4}
-    assert good.columns == ["id", "title"]
-    assert good_rows[4]["title"] is None
-    bad_rows = bad.collect()
-    assert len(bad_rows) == 2
-    raws = {r["raw_record"] for r in bad_rows}
-    assert '{"id": 3, "broken json' in raws
-    assert any("not-a-number" in r for r in raws)
-
-
-def test_csv_read_with_quarantine(spark, tmp_path):
-    from pyspark.sql.types import (
-        DoubleType, LongType, StringType, StructField, StructType,
-    )
-
-    from news_data_pipeline_spark.sources.files import (
-        read_csv_with_quarantine,
-    )
-
-    schema = StructType([
-        StructField("id", LongType()),
-        StructField("name", StringType()),
-        StructField("score", DoubleType()),
-    ])
-    (tmp_path / "data.csv").write_text(
-        "id,name,score\n"
-        "1,alice,0.5\n"
-        "2,bob,not-a-double\n"
-        "3,carol,0.9\n"
-    )
-    good, bad = read_csv_with_quarantine(spark, str(tmp_path), schema)
-    assert {r["id"] for r in good.collect()} == {1, 3}
-    bad_rows = bad.collect()
-    assert len(bad_rows) == 1
-    assert bad_rows[0]["raw_record"] == "2,bob,not-a-double"
-
-
-def test_read_with_quarantine_guards_collision(spark, tmp_path):
-    import pytest as _pytest
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from news_data_pipeline_spark.sources.files import (
-        read_json_with_quarantine,
-    )
-
-    schema = StructType([StructField("_corrupt_record", StringType())])
-    with _pytest.raises(ValueError, match="collides"):
-        read_json_with_quarantine(spark, str(tmp_path), schema)
-
-
 def test_write_sharded_caps_rows_per_file(spark, tmp_path):
     from news_data_pipeline_spark.sources.writers import write_sharded
     import glob
@@ -568,13 +494,20 @@ def test_jsonl_corrupt_lines_quarantined_not_dropped(spark, tmp_path):
         "this is not json at all\n"
         '{"doc_id": 2, "text": "also good"}\n'
         '{"doc_id": "not a number", "text": "type mismatch"}\n'
+        '{"doc_id": 3, "broken json\n'
+        '{"doc_id": 4}\n'  # missing field: sparse, NOT corrupt
     )
     back = read_jsonl(spark, str(p), "doc_id long, text string")
     valid, corrupt = split_corrupt_records(back)
-    assert {r["doc_id"] for r in valid.collect()} == {1, 2}
-    payloads = [r["payload"] for r in corrupt.collect()]
-    assert len(payloads) == 2
-    assert "not json at all" in " ".join(payloads)
+    assert valid.columns == ["doc_id", "text"]
+    valid_rows = {r["doc_id"]: r["text"] for r in valid.collect()}
+    assert valid_rows == {1: "good line", 2: "also good", 4: None}
+    # the type clash and the broken line keep their raw text
+    assert sorted(r["payload"] for r in corrupt.collect()) == [
+        "this is not json at all",
+        '{"doc_id": "not a number", "text": "type mismatch"}',
+        '{"doc_id": 3, "broken json',
+    ]
 
 
 def test_jsonl_schema_guards(spark, tmp_path):
@@ -586,8 +519,13 @@ def test_jsonl_schema_guards(spark, tmp_path):
         write_jsonl,
     )
 
+    from pyspark.sql.types import StringType, StructField, StructType
+
     with pytest.raises(ValueError, match="_corrupt_record"):
         read_jsonl(spark, str(tmp_path), "a long, _corrupt_record string")
+    reserved = StructType([StructField("_corrupt_record", StringType())])
+    with pytest.raises(ValueError, match="_corrupt_record"):
+        read_jsonl(spark, str(tmp_path), reserved)
     df = spark.createDataFrame([(1,)], "a long")
     with pytest.raises(ValueError, match="_corrupt_record"):
         split_corrupt_records(df)
@@ -645,6 +583,7 @@ def test_csv_corrupt_lines_quarantined_not_dropped(spark, tmp_path):
         "x,bad,1.0\n"      # type mismatch
         "4,short\n"        # missing field
         "5,extra,1.0,zz\n"  # extra field
+        "6,bob,not-a-double\n"  # unparseable double
     )
     back = read_csv(
         spark,
@@ -658,8 +597,32 @@ def test_csv_corrupt_lines_quarantined_not_dropped(spark, tmp_path):
     assert sorted(r["payload"] for r in corrupt.collect()) == [
         "4,short",
         "5,extra,1.0,zz",
+        "6,bob,not-a-double",
         "x,bad,1.0",
     ]
+
+
+@pytest.mark.parametrize("fmt", ["jsonl", "csv"])
+def test_blank_lines_are_not_records(spark, tmp_path, fmt):
+    """An empty or whitespace-only line is neither a valid all-NULL row
+    nor a quarantined payload: both readers drop it before parsing."""
+    from news_data_pipeline_spark.sources.csvio import read_csv
+    from news_data_pipeline_spark.sources.jsonl import (
+        read_jsonl,
+        split_corrupt_records,
+    )
+
+    good, bad = {
+        "jsonl": ('{"id": 1, "name": "a"}', '{"id": 2'),
+        "csv": ("1,a", "2,a,extra"),
+    }[fmt]
+    (tmp_path / f"part-0.{fmt}").write_text(f"{good}\n\n   \n\t\n{bad}\n")
+    read = read_jsonl if fmt == "jsonl" else read_csv
+    valid, corrupt = split_corrupt_records(
+        read(spark, str(tmp_path), "id INT, name STRING")
+    )
+    assert sorted(map(tuple, valid.collect())) == [(1, "a")]
+    assert [r["payload"] for r in corrupt.collect()] == [bad]
 
 
 def test_csv_extra_field_quarantined_under_both_pruning_modes(spark):

@@ -1,7 +1,8 @@
-"""Every library name a tool or ``bench.py`` reaches for must exist.
+"""Every library name a tool, ``bench.py`` or a ``perfbench/`` script
+reaches for must exist.
 
-A tool that names a deleted helper otherwise fails only when someone
-runs that mode. This walks each script's AST — function-local imports
+A script that names a deleted helper otherwise fails only when someone
+runs that mode (or the benchmark). This walks each script's AST — function-local imports
 included — and checks, without a Spark session, that every
 ``from news_data_pipeline_spark… import name`` resolves and that every
 ``alias.attr`` on an imported library module names a real attribute.
@@ -20,9 +21,11 @@ import pytest
 from tests.conftest import ROOT
 
 PKG = "news_data_pipeline_spark"
-SCRIPTS = sorted(glob.glob(os.path.join(ROOT, "tools", "*.py"))) + [
-    os.path.join(ROOT, "bench.py")
-]
+SCRIPTS = (
+    sorted(glob.glob(os.path.join(ROOT, "tools", "*.py")))
+    + [os.path.join(ROOT, "bench.py")]
+    + sorted(glob.glob(os.path.join(ROOT, "perfbench", "*.py")))
+)
 
 
 def _resolve(module: str, name: str):
