@@ -801,7 +801,11 @@ def embedding_neardup_pairs(
     scoring across the handful of nearest buckets, or run the exact
     ``ngram_jaccard_pairs``-style verifier on candidates.
     """
-    from news_data_pipeline_spark.operators.similarity import dot, l2_norm, sign_bucket
+    from news_data_pipeline_spark.operators.similarity import (
+        _cosine,
+        l2_norm,
+        sign_bucket,
+    )
 
     # Norms hoisted to once per vector (higher-order array expressions
     # are interpreted, so per-pair evaluation costs bucket-size x more);
@@ -826,12 +830,8 @@ def embedding_neardup_pairs(
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            F.round(
-                dot(F.col("a.e"), F.col("b.e"))
-                # nullif: zero-norm vectors score null (filtered by the
-                # threshold below) instead of ANSI DIVIDE_BY_ZERO
-                / F.nullif(F.col("a.nrm") * F.col("b.nrm"), F.lit(0.0)),
-                6,
+            _cosine(
+                F.col("a.e"), F.col("b.e"), F.col("a.nrm"), F.col("b.nrm")
             ).alias("cosine_sim"),
         )
         .where(F.col("cosine_sim") >= threshold)

@@ -32,11 +32,18 @@ top-R with exact distances over the raw floats of just those R.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from news_data_pipeline_spark.functions.exact import settled_round, settled_units
 from news_data_pipeline_spark.operators.fanout import fan_out
-from news_data_pipeline_spark.operators.similarity import _as_double
+from news_data_pipeline_spark.operators.similarity import (
+    _as_double,
+    _assign_cells,
+    _centroids,
+    _cosine,
+    _topk,
+    l2_norm,
+)
 
 
 def _vecs(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -492,15 +499,6 @@ def _adc_lut(
     )
 
 
-def _rank_adc(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rank")
-    )
-
-
 def pq_adc_topk(
     queries: DataFrame,
     codes: DataFrame,
@@ -534,7 +532,7 @@ def pq_adc_topk(
         .agg((F.sum("__u") / 1e6).alias("adc_dist"))
         .where(F.col("query_id") != F.col("neighbor_id"))
     )
-    return _rank_adc(scored, k)
+    return _topk(scored, k, "adc_dist")
 
 
 def pq_ivf_adc_topk(
@@ -581,8 +579,9 @@ def pq_ivf_adc_topk(
     also the best pruned arm locally (it removes the corpus-sized
     candidate shuffle: 2.53 -> 1.95 s at n=1M/q=5).
 
-    ``centroids`` / ``codes`` are injectable for the production shape
-    (offline k-means, pre-encoded corpus); defaults are the
+    ``centroids`` (a (cid, centroid) frame) / ``codes`` are injectable
+    for the production shape (offline k-means such as
+    ``kmeans_iterate``, pre-encoded corpus); defaults are the
     deterministic conventions shared with ``ivf_topk`` / ``pq_encode``
     (first ``nlist`` vectors by id; encode under ``codebooks``).
     Queries are scored against raw-vector cells but PQ codes — raw-code
@@ -591,22 +590,7 @@ def pq_ivf_adc_topk(
     one global residual codebook, its own DuckDB oracle) is
     ``pq_ivf_residual_topk`` below.
     """
-    from news_data_pipeline_spark.operators.similarity import (
-        _assign_cells,
-        dot,
-    )
-
-    if centroids is None:
-        centroids = (
-            corpus.orderBy(id_col)
-            .limit(nlist)
-            .select(
-                F.col(id_col).alias("cid"), _as_double(vec_col).alias("c_vec")
-            )
-        )
-    centroids = centroids.withColumn(
-        "c2", dot(F.col("c_vec"), F.col("c_vec"))
-    )
+    centroids = _centroids(centroids, corpus, id_col, vec_col, nlist)
     # cells injectable for the production shape: on a real index the
     # cell id is assigned once at ingest and stored WITH the code, so
     # the per-query path pays no corpus-wide assignment pass (the
@@ -643,7 +627,7 @@ def pq_ivf_adc_topk(
             .groupBy("query_id", F.col("id").alias("neighbor_id"))
             .agg((F.sum("__u") / 1e6).alias("adc_dist"))
         )
-        return _rank_adc(scored, k)
+        return _topk(scored, k, "adc_dist")
     # candidate pruning: each corpus vector lives in exactly one cell,
     # so the equi-join yields each (query, neighbor) at most once
     cand = (
@@ -657,7 +641,7 @@ def pq_ivf_adc_topk(
         .groupBy("query_id", "neighbor_id")
         .agg((F.sum("__u") / 1e6).alias("adc_dist"))
     )
-    return _rank_adc(scored, k)
+    return _topk(scored, k, "adc_dist")
 
 
 def pq_ivf_rerank_topk(
@@ -688,8 +672,6 @@ def pq_ivf_rerank_topk(
     ``cosine_topk`` family, so swapping brute force for this is a
     drop-in at 100 TB.
     """
-    from news_data_pipeline_spark.operators.similarity import dot, l2_norm
-
     shortlist = pq_ivf_adc_topk(
         queries,
         corpus,
@@ -717,25 +699,16 @@ def pq_ivf_rerank_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                dot(F.col("__qvec"), F.col("__vec"))
-                / F.nullif(
-                    l2_norm(F.col("__qvec")) * l2_norm(F.col("__vec")),
-                    F.lit(0.0),
-                ),
-                6,
+            _cosine(
+                F.col("__qvec"),
+                F.col("__vec"),
+                l2_norm(F.col("__qvec")),
+                l2_norm(F.col("__vec")),
             ).alias("cosine_sim"),
         )
         .where(F.col("cosine_sim").isNotNull())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(scored, k)
 
 
 def pq_residuals(
@@ -747,26 +720,15 @@ def pq_residuals(
 ) -> DataFrame:
     """(id, cid, rvec): each vector's offset from its nearest coarse
     centroid — the representation FAISS's ``by_residual=true``
-    quantizes. ``centroids`` carries (cid, c_vec); ``c2`` is derived
-    here when absent so callers can pass the bare frozen artifact.
-    One broadcast of the nlist-sized centroid frame + a narrow
-    ``zip_with`` map — nothing corpus-crossed."""
-    from news_data_pipeline_spark.operators.similarity import (
-        _assign_cells,
-        dot,
-    )
-
-    if "c2" not in centroids.columns:
-        centroids = centroids.withColumn(
-            "c2", dot(F.col("c_vec"), F.col("c_vec"))
-        )
+    quantizes, under a (cid, centroid) frame. One broadcast of the
+    nlist-sized centroid frame + a narrow ``zip_with`` map — nothing
+    corpus-crossed."""
+    centroids = _centroids(centroids)
     cells = _assign_cells(df, centroids, id_col, vec_col, "id", 1)
-    return cells.join(
-        F.broadcast(centroids.select("cid", "c_vec")), on="cid"
-    ).select(
+    return cells.join(F.broadcast(centroids), on="cid").select(
         "id",
         "cid",
-        F.zip_with(F.col("v"), F.col("c_vec"), lambda a, b: a - b).alias(
+        F.zip_with(F.col("v"), F.col("centroid"), lambda a, b: a - b).alias(
             "rvec"
         ),
     )
@@ -848,26 +810,9 @@ def pq_ivf_residual_topk(
     components gained nothing at sf0.1 (5.08 vs 5.12 s; SCALE.md
     "Retired paths").
     """
-    from news_data_pipeline_spark.operators.similarity import (
-        _assign_cells,
-        dot,
-    )
-
-    if centroids is None:
-        centroids = (
-            corpus.orderBy(id_col)
-            .limit(nlist)
-            .select(
-                F.col(id_col).alias("cid"),
-                _as_double(vec_col).alias("c_vec"),
-            )
-        )
-    centroids = centroids.withColumn(
-        "c2", dot(F.col("c_vec"), F.col("c_vec"))
-    )
-    cent_vecs = F.broadcast(centroids.select("cid", "c_vec"))
+    centroids = _centroids(centroids, corpus, id_col, vec_col, nlist)
     residual = F.zip_with(
-        F.col("v"), F.col("c_vec"), lambda a, b: a - b
+        F.col("v"), F.col("centroid"), lambda a, b: a - b
     ).alias("rvec")
 
     res = pq_residuals(corpus, centroids, id_col=id_col, vec_col=vec_col)
@@ -898,7 +843,7 @@ def pq_ivf_residual_topk(
     query_cells = _assign_cells(
         queries, centroids, id_col, vec_col, "query_id", nprobe
     )
-    qres = query_cells.join(cent_vecs, on="cid").select(
+    qres = query_cells.join(F.broadcast(centroids), on="cid").select(
         "query_id", "cid", residual
     )
     # per-(query, cell) LUT: same settled ||r_sub - c||^2 table as
@@ -924,4 +869,4 @@ def pq_ivf_residual_topk(
         .groupBy("query_id", F.col("id").alias("neighbor_id"))
         .agg((F.sum("__u") / 1e6).alias("adc_dist"))
     )
-    return _rank_adc(scored, k)
+    return _topk(scored, k, "adc_dist")

@@ -1,20 +1,36 @@
-"""Similarity search over embedding columns (``array<float>``).
+"""Vector search and statistics over embedding columns (``array<float>``).
 
-Two tiers, as a 100-TB ANN story needs:
+The search family:
 
-* ``cosine_topk`` — exact brute force: broadcast the (small) query set,
-  score every corpus vector with codegen'd array expressions
-  (``zip_with`` + ``aggregate``), take top-k per query with a window.
-  Cost O(|queries| * |corpus|) — the correctness baseline and the
-  re-ranker for candidates.
-* ``signbucket_topk`` — LSH-style scale path: vectors bucket by the sign
-  pattern of their leading components (a fixed, data-independent
-  hyperplane family), and scoring happens only within buckets — the
-  cross product shrinks by ~2^m. Deterministic and ANSI-SQL-expressible,
-  so the oracle verifies it end-to-end.
+* exact brute force: ``cosine_topk``, its Arrow-batched twin
+  ``cosine_topk_arrow``, and ``hard_negatives`` (the top-k inside a
+  cosine band);
+* sign-bucket LSH: ``signbucket_topk``, scoring only pairs that share
+  a bucket of ``m`` sign bits in any of ``tables`` tables;
+* IVF: ``ivf_topk`` probes the cells of a coarse quantizer that
+  ``kmeans_iterate`` trains, and ``semantic_dedup_pairs`` scores pairs
+  inside one cell (``operators.pq`` composes the same cells with PQ
+  codes).
 
-All math is done in double precision and cosine is rounded to 6dp before
-ranking (vec_id tie-break) so results are reproducible across engines.
+Embedding statistics: ``embedding_covariance``, ``pca_fit`` and
+``pca_project``.
+
+Every search follows one set of conventions, each written once here:
+
+* cosine is computed in double precision and rounded to 6dp
+  (``_cosine``); a NULL or zero-norm vector scores NULL and drops out;
+* top-k ranks cosine descending (a distance ascending) and breaks ties
+  by neighbor id ascending (``_topk``);
+* a query is never its own neighbor (``_scored_pairs``);
+* a centroid frame is ``(cid, centroid)``: an injected frame such as
+  ``kmeans_iterate``'s output, or by default the first ``nlist``
+  vectors by id (``_centroids``);
+* a vector's cell is its nearest centroid by 6dp-rounded squared L2,
+  centroid id breaking ties (``_assign_cells``), so trained, probed
+  and dedup cells agree.
+
+These rules make each search reproducible across engines, so every
+registered query over them has an exact DuckDB twin.
 """
 
 from __future__ import annotations
@@ -42,8 +58,81 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+def _cosine(a: Column, b: Column, a_nrm: Column, b_nrm: Column) -> Column:
+    """The family's pair score: cosine of ``a`` and ``b`` from their
+    norms, rounded to 6dp. nullif: a zero-norm vector (empty doc,
+    padding row) scores NULL instead of aborting the job with ANSI
+    DIVIDE_BY_ZERO."""
+    return F.round(dot(a, b) / F.nullif(a_nrm * b_nrm, F.lit(0.0)), 6)
+
+
+def _sides(
+    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The corpus side (neighbor_id, c_vec) and the query side
+    (query_id, q_vec) of a search."""
+    # fan_out: the per-(query, vector) array folds pipeline onto the
+    # corpus scan — a one-task scan would serialize all the math
+    c = fan_out(
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"),
+            _as_double(vec_col).alias("c_vec"),
+        )
+    )
+    q = queries.select(
+        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("q_vec")
+    )
+    return c, q
+
+
+def _scored_pairs(
+    c: DataFrame, q: DataFrame, on: str | None = None, *keep: str
+) -> DataFrame:
+    """(query_id, neighbor_id, *keep, cosine_sim): the corpus side ``c``
+    (neighbor_id, c_vec, ...) joined to the broadcast query side ``q``
+    (query_id, q_vec, ...) on the key ``on`` (every pair when None),
+    self-pairs out, NULL cosines dropped.
+
+    Queries are broadcast (the small side by construction), so the
+    corpus is scanned once with no shuffle until the top-k. Norms are
+    hoisted to one computation per VECTOR before the join —
+    higher-order array expressions are interpreted (not codegen'd), so
+    evaluating them per PAIR would cost |queries|x more."""
+    c = c.withColumn("c_nrm", l2_norm(F.col("c_vec")))
+    q = q.withColumn("q_nrm", l2_norm(F.col("q_vec")))
+    return (
+        c.join(F.broadcast(q), on)
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            *keep,
+            _cosine(
+                F.col("q_vec"), F.col("c_vec"), F.col("q_nrm"), F.col("c_nrm")
+            ).alias("cosine_sim"),
+        )
+        .where(F.col("cosine_sim").isNotNull())
+    )
+
+
+def _topk(
+    scored: DataFrame,
+    k: int,
+    dist: str | None = None,
+    by: tuple[str, ...] = ("query_id",),
+) -> DataFrame:
+    """(*by, neighbor_id, score, rank): the top-``k`` neighbors per
+    ``by`` group — highest ``cosine_sim`` first or, when a distance
+    column ``dist`` is named, lowest distance first; neighbor id
+    ascending breaks ties. AQE plans the window as a partial top-k per
+    partition."""
+    order = F.asc(dist) if dist else F.desc("cosine_sim")
+    w = Window.partitionBy(*by).orderBy(order, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(*by, "neighbor_id", dist or "cosine_sim", "rank")
+    )
 
 
 def cosine_topk(
@@ -54,51 +143,11 @@ def cosine_topk(
     vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for every query vector.
-
-    Queries are broadcast (they're the small side by construction); the
-    corpus is scanned once with no shuffle until the per-query top-k,
-    which AQE plans as a partial top-k per partition. Norms are hoisted
-    to one computation per VECTOR before the join — higher-order array
-    expressions are interpreted (not codegen'd), so evaluating them per
-    PAIR would cost |queries|x more.
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(vec_col).alias("q_vec"),
-    ).withColumn("q_nrm", l2_norm(F.col("q_vec")))
-    # fan_out: the per-(query, vector) array folds below pipeline onto
-    # the corpus scan — a one-task scan would serialize all the math
-    c = fan_out(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(vec_col).alias("c_vec"),
-        )
-    ).withColumn("c_nrm", l2_norm(F.col("c_vec")))
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("c_vec"))
-                # nullif: a zero-norm vector (empty doc, padding row)
-                # must score null, not abort the job with ANSI
-                # DIVIDE_BY_ZERO
-                / F.nullif(F.col("q_nrm") * F.col("c_nrm"), F.lit(0.0)),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .where(F.col("cosine_sim").isNotNull())
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    """Exact top-k cosine neighbors for every query vector: one
+    corpus scan against the broadcast queries. Cost
+    O(|queries| * |corpus|) — the correctness baseline and the
+    re-ranker for candidates."""
+    return _topk(_scored_pairs(*_sides(corpus, queries, id_col, vec_col)), k)
 
 
 def hard_negatives(
@@ -117,51 +166,33 @@ def hard_negatives(
     where a "negative" is really an unlabeled positive (the classic
     false-negative trap in DPR/E5-style training data).
 
-    Same conventions as ``cosine_topk`` (6dp cosine, neighbor-id
-    tie-break, self-pairs excluded, null/zero-norm vectors drop), so
-    the mined pairs and the retrieval eval share one geometry. The
-    band bounds compare against the ROUNDED score — deterministic
-    cross-engine, no half-open boundary drift.
+    ``cosine_topk`` with the band applied before ranking, so the mined
+    pairs and the retrieval eval share one geometry. The band bounds
+    compare against the ROUNDED score — deterministic cross-engine, no
+    half-open boundary drift.
 
-    Scale shape: identical to ``cosine_topk`` — queries broadcast, one
-    corpus scan, partial top-k per partition. At billions of vectors,
-    mine from an ANN shortlist instead (``pq_ivf_rerank_topk`` with a
-    large ``rerank``, then band-filter): the band's upper cut makes
-    recall loss harmless, since any neighbor the index misses is by
-    construction far from the decision boundary.
+    At billions of vectors, mine from an ANN shortlist instead
+    (``pq_ivf_rerank_topk`` with a large ``rerank``, then band-filter):
+    the band's upper cut makes recall loss harmless, since any neighbor
+    the index misses is by construction far from the decision boundary.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(vec_col).alias("q_vec"),
-    ).withColumn("q_nrm", l2_norm(F.col("q_vec")))
-    c = fan_out(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(vec_col).alias("c_vec"),
-        )
-    ).withColumn("c_nrm", l2_norm(F.col("c_vec")))
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / F.nullif(F.col("q_nrm") * F.col("c_nrm"), F.lit(0.0)),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .where(
-            (F.col("cosine_sim") >= lo) & (F.col("cosine_sim") < hi)
-        )
+    scored = _scored_pairs(*_sides(corpus, queries, id_col, vec_col))
+    return _topk(
+        scored.where((F.col("cosine_sim") >= lo) & (F.col("cosine_sim") < hi)),
+        k,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+
+
+def _sign_bits(vec: Column, start: int, m: int) -> Column:
+    # F.get is null out-of-bounds (no ANSI error, unlike element_at),
+    # so vectors shorter than the window bucket with '0' bits instead
+    # of failing the job — DuckDB list indexing is null OOB too, so the
+    # oracle agrees.
+    return F.concat(
+        *[
+            F.when(F.get(vec, i) >= 0, F.lit("1")).otherwise(F.lit("0"))
+            for i in range(start, start + m)
+        ]
     )
 
 
@@ -171,15 +202,7 @@ def sign_bucket(vec: Column, m: int = 8) -> Column:
     A fixed axis-aligned hyperplane family: data-independent,
     deterministic, and expressible in ANSI SQL for oracle verification.
     """
-    bits = [
-        # F.get is null out-of-bounds (no ANSI error, unlike element_at),
-        # so vectors shorter than m bucket with '0' bits instead of
-        # failing the job — DuckDB list indexing is null OOB too, so the
-        # oracle agrees.
-        F.when(F.get(vec, i) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for i in range(m)
-    ]
-    return F.concat(*bits)
+    return _sign_bits(vec, 0, m)
 
 
 def signbucket_topk(
@@ -190,144 +213,44 @@ def signbucket_topk(
     vec_col: str = "embedding",
     k: int = 5,
     m: int = 8,
+    tables: int = 1,
 ) -> DataFrame:
-    """Approximate top-k: score only within matching sign buckets.
+    """Approximate top-k: score only the pairs that share a sign bucket
+    in any of ``tables`` tables. Table ``t`` buckets on the sign bits of
+    components ``[t*m, t*m + m)``, so table 0 is ``sign_bucket``.
 
     The join is a plain equi-join on the bucket key, so it shuffles by
     bucket instead of cross-producting — the scale path, with
     ``cosine_topk`` as the exact re-ranker when recall must be 1.0.
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(vec_col).alias("q_vec"),
-        sign_bucket(_as_double(vec_col), m).alias("bucket"),
-    ).withColumn("q_nrm", l2_norm(F.col("q_vec")))
-    c = fan_out(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(vec_col).alias("c_vec"),
-            sign_bucket(_as_double(vec_col), m).alias("bucket"),
-        )
-    ).withColumn("c_nrm", l2_norm(F.col("c_vec")))
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("c_vec"))
-                # nullif: a zero-norm vector (empty doc, padding row)
-                # must score null, not abort the job with ANSI
-                # DIVIDE_BY_ZERO
-                / F.nullif(F.col("q_nrm") * F.col("c_nrm"), F.lit(0.0)),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .where(F.col("cosine_sim").isNotNull())
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
-
-
-def multitable_signbucket_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    m: int = 8,
-    tables: int = 4,
-) -> DataFrame:
-    """OR-amplified sign-LSH top-k: ``tables`` independent bucket
-    families, a pair is a candidate if it collides in ANY table —
-    the classic Charikar random-hyperplane scheme's recall lever
-    (single-table ``signbucket_topk`` misses any true neighbor whose
-    signs differ in the one projection; each extra table multiplies
-    the miss probability). Table ``t`` buckets on the sign bits of
-    components ``[t*m, t*m + m)`` — axis-aligned and deterministic,
-    the same oracle-expressible family as ``sign_bucket``; vectors
-    shorter than ``tables*m`` degrade to '0' bits, never fail.
-
-    Plan shape: each side explodes to ``tables`` (id, bucket) rows —
-    a bounded linear fan-out — and candidates come from the per-table
-    bucket equi-join (shuffle by bucket, never a cross product). A
-    pair colliding in several tables scores identically each time, so
-    OR-amplification's dedup is one ``distinct`` over the scored
-    candidate rows (bounded by candidates, not corpus²). Exact
-    re-rank on recall-critical paths stays ``cosine_topk``.
+    More tables are the classic Charikar OR-amplification: a true
+    neighbor is missed only if its signs differ in every table. Each
+    side explodes to ``tables`` (id, bucket) rows — a bounded linear
+    fan-out — and vectors shorter than ``tables*m`` degrade to '0'
+    bits, never fail.
     """
 
-    def table_buckets(vec: Column) -> Column:
-        return F.array(
-            *[
-                F.concat(
-                    F.lit(f"{t}:"),
-                    *[
-                        F.when(
-                            F.get(vec, t * m + j) >= 0, F.lit("1")
-                        ).otherwise(F.lit("0"))
-                        for j in range(m)
-                    ],
-                )
-                for t in range(tables)
-            ]
-        )
-
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            _as_double(vec_col).alias("q_vec"),
-            F.explode(table_buckets(_as_double(vec_col))).alias("bucket"),
-        )
-        .withColumn("q_nrm", l2_norm(F.col("q_vec")))
-    )
-    c = (
-        fan_out(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                _as_double(vec_col).alias("c_vec"),
+    def buckets(vec: Column) -> Column:
+        return F.explode(
+            F.array(
+                *[
+                    F.concat(F.lit(f"{t}:"), _sign_bits(vec, t * m, m))
+                    for t in range(tables)
+                ]
             )
         )
-        .select(
-            "neighbor_id",
-            "c_vec",
-            F.explode(table_buckets(F.col("c_vec"))).alias("bucket"),
-        )
-        .withColumn("c_nrm", l2_norm(F.col("c_vec")))
+
+    c, q = _sides(corpus, queries, id_col, vec_col)
+    scored = _scored_pairs(
+        c.withColumn("bucket", buckets(F.col("c_vec"))),
+        q.withColumn("bucket", buckets(F.col("q_vec"))),
+        "bucket",
     )
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / F.nullif(F.col("q_nrm") * F.col("c_nrm"), F.lit(0.0)),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .where(F.col("cosine_sim").isNotNull())
-        # OR-amplification: a pair colliding in several tables is the
-        # same candidate — identical score, so distinct IS the dedup
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    if tables > 1:
+        # a pair colliding in several tables is the same candidate with
+        # an identical score, so distinct IS the dedup (bounded by
+        # candidates, not corpus²); with one table a pair meets once
+        scored = scored.distinct()
+    return _topk(scored, k)
 
 
 def cosine_topk_arrow(
@@ -341,8 +264,7 @@ def cosine_topk_arrow(
     """Exact top-k cosine neighbors, scored with Arrow-batched BLAS.
 
     The scale path for the exact scorer: same semantics as
-    ``cosine_topk`` (round-6dp cosine, neighbor-id tie-break, zero-norm
-    vectors dropped), but the |Q|x|C| scoring runs as one matrix
+    ``cosine_topk``, but the |Q|x|C| scoring runs as one matrix
     multiply per Arrow batch inside ``mapInPandas`` instead of an
     interpreted array fold per pair. The query matrix rides a broadcast
     variable (queries are the small side by construction); each corpus
@@ -350,6 +272,9 @@ def cosine_topk_arrow(
     the final global top-k carries ``partitions * |Q| * k`` rows — not
     scores. Local-then-global top-k is exact because both stages use
     the same total order (rounded cosine desc, neighbor id asc).
+    Corpus vectors that are NULL or whose length differs from the
+    queries' are dropped before scoring: the JVM fold scores such a
+    pair NULL and drops it.
 
     Per-pair float math differs from the JVM fold only in summation
     order (BLAS is blocked/pairwise, the fold is sequential), i.e. in
@@ -416,17 +341,35 @@ def cosine_topk_arrow(
                 }
             )
 
-    local = fan_out(corpus.select(id_col, _as_double(vec_col).alias(vec_col))).mapInPandas(
-        score, out_schema
+    vecs = corpus.select(id_col, _as_double(vec_col).alias(vec_col)).where(
+        F.size(vec_col) == Q.shape[1]
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(fan_out(vecs).mapInPandas(score, out_schema), k)
+
+
+def _centroids(
+    centroids: DataFrame | None,
+    corpus: DataFrame | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    nlist: int = 16,
+) -> DataFrame:
+    """The family's one centroid contract: a ``(cid, centroid)`` frame,
+    ``kmeans_iterate``'s input and output. An injected frame passes
+    through with ``centroid`` as ``array<double>``; a frame without both
+    columns is a caller error. ``centroids=None`` builds the default:
+    the first ``nlist`` corpus vectors by id (deterministic,
+    oracle-reproducible)."""
+    if centroids is None:
+        return corpus.orderBy(id_col).limit(nlist).select(
+            F.col(id_col).alias("cid"), _as_double(vec_col).alias("centroid")
+        )
+    if not {"cid", "centroid"} <= set(centroids.columns):
+        raise ValueError(
+            "centroids must carry ('cid', 'centroid'); got "
+            f"{sorted(centroids.columns)}"
+        )
+    return centroids.select("cid", _as_double("centroid").alias("centroid"))
 
 
 def kmeans_iterate(
@@ -441,8 +384,8 @@ def kmeans_iterate(
     ``ivf_topk`` takes as an injectable input.
 
     Per iteration: assign every vector to its nearest centroid (one
-    broadcast pass, same rounded-distance + cid tie-break rule as
-    ``ivf_topk`` so training and probing agree on cell boundaries),
+    broadcast pass, the family's ``_assign_cells`` rule, so training
+    and probing agree on cell boundaries),
     then recompute each centroid as the element-wise mean of its
     members — posexplode to (cid, pos, component), one map-side-
     combinable average per (cid, pos), reassemble ordered by position.
@@ -461,25 +404,21 @@ def kmeans_iterate(
     lost executor instead of recomputing). The returned frame is a
     plain literal: lazy, composable, nothing retained.
 
-    Returns (cid, centroid) with components rounded to 6dp — the
+    Takes and returns (cid, centroid), components rounded to 6dp — the
     cross-engine-stable precision the distance rounding expects.
     """
     spark = corpus.sparkSession
-    cents = centroids.select(
-        F.col("cid"), _as_double("centroid").alias("c_vec")
-    )
+    cents = _centroids(centroids)
     cent_schema = cents.schema
-    vecs = fan_out(
-        corpus.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
-    )
-    rows = [(r["cid"], r["c_vec"]) for r in cents.collect()]
+    rows = [(r["cid"], r["centroid"]) for r in cents.collect()]
     for _ in range(iters):
-        cents = spark.createDataFrame(rows, cent_schema)
-        c2 = cents.withColumn("c2", dot(F.col("c_vec"), F.col("c_vec")))
-        # the SHARED assignment rule (_assign_cells) — training must
-        # use the same rounded-distance + cid tie-break as probing
-        assigned = _assign_cells(vecs, c2, "id", "v", "id", 1).select(
-            "cid", "v"
+        assigned = _assign_cells(
+            corpus,
+            spark.createDataFrame(rows, cent_schema),
+            id_col,
+            vec_col,
+            "id",
+            1,
         )
         by_pos = (
             assigned.select("cid", F.posexplode("v").alias("pos", "x"))
@@ -490,14 +429,12 @@ def kmeans_iterate(
             F.transform(
                 F.sort_array(F.collect_list(F.struct("pos", "m"))),
                 lambda s: s["m"],
-            ).alias("c_vec")
+            ).alias("centroid")
         )
-        updated = {r["cid"]: r["c_vec"] for r in new_cents.collect()}
+        updated = {r["cid"]: r["centroid"] for r in new_cents.collect()}
         # empty cells keep their previous centroid
         rows = [(cid, updated.get(cid, vec)) for cid, vec in rows]
-    return spark.createDataFrame(rows, cent_schema).select(
-        "cid", F.col("c_vec").alias("centroid")
-    )
+    return spark.createDataFrame(rows, cent_schema)
 
 
 def _assign_cells(
@@ -508,11 +445,12 @@ def _assign_cells(
     out_id: str,
     n_cells: int,
 ) -> DataFrame:
-    """Nearest-``n_cells`` centroid assignment shared by IVF probing,
-    k-means training, and semantic dedup: broadcast the (cid, c_vec, c2)
-    centroid frame, rank by 6dp-rounded -2*dot(v,c) + ||c||^2 with
-    centroid-id tie-break — ONE assignment rule, so trained cells,
-    probed cells, and dedup cells can never disagree.
+    """(out_id, cid, v): each vector's nearest ``n_cells`` centroids of
+    a ``(cid, centroid)`` frame — the assignment shared by IVF probing,
+    k-means training, PQ cells and semantic dedup. Ranks by 6dp-rounded
+    -2*dot(v,c) + ||c||^2 with centroid-id tie-break — ONE assignment
+    rule, so trained, probed and dedup cells can never disagree.
+    ``n_cells > 1`` adds each cell's probe rank ``r`` (1 = nearest).
 
     Physical shape (r14): for ``n_cells == 1`` — every corpus-sized
     assignment in the family — the argmin is ROW-LOCAL: the bounded
@@ -528,6 +466,12 @@ def _assign_cells(
     ``n_cells > 1`` (query-side probing — bounded rows by construction)
     keeps the window form, which a handful of query rows never feels.
     """
+    # ||c||^2 hoisted once per centroid; dot(v,v) is rank-invariant per
+    # vector, so the ordering needs only -2*dot(v,c) + ||c||^2 — one
+    # interpreted array fold per (vector, centroid) instead of three
+    cents = centroids.withColumn(
+        "c2", dot(F.col("centroid"), F.col("centroid"))
+    )
     base = fan_out(
         df.select(F.col(id_col).alias(out_id), _as_double(vec_col).alias("v"))
     )
@@ -535,20 +479,16 @@ def _assign_cells(
         # one row carrying the whole (bounded) centroid frame; the
         # size guard keeps the empty-centroids case emitting zero rows
         # exactly like the cross join did
-        cents = (
-            centroids.agg(
-                F.collect_list(F.struct("cid", "c_vec", "c2")).alias(
-                    "__cents"
-                )
-            ).where(F.size("__cents") > 0)
-        )
+        packed = cents.agg(
+            F.collect_list(F.struct("cid", "centroid", "c2")).alias("__cents")
+        ).where(F.size("__cents") > 0)
         best = F.array_min(
             F.transform(
                 F.col("__cents"),
                 lambda c: F.struct(
                     F.coalesce(
                         F.round(
-                            -2 * dot(F.col("v"), c["c_vec"]) + c["c2"], 6
+                            -2 * dot(F.col("v"), c["centroid"]) + c["c2"], 6
                         ),
                         F.lit(float("-inf")),
                     ).alias("d"),
@@ -556,18 +496,18 @@ def _assign_cells(
                 ),
             )
         )
-        return base.join(F.broadcast(cents), how="cross").select(
+        return base.join(F.broadcast(packed), how="cross").select(
             out_id, best["cid"].alias("cid"), "v"
         )
-    scored = base.join(F.broadcast(centroids), how="cross")
     w = Window.partitionBy(out_id).orderBy(
-        F.round(-2 * dot(F.col("v"), F.col("c_vec")) + F.col("c2"), 6),
+        F.round(-2 * dot(F.col("v"), F.col("centroid")) + F.col("c2"), 6),
         F.asc("cid"),
     )
     return (
-        scored.withColumn("__r", F.row_number().over(w))
-        .where(F.col("__r") <= n_cells)
-        .select(out_id, "cid", "v")
+        base.join(F.broadcast(cents), how="cross")
+        .withColumn("r", F.row_number().over(w))
+        .where(F.col("r") <= n_cells)
+        .select(out_id, "cid", "v", "r")
     )
 
 
@@ -592,21 +532,13 @@ def semantic_dedup_pairs(
     the centroid count, which an offline k-means job (``kmeans_iterate``)
     keeps balanced. Feed the pairs to ``graph.connected_components``
     for cluster labels, then ``dedup.keep_best_per_cluster`` to pick
-    survivors. Default centroids: first ``nlist`` corpus vectors by id
-    (deterministic, oracle-reproducible) — inject a trained frame in
-    production.
+    survivors. ``centroids`` takes a trained (cid, centroid) frame;
+    the default is the first ``nlist`` corpus vectors by id.
     """
-    if centroids is None:
-        centroids = (
-            corpus.orderBy(id_col)
-            .limit(nlist)
-            .select(
-                F.col(id_col).alias("cid"), _as_double(vec_col).alias("c_vec")
-            )
-        )
-    centroids = centroids.withColumn("c2", dot(F.col("c_vec"), F.col("c_vec")))
-    cells = _assign_cells(corpus, centroids, id_col, vec_col, "id", 1)
-    v = cells.withColumn("nrm", l2_norm(F.col("v")))
+    cents = _centroids(centroids, corpus, id_col, vec_col, nlist)
+    v = _assign_cells(corpus, cents, id_col, vec_col, "id", 1).withColumn(
+        "nrm", l2_norm(F.col("v"))
+    )
     a, b = v.alias("a"), v.alias("b")
     return (
         a.join(
@@ -619,10 +551,8 @@ def semantic_dedup_pairs(
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            F.round(
-                dot(F.col("a.v"), F.col("b.v"))
-                / F.nullif(F.col("a.nrm") * F.col("b.nrm"), F.lit(0.0)),
-                6,
+            _cosine(
+                F.col("a.v"), F.col("b.v"), F.col("a.nrm"), F.col("b.nrm")
             ).alias("cosine_sim"),
         )
         .where(F.col("cosine_sim") >= threshold)
@@ -645,76 +575,22 @@ def ivf_topk(
 
     The other classic ANN sharding besides sign-bucket LSH: corpus cost
     is one broadcast pass over ``nlist`` centroids (assignment), query
-    cost |C|·nprobe/nlist scoring instead of |C|. ``centroids`` is an
-    injectable (id, vector) frame — in production an offline k-means
-    job; by default the first ``nlist`` corpus vectors by id, which is
-    deterministic and oracle-reproducible. Squared L2 to centroids uses
-    the dot-product identity (||a||²-2a·c+||c||²), rounded to 6dp with
-    centroid-id tie-break so cell assignment is reproducible across
-    engines.
+    cost |C|·nprobe/nlist scoring instead of |C|. ``centroids`` takes a
+    trained (cid, centroid) frame — in production an offline k-means
+    job (``kmeans_iterate``); the default is the first ``nlist`` corpus
+    vectors by id, which is deterministic and oracle-reproducible.
     """
-    if centroids is None:
-        centroids = (
-            corpus.orderBy(id_col).limit(nlist)
-            .select(F.col(id_col).alias("cid"), _as_double(vec_col).alias("c_vec"))
-        )
-    else:
-        # Explicit naming wins: (id_col, vec_col) if present, else
-        # kmeans_iterate's (cid, centroid) output so training composes
-        # directly. A frame carrying neither pair is a caller error —
-        # raise instead of guessing (a stray 'cid' column next to the
-        # intended id_col must not silently repoint the selection).
-        cols = set(centroids.columns)
-        if {id_col, vec_col} <= cols:
-            cid_src, vec_src = id_col, vec_col
-        elif {"cid", "centroid"} <= cols:
-            cid_src, vec_src = "cid", "centroid"
-        else:
-            raise ValueError(
-                f"ivf_topk centroids must carry ({id_col!r}, {vec_col!r}) "
-                f"or ('cid', 'centroid'); got {sorted(cols)}"
-            )
-        centroids = centroids.select(
-            F.col(cid_src).alias("cid"), _as_double(vec_src).alias("c_vec")
-        )
-
-    # ||c||^2 hoisted once per centroid; dot(v,v) is rank-invariant per
-    # vector, so assignment ordering needs only -2*dot(v,c) + ||c||^2 —
-    # one interpreted array fold per (vector, centroid) instead of three
-    centroids = centroids.withColumn("c2", dot(F.col("c_vec"), F.col("c_vec")))
-
-    def assign(df: DataFrame, out_id: str, n_cells: int) -> DataFrame:
-        return _assign_cells(df, centroids, id_col, vec_col, out_id, n_cells)
-
-    corpus_cells = assign(corpus, "neighbor_id", 1)
-    query_cells = assign(queries, "query_id", nprobe).select(
-        "query_id", "cid", F.col("v").alias("q_vec")
-    ).withColumn("q_nrm", l2_norm(F.col("q_vec")))
-    scored = (
-        corpus_cells.withColumn("c_nrm", l2_norm(F.col("v")))
-        .join(F.broadcast(query_cells), on="cid")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("v"))
-                / F.nullif(F.col("q_nrm") * F.col("c_nrm"), F.lit(0.0)),
-                6,
-            ).alias("cosine_sim"),
-        )
-        # a query probing nprobe cells can meet the same corpus vector
-        # only once (each corpus vector lives in exactly one cell)
-        .where(F.col("cosine_sim").isNotNull())
+    cents = _centroids(centroids, corpus, id_col, vec_col, nlist)
+    c = _assign_cells(corpus, cents, id_col, vec_col, "neighbor_id", 1)
+    q = _assign_cells(queries, cents, id_col, vec_col, "query_id", nprobe)
+    # a query probing nprobe cells can meet the same corpus vector only
+    # once (each corpus vector lives in exactly one cell)
+    scored = _scored_pairs(
+        c.withColumnRenamed("v", "c_vec"),
+        q.withColumnRenamed("v", "q_vec"),
+        "cid",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(scored, k)
 
 
 def _cov_moments(df: DataFrame, vec_col: str) -> DataFrame:

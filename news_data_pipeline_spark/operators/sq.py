@@ -24,11 +24,11 @@ public FAISS scalar-quantizer layout.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from news_data_pipeline_spark.functions.exact import settled_round, settled_units
 from news_data_pipeline_spark.operators.fanout import fan_out
-from news_data_pipeline_spark.operators.similarity import _as_double
+from news_data_pipeline_spark.operators.similarity import _as_double, _topk
 
 
 def _components(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -128,11 +128,4 @@ def sq_adc_topk(
             ).alias("sq_dist")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("sq_dist"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sq_dist", "rank")
-    )
+    return _topk(scored, k, "sq_dist")

@@ -982,9 +982,8 @@ def pq_partitioned_cell_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_ivf_adc_topk as _ivfadc,
     )
     from news_data_pipeline_spark.operators.similarity import (
-        _as_double,
         _assign_cells,
-        dot,
+        _centroids,
     )
     from news_data_pipeline_spark.sources.writers import write_layer
 
@@ -995,17 +994,9 @@ def pq_partitioned_cell_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id bigint, neighbor_id bigint, adc_dist double, rank int",
         )
     cb = _pq_trained_codebooks(spark, sf_dir)
-    cent = (
-        emb.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("cid"),
-            _as_double("embedding").alias("c_vec"),
-        )
-    )
-    cent2 = cent.withColumn("c2", dot(F.col("c_vec"), F.col("c_vec")))
+    cent = _centroids(None, emb, nlist=16)
     # ingest side: cell id assigned ONCE and stored with the code
-    cells = _assign_cells(emb, cent2, "vec_id", "embedding", "id", 1).select(
+    cells = _assign_cells(emb, cent, "vec_id", "embedding", "id", 1).select(
         "id", "cid"
     )
     # rebalance BY CID before the partitioned write (guide §6): the
@@ -1025,7 +1016,7 @@ def pq_partitioned_cell_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query side: probe cells, prune the scan to them
     queries = emb.where(F.col("vec_id") < 5)
     probe = _assign_cells(
-        queries, cent2, "vec_id", "embedding", "query_id", 4
+        queries, cent, "vec_id", "embedding", "query_id", 4
     ).select("query_id", "cid")
     probed = sorted(r["cid"] for r in probe.select("cid").distinct().collect())
     # read back with the written schema: an all-NULL embedding column
@@ -1655,8 +1646,9 @@ def _pqr_frozen_artifacts(spark: SparkSession, sf_dir: str):
         pq_residuals,
         pq_train,
     )
+    from news_data_pipeline_spark.operators.similarity import _centroids
 
-    cent_schema = "cid bigint, c_vec array<double>"
+    cent_schema = "cid bigint, centroid array<double>"
 
     def build():
         emb = (
@@ -1668,8 +1660,8 @@ def _pqr_frozen_artifacts(spark: SparkSession, sf_dir: str):
             )
         )
         cent_rows = [
-            (r["vec_id"], list(r["embedding"]))
-            for r in emb.orderBy("vec_id").limit(16).collect()
+            (r["cid"], list(r["centroid"]))
+            for r in _centroids(None, emb, nlist=16).collect()
         ]
         if not cent_rows:
             # no non-NULL vector: nothing to train on or to encode

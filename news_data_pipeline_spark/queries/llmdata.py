@@ -709,11 +709,11 @@ def _duck_sign_bucket_at(side: str, offset: int, m: int = 8) -> str:
 )
 def cosine_topk_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OR-amplified multi-table sign-LSH
-    (operators.similarity.multitable_signbucket_topk, 4 tables x 8
-    sign bits): the recall lever over the single-table
-    cosine_topk_signbucket — a true neighbor is missed only if its
-    signs differ from the query's in EVERY table's projection, so the
-    miss probability multiplies per table. Measured on this corpus at
+    (operators.similarity.signbucket_topk, 4 tables x 8 sign bits):
+    the recall lever over the single-table cosine_topk_signbucket — a
+    true neighbor is missed only if its signs differ from the query's
+    in EVERY table's projection, so the miss probability multiplies
+    per table. Measured on this corpus at
     sf0.01 vs the exact scan: single-table recall@5 0.02 -> 4-table
     0.12 — a 6x amplification for 4x candidate-scoring work, and an
     honest reading of the family itself: 8 axis-aligned sign bits
@@ -725,9 +725,7 @@ def cosine_topk_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-dependent vs data-independent partitioning gap, measured."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
-    return similarity.multitable_signbucket_topk(
-        emb, queries, k=5, m=8, tables=4
-    )
+    return similarity.signbucket_topk(emb, queries, k=5, m=8, tables=4)
 
 
 @register(
@@ -1129,14 +1127,7 @@ def ivf_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid (standard Lloyd), mirrored by the oracle's LEFT JOIN onto
     the exploded seeds."""
     emb = load_table(spark, sf_dir, "embeddings")
-    seeds = (
-        emb.orderBy("vec_id")
-        .limit(8)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").cast("array<double>").alias("centroid"),
-        )
-    )
+    seeds = similarity._centroids(None, emb, nlist=8)
     trained = similarity.kmeans_iterate(emb, seeds, iters=1)
     return trained.select(
         "cid", F.posexplode("centroid").alias("pos", "value")
@@ -1228,14 +1219,7 @@ def ivf_kmeans_two_iters(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (collect nlist rows, re-seed a literal frame per pass) is
     exactly what this exercises cross-engine."""
     emb = load_table(spark, sf_dir, "embeddings")
-    seeds = (
-        emb.orderBy("vec_id")
-        .limit(8)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").cast("array<double>").alias("centroid"),
-        )
-    )
+    seeds = similarity._centroids(None, emb, nlist=8)
     trained = similarity.kmeans_iterate(emb, seeds, iters=2)
     return trained.select(
         "cid", F.posexplode("centroid").alias("pos", "value")
@@ -3829,7 +3813,7 @@ def multimodal_crossmodal_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         mm.image_embeddings(cent_images, "doc_id", "payload", dim=16)
         .select(
             F.col("id").alias("cid"),
-            F.col("embedding").cast("array<double>").alias("c_vec"),
+            F.col("embedding").cast("array<double>").alias("centroid"),
         )
     )
     return pq_ivf_rerank_topk(
@@ -3858,10 +3842,7 @@ def _build_xmodal_artifacts(spark: SparkSession, docs: DataFrame):
     its build-vs-retrieval sweep is in SCALE.md "Retired paths")."""
     from news_data_pipeline_spark.operators import multimodal as mm
     from news_data_pipeline_spark.operators.pq import pq_encode, pq_train
-    from news_data_pipeline_spark.operators.similarity import (
-        _assign_cells,
-        dot,
-    )
+    from news_data_pipeline_spark.operators.similarity import _assign_cells
 
     def build(batches):
         import pandas as pd
@@ -3909,15 +3890,10 @@ def _build_xmodal_artifacts(spark: SparkSession, docs: DataFrame):
         for r in corpus.where(F.col("id") < 16).orderBy("id").collect()
     ]
     centroids = spark.createDataFrame(
-        cent_rows, "cid bigint, c_vec array<double>"
+        cent_rows, "cid bigint, centroid array<double>"
     )
     cells = _assign_cells(
-        corpus,
-        centroids.withColumn("c2", dot(F.col("c_vec"), F.col("c_vec"))),
-        "id",
-        "embedding",
-        "id",
-        1,
+        corpus, centroids, "id", "embedding", "id", 1
     ).select("id", "cid")
     # REBALANCE before the artifact write (guide §6 output sizing): the
     # row-local encode is narrow, so without it the codes shard
@@ -3962,7 +3938,7 @@ def _crossmodal_frozen_index(spark: SparkSession, sf_dir: str):
     import shutil
 
     cb_schema = "sub int, cid int, j int, value double"
-    cent_schema = "cid bigint, c_vec array<double>"
+    cent_schema = "cid bigint, centroid array<double>"
     emb_schema = "id long, embedding array<double>"
     codes_schema = "id long, sub int, code int, cid bigint"
 
@@ -4165,21 +4141,13 @@ def ivf_cell_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined count: linear, no shuffle of the corpus."""
     from news_data_pipeline_spark.operators.similarity import (
         _assign_cells,
-        dot,
+        _centroids,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = (
-        emb.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").cast("array<double>").alias("c_vec"),
-        )
-        .withColumn("c2", dot(F.col("c_vec"), F.col("c_vec")))
-    )
+    cents = _centroids(None, emb, nlist=16)
     cells = _assign_cells(
-        emb, centroids, "vec_id", "embedding", "neighbor_id", 1
+        emb, cents, "vec_id", "embedding", "neighbor_id", 1
     )
     return cells.groupBy("cid").agg(
         F.count(F.lit(1)).cast("long").alias("n_vectors")
@@ -4445,12 +4413,11 @@ def _recall_nprobe_curve(
     (``kmeans_iterate`` output) — the second tuning axis
     (``ann_recall_trained_curve``); default is the family's pinned
     first-``nlist``-by-id convention."""
-    from news_data_pipeline_spark.operators.fanout import fan_out
     from news_data_pipeline_spark.operators.similarity import (
-        _as_double,
         _assign_cells,
-        dot,
-        l2_norm,
+        _centroids,
+        _scored_pairs,
+        _topk,
     )
 
     queries = emb.where(F.col("vec_id") < n_eval)
@@ -4458,19 +4425,7 @@ def _recall_nprobe_curve(
         emb, queries, id_col="vec_id", k=k
     ).select("query_id", "neighbor_id")
 
-    if centroids is None:
-        centroids = emb.orderBy("vec_id").limit(nlist).select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").cast("array<double>").alias("c_vec"),
-        )
-    else:
-        centroids = centroids.select(
-            "cid",
-            F.col("centroid").cast("array<double>").alias("c_vec"),
-        )
-    centroids = centroids.withColumn(
-        "c2", dot(F.col("c_vec"), F.col("c_vec"))
-    )
+    centroids = _centroids(centroids, emb, "vec_id", "embedding", nlist)
     corpus_cells = _assign_cells(
         emb, centroids, "vec_id", "embedding", "neighbor_id", 1
     )
@@ -4486,51 +4441,19 @@ def _recall_nprobe_curve(
         exact = exact.localCheckpoint(eager=True)
         cell_sizes = cell_sizes.localCheckpoint(eager=True)
 
-    # each query's probe cells ranked 1..max(nprobe) — the window form
-    # of _assign_cells(n_cells=max) with the rank KEPT, same ordering
-    max_np = max(nprobes)
-    qbase = fan_out(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            _as_double("embedding").alias("q_vec"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.round(
-            -2 * dot(F.col("q_vec"), F.col("c_vec")) + F.col("c2"), 6
-        ),
-        F.asc("cid"),
-    )
-    query_probe = (
-        qbase.join(F.broadcast(centroids), how="cross")
-        .withColumn("__r", F.row_number().over(wq))
-        .where(F.col("__r") <= max_np)
-        .select("query_id", "cid", "q_vec", F.col("__r").alias("r"))
+    # each query's probe cells ranked r = 1..max(nprobe)
+    query_probe = _assign_cells(
+        queries, centroids, "vec_id", "embedding", "query_id", max(nprobes)
     )
 
     # score each (query, candidate) cosine ONCE, probe rank attached —
-    # identical expressions to ivf_topk's scored frame
+    # ivf_topk's scored frame
     np_arr = F.array(*[F.lit(int(n)).cast("int") for n in nprobes])
-    cand = (
-        corpus_cells.withColumn("c_nrm", l2_norm(F.col("v")))
-        .join(
-            F.broadcast(
-                query_probe.withColumn("q_nrm", l2_norm(F.col("q_vec")))
-            ),
-            on="cid",
-        )
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "r",
-            F.round(
-                dot(F.col("q_vec"), F.col("v"))
-                / F.nullif(F.col("q_nrm") * F.col("c_nrm"), F.lit(0.0)),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .where(F.col("cosine_sim").isNotNull())
+    cand = _scored_pairs(
+        corpus_cells.withColumnRenamed("v", "c_vec"),
+        query_probe.withColumnRenamed("v", "q_vec"),
+        "cid",
+        "r",
     )
     multi = cand.select(
         "query_id",
@@ -4539,17 +4462,10 @@ def _recall_nprobe_curve(
         "r",
         F.explode(np_arr).alias("nprobe"),
     ).where(F.col("r") <= F.col("nprobe"))
-    wn = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    approx = (
-        multi.withColumn("rank", F.row_number().over(wn))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("nprobe").alias("__np"),
-            F.col("query_id").alias("__qid"),
-            F.col("neighbor_id").alias("__hit"),
-        )
+    approx = _topk(multi, k, by=("nprobe", "query_id")).select(
+        F.col("nprobe").alias("__np"),
+        F.col("query_id").alias("__qid"),
+        F.col("neighbor_id").alias("__hit"),
     )
 
     exact_np = exact.select(
@@ -4744,14 +4660,7 @@ def ann_recall_trained_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``kmeans_iterate``'s constant-size-plan contract), so every sweep
     arm reuses the same frozen artifact — no per-arm retraining."""
     emb = load_table(spark, sf_dir, "embeddings")
-    seeds = (
-        emb.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").cast("array<double>").alias("centroid"),
-        )
-    )
+    seeds = similarity._centroids(None, emb, nlist=16)
     trained = similarity.kmeans_iterate(emb, seeds, iters=2)
     return _recall_nprobe_curve(spark, emb, n_eval=10, centroids=trained)
 

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import random
+
 import pyspark.sql.functions as F
+import pytest
 
 from news_data_pipeline_spark.operators import joins, similarity
 
@@ -281,19 +284,63 @@ def test_kmeans_iterate_keeps_empty_cells(spark):
     assert out[0] == [0.05, 0.05]            # converged to the mean
 
 
+@pytest.mark.parametrize(
+    "search", ["ivf_topk", "semantic_dedup_pairs", "pq_ivf_adc_topk"]
+)
+def test_centroids_take_kmeans_output(spark, search):
+    """One centroid contract: every ``centroids=`` of the ANN family
+    takes ``kmeans_iterate``'s (cid, centroid) output. Zero Lloyd
+    iterations return the seeds, the first nlist vectors by id, so the
+    injected frame reproduces the default; a trained frame runs; a
+    frame without (cid, centroid) raises ValueError."""
+    from news_data_pipeline_spark.operators.pq import pq_ivf_adc_topk, pq_train
+    from news_data_pipeline_spark.operators.similarity import kmeans_iterate
+
+    rng = random.Random(3)
+    vecs = spark.createDataFrame(
+        [(i, [float(rng.randint(-4, 4)) for _ in range(4)]) for i in range(24)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = vecs.where("vec_id < 4")
+    cb = pq_train(vecs, m=2, k=2, sub_dim=2, iters=1)
+    run = {
+        "ivf_topk": lambda c: similarity.ivf_topk(
+            vecs, queries, k=3, nlist=4, nprobe=2, centroids=c
+        ),
+        "semantic_dedup_pairs": lambda c: similarity.semantic_dedup_pairs(
+            vecs, threshold=0.5, nlist=4, centroids=c
+        ),
+        "pq_ivf_adc_topk": lambda c: pq_ivf_adc_topk(
+            queries, vecs, cb, sub_dim=2, k=3, nlist=4, nprobe=2, centroids=c
+        ),
+    }[search]
+    seeds = vecs.where("vec_id < 4").select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("centroid")
+    )
+
+    def rows(c):
+        return sorted(map(tuple, run(c).collect()))
+
+    assert rows(kmeans_iterate(vecs, seeds, iters=0)) == rows(None)
+    assert rows(kmeans_iterate(vecs, seeds, iters=1))
+    with pytest.raises(ValueError, match="'cid', 'centroid'"):
+        run(seeds.select(F.col("cid").alias("id"), F.col("centroid").alias("v")))
+
+
 def test_cosine_topk_arrow_matches_jvm_path(spark):
     """The BLAS mapInPandas scorer must equal the codegen fold exactly
     on exactly-representable vectors (integer components: every dot
     product and norm is exact in float64 regardless of summation
-    order), including tie-breaks, zero-norm drops, and self-exclusion."""
-    import random
-
+    order), including tie-breaks, self-exclusion, and the drop of
+    zero-norm, NULL and other-length vectors."""
     rng = random.Random(7)
     rows = [
         (i, [float(rng.randint(-4, 4)) for _ in range(8)]) for i in range(120)
     ]
     rows.append((120, [0.0] * 8))  # zero-norm corpus vector: dropped
-    vecs = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    rows.append((121, None))  # NULL corpus vector: dropped
+    rows.append((122, [1.0] * 9))  # other length than the queries: dropped
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = vecs.where("vec_id IN (3, 7, 120)")  # incl. zero-norm query
     jvm = similarity.cosine_topk(vecs, queries, k=4).collect()
     arrow = similarity.cosine_topk_arrow(vecs, queries, k=4).collect()
@@ -501,10 +548,7 @@ def test_multitable_signbucket_amplifies_single_table(spark):
     fail."""
     import pyspark.sql.functions as F
 
-    from news_data_pipeline_spark.operators.similarity import (
-        multitable_signbucket_topk,
-        signbucket_topk,
-    )
+    from news_data_pipeline_spark.operators.similarity import signbucket_topk
 
     rows = [
         # 8-dim vectors; ids 0/1 agree in signs of dims 0-3 only, so
@@ -522,9 +566,7 @@ def test_multitable_signbucket_amplifies_single_table(spark):
     }
     multi = {
         (r.query_id, r.neighbor_id)
-        for r in multitable_signbucket_topk(
-            vecs, qs, k=5, m=4, tables=2
-        ).collect()
+        for r in signbucket_topk(vecs, qs, k=5, m=4, tables=2).collect()
     }
     assert single == {(0, 1)}
     assert multi == {(0, 1), (0, 2)}  # table 1 recovers the miss
@@ -533,7 +575,7 @@ def test_multitable_signbucket_amplifies_single_table(spark):
     both = spark.createDataFrame(
         [(0, [1.0] * 8), (9, [1.0] * 8)], ["vec_id", "embedding"]
     )
-    out = multitable_signbucket_topk(
+    out = signbucket_topk(
         both, both.where(F.col("vec_id") == 0), k=5, m=4, tables=2
     ).collect()
     assert [(r.query_id, r.neighbor_id, r.rank) for r in out] == [(0, 9, 1)]
@@ -541,7 +583,7 @@ def test_multitable_signbucket_amplifies_single_table(spark):
     short = spark.createDataFrame(
         [(0, [1.0, -1.0]), (1, [1.0, -1.0])], ["vec_id", "embedding"]
     )
-    got = multitable_signbucket_topk(
+    got = signbucket_topk(
         short, short.where(F.col("vec_id") == 0), k=5, m=4, tables=2
     ).collect()
     assert [(r.query_id, r.neighbor_id) for r in got] == [(0, 1)]

@@ -11,27 +11,56 @@ mechanically over EVERY registered query's optimized physical plan:
   single-partition surrogate-key builds, ``03:38,43,58``) — every
   window must carry ``partitionBy`` unless the input is provably tiny.
 
+Each query's shuffle count (``exch``) and nested-loop joins (``bnlj``)
+must also stay at or under its PLANS.md row, counted by the same
+``tools/plan_audit.py`` counter over the same replay frame. A count may
+fall; a rise must regenerate PLANS.md in the same commit.
+
 Plans are compiled, not executed, so this covers every registered query in
-seconds.
+minutes.
 """
 
 from __future__ import annotations
 
+import os
 import re
+import sys
 
 import pytest
 
 from news_data_pipeline_spark.queries import query_map
+from tests.conftest import ROOT, SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+try:
+    from plan_audit import (
+        physical_plan as plan_of,
+        plan_facts,
+        replay_frame,
+        ts_residual_joins,
+    )
+finally:
+    sys.path.pop(0)
 
 FORBIDDEN = ("CartesianProduct", "BatchEvalPython")
 
 
-def plan_of(spark, df) -> str:
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    )
+def plans_md_budget() -> dict[str, dict[str, int]]:
+    """{query: {"exch": n, "bnlj": n}} from PLANS.md's table rows."""
+    with open(os.path.join(ROOT, "PLANS.md")) as f:
+        lines = f.read().splitlines()
+    head = next(line for line in lines if line.startswith("| query |"))
+    cols = [c.strip() for c in head.strip("|").split("|")]
+    budget = {}
+    for line in lines:
+        cells = [c.strip() for c in line.strip("|").split("|")]
+        if len(cells) == len(cols) and cells[1].isdigit():
+            row = dict(zip(cols, cells))
+            budget[row["query"]] = {k: int(row[k]) for k in ("exch", "bnlj")}
+    return budget
+
+
+PLAN_BUDGET = plans_md_budget()
 
 
 # A Window whose sort feeds from Exchange SinglePartition == an
@@ -59,50 +88,22 @@ INTERVAL_JOIN_PROOFS: dict[str, str] = {
     # name -> one-line proof that per-key candidates are bounded
 }
 
-_TS_INEQ = {"LessThan", "LessThanOrEqual", "GreaterThan", "GreaterThanOrEqual"}
-
-
-def _jwalk(node):
-    yield node
-    for i in range(node.children().size()):
-        yield from _jwalk(node.children().apply(i))
-
-
-def ts_residual_joins(df) -> list[tuple[str, list[str], int]]:
-    """Every logical Join whose condition contains a timestamp
-    inequality: (joinType, sorted equi-key attribute names, #inequalities).
-    Walks the OPTIMIZED logical plan so post-join ``where()`` residuals
-    Catalyst pushed into the join condition are seen."""
-    out = []
-    for n in _jwalk(df._jdf.queryExecution().optimizedPlan()):
-        if n.nodeName() != "Join":
-            continue
-        cond = n.condition()
-        if not cond.isDefined():
-            continue
-        n_ineq, eq_names = 0, set()
-        for e in _jwalk(cond.get()):
-            kind = e.nodeName()
-            if kind in _TS_INEQ:
-                t = e.children().apply(0).dataType().typeName()
-                if t.startswith("timestamp"):
-                    n_ineq += 1
-            elif kind == "EqualTo":
-                for side in (0, 1):
-                    c = e.children().apply(side)
-                    if c.nodeName() == "AttributeReference":
-                        eq_names.add(c.name())
-        if n_ineq:
-            out.append((str(n.joinType()), sorted(eq_names), n_ineq))
-    return out
-
 
 @pytest.mark.parametrize("name", sorted(query_map()))
 def test_no_scale_antipatterns(spark, name):
-    df = query_map()[name](spark, SF_DIR)
+    df = replay_frame(spark, query_map()[name], SF_DIR)
     plan = plan_of(spark, df)
     for marker in FORBIDDEN:
         assert marker not in plan, f"{name}: {marker} in physical plan"
+    facts = plan_facts(plan)
+    row = PLAN_BUDGET.get(name)
+    assert row, f"{name}: no PLANS.md row — run tools/plan_audit.py"
+    got = {"exch": facts["exchanges"], "bnlj": facts["bnlj"]}
+    over = {k: (n, row[k]) for k, n in got.items() if n > row[k]}
+    assert not over, (
+        f"{name}: plan count over its PLANS.md row (got, row): {over} — "
+        "fix the plan, or rerun tools/plan_audit.py and commit PLANS.md"
+    )
     m = GLOBAL_WINDOW.search(plan)
     assert m is None, (
         f"{name}: unpartitioned Window (single-partition exchange at "

@@ -148,10 +148,7 @@ def test_pq_ivf_stored_cells_path_matches_inline(spark):
     via a broadcast of the probed cells instead of shuffling the code
     table."""
     from news_data_pipeline_spark.operators.pq import pq_ivf_adc_topk
-    from news_data_pipeline_spark.operators.similarity import (
-        _assign_cells,
-        dot,
-    )
+    from news_data_pipeline_spark.operators.similarity import _assign_cells
 
     vecs = _vectors(spark)
     cb = pq_train(vecs, m=2, k=2, sub_dim=2, iters=2)
@@ -161,9 +158,8 @@ def test_pq_ivf_stored_cells_path_matches_inline(spark):
         .limit(2)
         .select(
             F.col("vec_id").alias("cid"),
-            F.col("embedding").cast("array<double>").alias("c_vec"),
+            F.col("embedding").cast("array<double>").alias("centroid"),
         )
-        .withColumn("c2", dot(F.col("c_vec"), F.col("c_vec")))
     )
     cells = _assign_cells(
         vecs, centroids, "vec_id", "embedding", "neighbor_id", 1
@@ -187,14 +183,14 @@ def test_pq_ivf_stored_cells_path_matches_inline(spark):
                 pq_ivf_adc_topk(
                     vecs, vecs, cb, sub_dim=2, k=10, nlist=2,
                     nprobe=nprobe, codes=codes_cid,
-                    centroids=centroids.drop("c2"),
+                    centroids=centroids,
                 ).collect(),
             )
         )
         assert stored == inline
     plan = pq_ivf_adc_topk(
         vecs, vecs, cb, sub_dim=2, k=10, nlist=2, nprobe=1,
-        codes=codes_cid, centroids=centroids.drop("c2"),
+        codes=codes_cid, centroids=centroids,
     )._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
 
@@ -210,7 +206,7 @@ def test_pq_ivf_adc_prunes_cross_cell_candidates(spark):
     # centroids injected at the cluster means so cells = clusters
     cents = spark.createDataFrame(
         [(0, [1.1, 0.0, 0.0, 0.9]), (1, [0.0, 5.1, 4.9, 0.0])],
-        ["cid", "c_vec"],
+        ["cid", "centroid"],
     )
     out = pq_ivf_adc_topk(
         vecs, vecs, cb, sub_dim=2, k=10, nlist=2, nprobe=1,
@@ -461,7 +457,9 @@ def test_maintain_pq_codes_streamed_equals_whole_corpus(spark, tmp_path):
     cent = (
         vecs.orderBy("vec_id")
         .limit(2)
-        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("c_vec"))
+        .select(
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("centroid")
+        )
     )
     cb = pq_train(
         pq_residuals(vecs, cent), id_col="id", vec_col="rvec",

@@ -629,7 +629,7 @@ def test_partition_sink_replay_is_idempotent(spark, tmp_path, sink):
         schema, rows = vecs, vec_rows
         every = spark.createDataFrame(vec_rows, vecs)
         cent = every.orderBy("vec_id").limit(2).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("c_vec")
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("centroid")
         )
         cb = pq.pq_train(
             pq.pq_residuals(every, cent), id_col="id", vec_col="rvec",

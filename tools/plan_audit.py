@@ -103,21 +103,22 @@ def _jwalk(node):
         yield from _jwalk(node.children().apply(i))
 
 
-def ts_residual_joins(df) -> tuple[int, int]:
-    """(licensed, unlicensed) joins whose condition carries a timestamp
+def ts_residual_joins(df) -> list[tuple[str, list[str], int]]:
+    """Every logical Join whose condition carries a timestamp
     inequality — the per-key-quadratic interval-join shape (SCALE.md
-    round 12). Licensed = the equi-key set includes the ``__tb`` time
-    bucket (``interval_join_bucketed``); anything else is the shape
-    tests/test_plans.py rejects. Walks the optimized LOGICAL plan so
-    residuals Catalyst pushed into join conditions are seen."""
-    licensed = unlicensed = 0
+    round 12): (joinType, sorted equi-key attribute names,
+    #inequalities). An equi-key set holding the ``__tb`` time bucket
+    (``interval_join_bucketed``) licenses it; anything else is the
+    shape tests/test_plans.py rejects. Walks the optimized LOGICAL plan
+    so residuals Catalyst pushed into join conditions are seen."""
+    out = []
     for n in _jwalk(df._jdf.queryExecution().optimizedPlan()):
         if n.nodeName() != "Join":
             continue
         cond = n.condition()
         if not cond.isDefined():
             continue
-        n_ineq, bucketed = 0, False
+        n_ineq, eq_names = 0, set()
         for e in _jwalk(cond.get()):
             kind = e.nodeName()
             if kind in _TS_INEQ:
@@ -127,34 +128,40 @@ def ts_residual_joins(df) -> tuple[int, int]:
             elif kind == "EqualTo":
                 for side in (0, 1):
                     c = e.children().apply(side)
-                    if (
-                        c.nodeName() == "AttributeReference"
-                        and c.name() == "__tb"
-                    ):
-                        bucketed = True
+                    if c.nodeName() == "AttributeReference":
+                        eq_names.add(c.name())
         if n_ineq:
-            if bucketed:
-                licensed += 1
-            else:
-                unlicensed += 1
-    return licensed, unlicensed
+            out.append((str(n.joinType()), sorted(eq_names), n_ineq))
+    return out
+
+
+def replay_frame(spark, fn, sf_dir: str):
+    """The frame a query's later calls run: the first call of a
+    cache-served query builds its artifact, every later call in the
+    session replays it, so construct twice and keep the second."""
+    fn(spark, sf_dir)
+    return fn(spark, sf_dir)
+
+
+def physical_plan(spark, df) -> str:
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "simple"
+        )
+    )
+
+
+def plan_facts(physical: str) -> dict:
+    """Count every ``PATTERNS`` fact in a physical plan string."""
+    return {key: len(re.findall(pat, physical)) for key, pat in PATTERNS.items()}
 
 
 def audit(spark, name: str, fn) -> dict:
-    # The first call of a cache-served query builds its artifact; every
-    # later call in the session runs the replay plan, so audit that one.
-    fn(spark, SF_DIR)
-    df = fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "extended"
-        )
-    )
-    physical = plan.split("== Physical Plan ==")[-1]
-    out = {"name": name}
-    for key, pat in PATTERNS.items():
-        out[key] = len(re.findall(pat, physical))
-    out["tsj_ok"], out["tsj_bad"] = ts_residual_joins(df)
+    df = replay_frame(spark, fn, SF_DIR)
+    out = {"name": name, **plan_facts(physical_plan(spark, df))}
+    joins = ts_residual_joins(df)
+    out["tsj_ok"] = sum("__tb" in keys for _, keys, _ in joins)
+    out["tsj_bad"] = len(joins) - out["tsj_ok"]
     return out
 
 
@@ -178,6 +185,8 @@ def main() -> None:
         "many carry pushed filters. `CartesianProduct`/`BatchEvalPython` never appear —",
         "`tests/test_plans.py` rejects them mechanically; `bnlj` is",
         "legitimate only against a provably tiny broadcast side.",
+        "`tests/test_plans.py` also fails a query whose `exch` or `bnlj`",
+        "exceeds its row: a rise must update this file in the same commit.",
         "",
         "| query | exch | 1part | bhj | smj | bnlj | arrow | scans | pushed |",
         "|---|---|---|---|---|---|---|---|---|",
