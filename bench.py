@@ -165,7 +165,10 @@ class ShuffleMeter:
     """Per-query shuffle read/write bytes from the app status store
     (r15, VERDICT item 2: give the bench a data-bound signal — at
     sf0.1 wall-clock is scheduler-overhead-bound, so shuffle BYTES are
-    the instrument that can still see a shuffle-elimination win).
+    the instrument that can still see a shuffle-elimination win), and
+    the Janino compiles in between from Spark's ``CodegenMetrics``: a
+    steady run that still compiles classes is paying codegen-cache
+    churn, not data work.
 
     Polls ``AppStatusStore.stageList`` between timed queries — zero
     work inside the timed region, no listener registration, works with
@@ -176,15 +179,21 @@ class ShuffleMeter:
     query — an approximation, disclosed here; the medians over three
     sweeps make it stable in practice. Purely ADDITIVE: timing
     methodology, tiers and both output lines' existing fields are
-    unchanged; the detail line gains ``queries_shuffle_bytes``.
-    Any py4j failure disables the meter (values become null) rather
-    than touching the bench.
+    unchanged; the detail line gains ``queries_shuffle_bytes`` and
+    ``queries_compiles``. Any py4j failure disables the meter (values
+    become null) rather than touching the bench.
     """
 
     def __init__(self, spark) -> None:
         self._spark = spark
         self._last = -1
+        self._compiled = 0
         self._ok = True
+
+    def _compiles(self) -> int:
+        """Janino compiles in this JVM so far (driver and local tasks)."""
+        codegen = self._spark.sparkContext._jvm.org.apache.spark.metrics.source
+        return codegen.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
 
     def _stages(self):
         sc = self._spark.sparkContext
@@ -212,11 +221,13 @@ class ShuffleMeter:
         try:
             ids = [sid for sid, _, _ in self._stages()]
             self._last = max(ids, default=self._last)
+            self._compiled = self._compiles()
         except Exception:
             self._ok = False
 
     def delta(self):
-        """[shuffle_write_bytes, shuffle_read_bytes] since mark()."""
+        """[shuffle_write_bytes, shuffle_read_bytes, compiles] since
+        mark()."""
         if not self._ok:
             return None
         try:
@@ -226,7 +237,8 @@ class ShuffleMeter:
             self._last = max(
                 [sid for sid, _, _ in st], default=self._last
             )
-            return [wr, rd]
+            compiled, self._compiled = self._compiled, self._compiles()
+            return [wr, rd, self._compiled - compiled]
         except Exception:
             self._ok = False
             return None
@@ -273,8 +285,8 @@ def main() -> None:
 
     # Three timed full-suite sweeps; per-query median (see docstring).
     # The shuffle meter brackets each timed run with status-store polls
-    # (outside the timed region) — per-query shuffle bytes ship in the
-    # DETAIL line only (r15; compact line unchanged).
+    # (outside the timed region) — per-query shuffle bytes and Janino
+    # compiles ship in the DETAIL line only (compact line unchanged).
     meter = ShuffleMeter(spark)
     reps: dict[str, list[float]] = {name: [] for name in all_queries}
     shuf_reps: dict[str, list] = {name: [] for name in all_queries}
@@ -304,19 +316,24 @@ def main() -> None:
     }
 
     def med_shuffle(ts: list):
-        good = [t for t in ts if t is not None]
+        good = [t[:2] for t in ts if t is not None]
         if not good:
             return None
         # median by write bytes (the exchange-produced bytes)
         return sorted(good)[len(good) // 2]
 
+    def med_compiles(ts: list):
+        good = sorted(t[2] for t in ts if t is not None)
+        return good[len(good) // 2] if good else None
+
     shuffle_bytes = {
         name: med_shuffle(shuf_reps[name]) for name in all_queries
     }
+    compiles = {name: med_compiles(shuf_reps[name]) for name in all_queries}
 
     detail, compact = format_output(
         timings, minmax, tail_timings, tail_minmax, sf,
-        build_timings, build_minmax, shuffle_bytes,
+        build_timings, build_minmax, shuffle_bytes, compiles,
     )
     # Full-detail line first (for humans / BENCH_*_local.json), compact
     # summary LAST — the driver's stdout-tail capture must always
@@ -337,6 +354,7 @@ def format_output(
     build_timings: dict | None = None,
     build_minmax: dict | None = None,
     shuffle_bytes: dict | None = None,
+    compiles: dict | None = None,
 ) -> tuple[str, str]:
     """(detail_line, compact_line) — compact MUST stay small and carry
     the driver-contract fields; pinned by tests/test_functions.py.
@@ -365,6 +383,9 @@ def format_output(
             # shuffle_read] bytes (median sweep) — the data-bound
             # signal sf0.1 wall-clock cannot carry. Detail line only.
             "queries_shuffle_bytes": shuffle_bytes or {},
+            # per-query Janino compiles (median sweep): 0 once every
+            # generated class of a query stays in the codegen cache
+            "queries_compiles": compiles or {},
             "sf": sf,
         }
     )

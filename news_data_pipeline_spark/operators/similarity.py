@@ -272,9 +272,9 @@ def cosine_topk_arrow(
     the final global top-k carries ``partitions * |Q| * k`` rows — not
     scores. Local-then-global top-k is exact because both stages use
     the same total order (rounded cosine desc, neighbor id asc).
-    Corpus vectors that are NULL or whose length differs from the
-    queries' are dropped before scoring: the JVM fold scores such a
-    pair NULL and drops it.
+    Queries are grouped by vector length, and each scores only the
+    corpus vectors of its own length; NULL vectors are dropped. The JVM
+    fold scores a pair of different lengths NULL and drops it.
 
     Per-pair float math differs from the JVM fold only in summation
     order (BLAS is blocked/pairwise, the fold is sequential), i.e. in
@@ -292,57 +292,67 @@ def cosine_topk_arrow(
         .where(F.col("v").isNotNull())
         .collect()
     )
-    if not q_rows:
+    by_dim: dict[int, list] = {}
+    for q_id, v in q_rows:
+        by_dim.setdefault(len(v), []).append((q_id, v))
+    # vector length -> (query ids, pre-normalized (d, |Q|) query matrix)
+    groups = {}
+    for dim, rows in by_dim.items():
+        q_ids = np.array([r[0] for r in rows])
+        Q = np.array([r[1] for r in rows], dtype=np.float64)
+        q_nrm = np.linalg.norm(Q, axis=1)
+        keep = q_nrm > 0.0  # zero-norm queries score null everywhere: drop
+        if keep.any():
+            groups[dim] = (q_ids[keep], (Q[keep] / q_nrm[keep, None]).T)
+    if not groups:
         empty = "query_id {t}, neighbor_id {t}, cosine_sim double, rank int".format(
             t=id_type
         )
         return corpus.sparkSession.createDataFrame([], empty)
-    q_ids = np.array([r[0] for r in q_rows])
-    Q = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_nrm = np.linalg.norm(Q, axis=1)
-    keep = q_nrm > 0.0  # zero-norm queries score null everywhere: drop
-    q_ids, Q, q_nrm = q_ids[keep], Q[keep], q_nrm[keep]
-    Qt = (Q / q_nrm[:, None]).T  # (d, |Q|), pre-normalized once
-    bq = corpus.sparkSession.sparkContext.broadcast((q_ids, Qt))
+    bq = corpus.sparkSession.sparkContext.broadcast(groups)
 
     out_schema = (
         f"query_id {id_type}, neighbor_id {id_type}, cosine_sim double"
     )
 
-    def score(batches):
-        ids_b, Qt_b = bq.value
+    def local_topk(pdf, ids_b, Qt_b):
+        if not len(pdf):
+            return
         nq = ids_b.shape[0]
+        C = np.array(list(pdf[vec_col]), dtype=np.float64)
+        nrm = np.linalg.norm(C, axis=1)
+        ok = nrm > 0.0
+        if not ok.any():
+            return
+        C, nrm = C[ok], nrm[ok]
+        n_ids = pdf[id_col].to_numpy()[ok]
+        sims = np.round((C / nrm[:, None]) @ Qt_b, 6)  # (n, |Q|)
+        # self-pairs out of the running before top-k selection
+        self_mask = n_ids[:, None] == ids_b[None, :]
+        sims[self_mask] = -np.inf
+        kk = min(k, sims.shape[0])
+        # per-query local top-k: argsort on (sim desc, neighbor asc)
+        order = np.lexsort((n_ids[:, None].repeat(nq, 1), -sims), axis=0)[:kk]
+        qi = np.repeat(np.arange(nq)[None, :], kk, 0).ravel()
+        ni = order.ravel()
+        sel = sims[ni, qi]
+        fin = np.isfinite(sel)
+        yield pd.DataFrame(
+            {
+                "query_id": ids_b[qi[fin]],
+                "neighbor_id": n_ids[ni[fin]],
+                "cosine_sim": sel[fin],
+            }
+        )
+
+    def score(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.array(list(pdf[vec_col]), dtype=np.float64)
-            nrm = np.linalg.norm(C, axis=1)
-            ok = nrm > 0.0
-            if not ok.any():
-                continue
-            C, nrm = C[ok], nrm[ok]
-            n_ids = pdf[id_col].to_numpy()[ok]
-            sims = np.round((C / nrm[:, None]) @ Qt_b, 6)  # (n, |Q|)
-            # self-pairs out of the running before top-k selection
-            self_mask = n_ids[:, None] == ids_b[None, :]
-            sims[self_mask] = -np.inf
-            kk = min(k, sims.shape[0])
-            # per-query local top-k: argsort on (sim desc, neighbor asc)
-            order = np.lexsort((n_ids[:, None].repeat(nq, 1), -sims), axis=0)[:kk]
-            qi = np.repeat(np.arange(nq)[None, :], kk, 0).ravel()
-            ni = order.ravel()
-            sel = sims[ni, qi]
-            fin = np.isfinite(sel)
-            yield pd.DataFrame(
-                {
-                    "query_id": ids_b[qi[fin]],
-                    "neighbor_id": n_ids[ni[fin]],
-                    "cosine_sim": sel[fin],
-                }
-            )
+            dims = pdf[vec_col].map(len).to_numpy()
+            for dim, (ids_b, Qt_b) in bq.value.items():
+                yield from local_topk(pdf[dims == dim], ids_b, Qt_b)
 
     vecs = corpus.select(id_col, _as_double(vec_col).alias(vec_col)).where(
-        F.size(vec_col) == Q.shape[1]
+        F.size(vec_col).isin(list(groups))
     )
     return _topk(fan_out(vecs).mapInPandas(score, out_schema), k)
 

@@ -163,6 +163,21 @@ def get_spark(
     builder = builder.config(
         "spark.python.daemon.module", "news_data_pipeline_spark._daemon"
     )
+    # Spark's cache of compiled generated classes holds 100 entries by
+    # default, about one run of either perfbench workload: the first run
+    # compiles 88 Janino classes (medallion) and 99 (corpus with
+    # bm25_search). The cache is a Guava LRU split into 4 segments that
+    # each evict on their own, so a segment overflows before 100: at 100
+    # a steady corpus run recompiled 28 classes every time, and a
+    # medallion run up to 17 once the one-off class each DQ-split
+    # micro-batch compiles had pushed others out; C1 then JITs every
+    # recompiled class again. At 128 and at 256 a steady run compiled 0
+    # classes (corpus) and 1 (medallion, that one-off class); 256 leaves
+    # 64 per segment, 2.5x the ~25 a working set of ~100 puts in each.
+    # Measured on a 4-core host. A static conf, read once per JVM when
+    # CodeGenerator's cache is built: a session only passed through
+    # tune() keeps the JVM's value.
+    builder = builder.config("spark.sql.codegen.cache.maxEntries", "256")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return tune(spark)

@@ -30,10 +30,13 @@ def test_equal_arms_report_every_key(spark):
             "median_s",
             "shuffle_write_bytes",
             "shuffle_read_bytes",
+            "compiles",
             "wins_vs_first",
         }
         assert 0 <= arm["wins_vs_first"] <= ab.PAIRS
     assert report["arms"]["range"]["wins_vs_first"] == 0
+    # warmed up, a rerun of the same plan finds its classes cached
+    assert report["arms"]["range"]["compiles"] == 0
 
 
 def test_different_rows_raise_before_any_timed_run(spark, monkeypatch):

@@ -221,6 +221,8 @@ def test_bench_compact_line_stays_driver_parseable():
     assert set(bench.BUILD_COST_QUERIES).isdisjoint(bench.TAIL_QUERIES)
     assert set(bench.BUILD_COST_QUERIES).isdisjoint(bench.HEADLINE_QUERIES)
     assert len(compact) < 1024  # stays inside a conservative tail window
+    assert "queries_compiles" in _json.loads(detail)  # detail line only
+    assert "queries_compiles" not in parsed
     assert "\n" not in compact and "\n" not in detail  # one line each
 
 

@@ -331,22 +331,27 @@ def test_cosine_topk_arrow_matches_jvm_path(spark):
     """The BLAS mapInPandas scorer must equal the codegen fold exactly
     on exactly-representable vectors (integer components: every dot
     product and norm is exact in float64 regardless of summation
-    order), including tie-breaks, self-exclusion, and the drop of
-    zero-norm, NULL and other-length vectors."""
+    order), including tie-breaks, self-exclusion, the drop of zero-norm
+    and NULL vectors, and queries of several lengths, each scored only
+    against corpus vectors of its own length."""
     rng = random.Random(7)
     rows = [
         (i, [float(rng.randint(-4, 4)) for _ in range(8)]) for i in range(120)
     ]
     rows.append((120, [0.0] * 8))  # zero-norm corpus vector: dropped
     rows.append((121, None))  # NULL corpus vector: dropped
-    rows.append((122, [1.0] * 9))  # other length than the queries: dropped
+    rows.append((122, [1.0] * 9))  # no query of this length: dropped
+    rows += [(123, [1.0, 2.0]), (124, [2.0, 1.0]), (125, [3.0, 0.0])]
+    rows += [(126, [1.0, 0.0, 1.0]), (127, [0.0, 1.0, 1.0]), (128, [1.0, 1.0, 0.0])]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = vecs.where("vec_id IN (3, 7, 120)")  # incl. zero-norm query
+    # 8-, 2- and 3-component queries, and a zero-norm one
+    queries = vecs.where("vec_id IN (3, 7, 120, 123, 126)")
     jvm = similarity.cosine_topk(vecs, queries, k=4).collect()
     arrow = similarity.cosine_topk_arrow(vecs, queries, k=4).collect()
     key = lambda r: (r["query_id"], r["rank"])
     assert sorted(jvm, key=key) == sorted(arrow, key=key)
-    assert {r["query_id"] for r in arrow} == {3, 7}  # zero-norm query gone
+    assert {r["query_id"] for r in arrow} == {3, 7, 123, 126}  # zero-norm gone
+    assert {r["neighbor_id"] for r in arrow if r["query_id"] == 123} == {124, 125}
 
 
 def test_cosine_topk_arrow_empty_queries(spark):

@@ -106,3 +106,66 @@ def test_package_init_imports_no_pyspark():
         cwd=ROOT, capture_output=True, text=True, check=True,
     )
     assert out.stdout.strip() == "False"
+
+
+def test_second_run_of_a_chain_compiles_no_class(spark, tmp_path):
+    """The session's codegen cache holds a whole corpus run's generated
+    classes, so a rerun of the same chain compiles none (Spark's default
+    of 100 entries recompiles part of the working set on every run)."""
+    import pyspark.sql.functions as F
+
+    from news_data_pipeline_spark.functions.arrow_text import (
+        compression_ratio,
+        normalize_unicode,
+    )
+    from news_data_pipeline_spark.operators.dedup import fingerprint_dedup
+    from news_data_pipeline_spark.operators.packing import pack_sequences
+    from news_data_pipeline_spark.operators.sampling import (
+        mixture_sample_by_rates,
+        temperature_mixture_rates,
+    )
+    from news_data_pipeline_spark.queries import query_map
+    from news_data_pipeline_spark.sources import writers
+    from news_data_pipeline_spark.sources.jsonl import (
+        read_jsonl,
+        split_corrupt_records,
+    )
+    from tests.conftest import SF_DIR
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "256"
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "docs.jsonl").write_text(
+        "".join(
+            f'{{"doc_id": {i}, "source": "s{i % 3}", '
+            f'"text": "document {i % 150} about topic {i * 7} and more words"}}\n'
+            for i in range(300)
+        )
+        + "NOT JSON\n"
+    )
+    bm25_search = query_map()["bm25_search"]
+
+    def run(out):
+        valid, corrupt = split_corrupt_records(
+            read_jsonl(spark, str(landing), "doc_id BIGINT, source STRING, text STRING")
+        )
+        writers.quarantine_writer(f"{out}/corrupt")(corrupt)
+        corpus = valid.withColumn("text", normalize_unicode(F.col("text")))
+        corpus = corpus.where(compression_ratio(F.col("text")) > 0.1)
+        kept = fingerprint_dedup(corpus, "text", "doc_id")
+        rates = temperature_mixture_rates(kept, "source", alpha=0.3)
+        mixed = mixture_sample_by_rates(kept, "doc_id", "source", rates)
+        tokens = mixed.withColumn("n_tokens", F.size(F.split(F.trim("text"), r"\s+")))
+        writers.write_layer(
+            pack_sequences(tokens, "doc_id", "n_tokens", ctx_len=64),
+            f"{out}/packed",
+            mode="overwrite",
+        )
+        bm25_search(spark, SF_DIR).write.mode("overwrite").parquet(f"{out}/bm25")
+
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+    run(str(tmp_path / "first"))
+    before = compiles.getCount()
+    run(str(tmp_path / "second"))
+    assert compiles.getCount() - before == 0

@@ -1,4 +1,5 @@
-"""Rotated A/B of DataFrame arms: median wall seconds and shuffle bytes.
+"""Rotated A/B of DataFrame arms: median wall seconds, shuffle bytes and
+Janino compiles.
 
     python tools/ab.py pkg.module:arm_a pkg.module:arm_b [...]
 
@@ -9,12 +10,15 @@ the oracle gate compares (``check_oracle.frame_to_multiset`` and
 ``rows_equal``); a mismatch raises. Then each arm runs once un-timed
 (JVM and codegen warm-up) and ``PAIRS`` rounds run every arm to the
 noop sink through ``bench.run_query``, the order rotated each round so
-no arm always runs first. Shuffle bytes come from ``bench.ShuffleMeter``.
+no arm always runs first. Shuffle bytes and compiles come from
+``bench.ShuffleMeter``.
 
 Prints one JSON line: per arm (keyed by its ``module:function``) the
-median wall seconds, the median shuffle write and read bytes (null if
-the status store could not be read), and ``wins_vs_first``, the rounds
-in which the arm ran faster than the first arm.
+median wall seconds, the median shuffle write and read bytes and the
+median count of classes compiled per run (null if the status store or
+the codegen metrics could not be read), and ``wins_vs_first``, the
+rounds in which the arm ran faster than the first arm. A timed run
+that compiles is paying codegen, not data work.
 """
 
 from __future__ import annotations
@@ -64,25 +68,26 @@ def run(spark, arms: dict) -> dict:
     def timed(name):
         meter.mark()
         sec = run_query(lambda s, _: arms[name](s), spark, None)
-        return sec, meter.delta() or [None, None]
+        return sec, meter.delta() or [None, None, None]
 
     for _ in range(WARMUP):
         for name in names:
             timed(name)
     secs = {n: [] for n in names}
-    shuffle = {n: [] for n in names}
+    metered = {n: [] for n in names}
     for r in range(PAIRS):
         for name in names[r % len(names):] + names[: r % len(names)]:
-            sec, wr_rd = timed(name)
+            sec, counts = timed(name)
             secs[name].append(sec)
-            shuffle[name].append(wr_rd)
+            metered[name].append(counts)
     return {
         "pairs": PAIRS,
         "arms": {
             n: {
                 "median_s": statistics.median(secs[n]),
-                "shuffle_write_bytes": _median([w for w, _ in shuffle[n]]),
-                "shuffle_read_bytes": _median([r for _, r in shuffle[n]]),
+                "shuffle_write_bytes": _median([w for w, _, _ in metered[n]]),
+                "shuffle_read_bytes": _median([r for _, r, _ in metered[n]]),
+                "compiles": _median([c for _, _, c in metered[n]]),
                 "wins_vs_first": sum(
                     s < f for s, f in zip(secs[n], secs[first])
                 ),
