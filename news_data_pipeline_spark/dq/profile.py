@@ -6,14 +6,11 @@ the discovery step before that — per-column null rates, cardinalities,
 and value ranges over an arbitrary frame, so rule thresholds (NotNull,
 Unique, min_rows) are chosen from measured data instead of guessed.
 
-Shape at scale: ONE aggregation job for the whole profile. The exact
-path computes every column's `count(DISTINCT)` in the same aggregate,
+Shape at scale: ONE aggregation job for the whole profile. Every
+column's exact `count(DISTINCT)` is computed in the same aggregate,
 which Spark plans as an Expand (input replicated once per distinct
 aggregate) feeding a single shuffle — fine into the tens of columns,
-but the replication factor IS the column count. The `exact=False` path
-swaps in `approx_count_distinct` (HyperLogLog, relative error ~2.3%):
-no Expand, plain one-shuffle partial aggregation — the 100-TB default,
-with `exact=True` as the oracle-verifiable twin.
+but the replication factor IS the column count.
 """
 
 from __future__ import annotations
@@ -27,8 +24,6 @@ from news_data_pipeline_spark.dq.rules import InRange, NotNull, Rule, Unique
 def profile_columns(
     df: DataFrame,
     cols: list[str] | None = None,
-    *,
-    exact: bool = True,
 ) -> DataFrame:
     """Profile ``cols`` (default: all) into one row per column:
     ``(col_name, n_rows, n_non_null, n_distinct, min_value, max_value)``.
@@ -41,16 +36,11 @@ def profile_columns(
     missing = [c for c in cols if c not in df.columns]
     if missing:
         raise ValueError(f"profile_columns: no such columns {missing}")
-    nd = (
-        (lambda c: F.count_distinct(F.col(c)))
-        if exact
-        else (lambda c: F.approx_count_distinct(c))
-    )
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in cols:
         aggs += [
             F.count(F.col(c)).alias(f"__nn_{c}"),
-            nd(c).alias(f"__nd_{c}"),
+            F.count_distinct(F.col(c)).alias(f"__nd_{c}"),
             F.min(F.col(c)).cast("string").alias(f"__min_{c}"),
             F.max(F.col(c)).cast("string").alias(f"__max_{c}"),
         ]
@@ -78,8 +68,6 @@ def suggest_rules(
     profile: DataFrame | None = None,
     *,
     not_null_threshold: float = 1.0,
-    suggest_keys: bool = True,
-    suggest_ranges: bool = True,
     range_pad: float = 0.0,
 ) -> list[Rule]:
     """Turn a profile of ``df`` into enforceable rules — the
@@ -101,10 +89,7 @@ def suggest_rules(
       — a suggestion that would quarantine the very rows it was
       profiled from is never emitted;
     * ``Unique`` when every row holds a distinct non-null value
-      (``n_distinct == n_non_null == n_rows``) — a natural key. Only
-      trustworthy from an ``exact=True`` profile: HLL counts can land a
-      hair above/below ``n_rows``, so approx profiles should keep this
-      off;
+      (``n_distinct == n_non_null == n_rows``) — a natural key;
     * ``InRange[min, max]`` (padded by ``range_pad`` x span per side)
       for NUMERIC columns only — observed bounds become the
       plausibility envelope. String/date/other columns never get a
@@ -136,15 +121,9 @@ def suggest_rules(
         blank_seen = dtype in ("string", "binary") and row["min_value"] == ""
         if n_non_null / n_rows >= not_null_threshold and not blank_seen:
             rules.append(NotNull(col))
-        if (
-            suggest_keys
-            and row["n_distinct"] == n_non_null
-            and n_non_null == n_rows
-        ):
+        if row["n_distinct"] == n_non_null == n_rows:
             rules.append(Unique(col))
-        if suggest_ranges and (
-            dtype in _NUMERIC_TYPES or dtype.startswith("decimal")
-        ):
+        if dtype in _NUMERIC_TYPES or dtype.startswith("decimal"):
             try:
                 lo, hi = float(row["min_value"]), float(row["max_value"])
             except (TypeError, ValueError):

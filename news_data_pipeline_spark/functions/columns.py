@@ -20,13 +20,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
 
-def normalize_column_names(
-    df: DataFrame, *, case: str = "upper", space_to_underscore: bool = True
-) -> DataFrame:
-    """Canonical column naming in a single Project (no rename loop)."""
+def normalize_column_names(df: DataFrame, *, case: str = "upper") -> DataFrame:
+    """Canonical column naming in a single Project (no rename loop):
+    whitespace runs become ``_``, then the name is upper- or
+    lower-cased."""
 
     def norm(name: str) -> str:
-        out = re.sub(r"\s+", "_", name) if space_to_underscore else name
+        out = re.sub(r"\s+", "_", name)
         return out.upper() if case == "upper" else out.lower()
 
     return df.select([F.col(f"`{c}`").alias(norm(c)) for c in df.columns])

@@ -13,10 +13,11 @@ runs on the bounded distinct-word symbol table (rows = total characters
 of distinct words — millions, not trillions, regardless of corpus size),
 with every window partitioned by word.
 
-No driver-side loop: each iteration's winning pair is a 1-row
+No driver-side collect: each iteration's winning pair is a 1-row
 ``orderBy().limit(1)`` frame (TakeOrderedAndProject — no single-
-partition shuffle) that rides back in as a broadcast cross join, so the
-whole ``num_merges``-deep training chain stays lazy. The subtle part is
+partition shuffle) that rides back in as a broadcast left join, so a
+corpus that runs out of pairs keeps its symbols unchanged and the merge
+table simply ends early. The subtle part is
 applying one merge without per-row Python: leftmost-greedy pair
 replacement overlaps only when left==right (a match at pos and pos+1
 forces sym[pos+1] = left = right), so eligibility is a gaps-and-islands
@@ -28,12 +29,12 @@ with three plain window stages; no lambdas, no slicing, no UDFs.
 Scale notes: the per-word windows shard perfectly (words are tiny);
 the pair-count aggregate partially aggregates map-side; the only
 all-to-one step is the 1-row top-pair limit. Each iteration's plan
-feeds the next — at production vocab sizes (30k+ merges) persist each
-step (``materialize=True``) instead of growing one 30k-deep lazy plan;
-eager ``localCheckpoint`` truncates lineage but pins blocks to their
-executors (an executor loss is unrecoverable — same caveat as
-``dedup.two_stage_lsh_frames``; prefer reliable ``checkpoint()`` or
-replicated persist on a real cluster).
+feeds the next, so ``bpe_train`` checkpoints every step instead of
+growing one ``num_merges``-deep lazy plan; eager ``localCheckpoint``
+truncates lineage but pins blocks to their executors (an executor loss
+is unrecoverable — same caveat as ``dedup.two_stage_lsh_frames``;
+prefer reliable ``checkpoint()`` or replicated persist on a real
+cluster).
 """
 
 from __future__ import annotations
@@ -106,8 +107,9 @@ def top_pair(symbols: DataFrame) -> DataFrame:
 
 
 def apply_pair(symbols: DataFrame, pair: DataFrame) -> DataFrame:
-    """One leftmost-greedy merge of ``pair`` (a 1-row broadcast frame
-    with left_sym/right_sym) over the symbol table.
+    """One leftmost-greedy merge of ``pair`` (a broadcast frame of at
+    most one row with left_sym/right_sym) over the symbol table; an
+    empty ``pair`` leaves the table unchanged.
 
     Overlapping matches exist only when left==right; runs of consecutive
     matches resolve by parity — islands via ``pos - running_match_count``
@@ -118,7 +120,7 @@ def apply_pair(symbols: DataFrame, pair: DataFrame) -> DataFrame:
     w = Window.partitionBy("word").orderBy("pos")
     marked = (
         _with_next(symbols)
-        .join(F.broadcast(pair.select("left_sym", "right_sym")))
+        .join(F.broadcast(pair.select("left_sym", "right_sym")), how="left")
         .select(
             "word",
             "n",
@@ -165,18 +167,20 @@ def apply_pair(symbols: DataFrame, pair: DataFrame) -> DataFrame:
 
 
 def bpe_train(
-    symbols: DataFrame, num_merges: int, *, materialize: bool = False
+    symbols: DataFrame, num_merges: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Learn ``num_merges`` merges; returns (merge_table, final_symbols).
+    """Learn up to ``num_merges`` merges; returns (merge_table,
+    final_symbols).
 
     merge_table: (merge_rank, left_sym, right_sym, pair_weight) — the
-    tokenizer artifact, in learned order. final_symbols: the symbol
-    table after all merges (the training vocabulary's encoding).
+    tokenizer artifact, in learned order; it has fewer than
+    ``num_merges`` rows when every word is already one symbol.
+    final_symbols: the symbol table after all merges (the training
+    vocabulary's encoding).
 
-    ``materialize`` eagerly ``localCheckpoint``s each iteration so the
-    k-th step's plan doesn't re-derive steps 1..k-1 (lazy chaining is
-    fine for single-digit merge counts; at real vocab sizes the re-walk
-    is quadratic). Caveat: localCheckpoint pins blocks to executors —
+    Each iteration is eagerly ``localCheckpoint``ed so the k-th step's
+    plan doesn't re-derive steps 1..k-1 (the re-walk is quadratic in
+    ``num_merges``). Caveat: localCheckpoint pins blocks to executors —
     a lost executor kills the job; on a cluster prefer reliable
     ``checkpoint()`` or a replicated persist.
     """
@@ -187,9 +191,7 @@ def bpe_train(
     for rank in range(1, num_merges + 1):
         t = top_pair(cur)
         tops.append(t.select(F.lit(rank).alias("merge_rank"), "*"))
-        cur = apply_pair(cur, t)
-        if materialize:
-            cur = cur.localCheckpoint(eager=True)
+        cur = apply_pair(cur, t).localCheckpoint(eager=True)
     merges = tops[0]
     for t in tops[1:]:
         merges = merges.unionByName(t)

@@ -271,7 +271,7 @@ def two_stage_lsh_frames(
     shingle->MinHash->band lineage from the source scan (measured: 8-12
     static scans per plan), and at corpus scale re-shingling is the
     dominant cost. Eager ``localCheckpoint`` truncates the lineage the
-    same way ``connected_components(checkpoint_edges=True)`` does
+    same way ``graph.connected_components``' edge checkpoint does
     (operators/graph.py — the round-4 fix that took the component
     queries from 36 scans to 0), so downstream plans replay three cached
     frames and never touch the source again.

@@ -26,7 +26,6 @@ def pagerank(
     damping: float = 0.85,
     iters: int = 10,
     round_dp: int = 6,
-    checkpoint_every: int | None = 1,
 ) -> DataFrame:
     """(node, rank) after ``iters`` power iterations of (weighted)
     PageRank over the directed edge list — link-graph authority scoring
@@ -43,16 +42,14 @@ def pagerank(
     is linear in |E| per hop, nothing quadratic, no driver-side graph.
     Out-weight is computed once before the loop and re-joined per hop.
 
-    ``checkpoint_every``: eager ``localCheckpoint`` cadence. Both the
+    Every hop ends in an eager ``localCheckpoint``: both the
     contribution join and the dangling aggregate reference the previous
-    rank vector, so without truncation the plan DOUBLES per hop;
-    checkpointing every N bounds subplan fan-out at 2^N and total work
-    at O(iters/N · 2^N · |E|). Default 1 = linear total work, one job
-    per hop. ``None`` disables checkpointing entirely — only sane for
-    2-3 iterations. ``localCheckpoint`` is executor-local (not
-    HDFS-reliable); on a real cluster an executor loss fails the job
-    and the caller retries — the standard trade-off for iterative
-    algorithms without a reliable checkpoint dir.
+    rank vector, so without truncation the plan would DOUBLE per hop.
+    Checkpointing each hop keeps total work linear, one job per hop.
+    ``localCheckpoint`` is executor-local (not HDFS-reliable); on a
+    real cluster an executor loss fails the job and the caller retries
+    — the standard trade-off for iterative algorithms without a
+    reliable checkpoint dir.
 
     Ranks are rounded to ``round_dp`` AFTER the final iteration only —
     intermediate rounding would compound bias; a single final round
@@ -72,10 +69,6 @@ def pagerank(
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    if checkpoint_every is not None and checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1 or None, got {checkpoint_every}"
-        )
     w_col = F.col(weight).cast("double") if weight else F.lit(1.0)
     e = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v"), w_col.alias("w")
@@ -103,13 +96,12 @@ def pagerank(
     n = base.count()
     if n == 0:
         return base.select(F.col("u").alias(node_col), F.lit(0.0).alias("rank"))
-    if checkpoint_every is not None:
-        frac = frac.localCheckpoint(eager=True)
+    frac = frac.localCheckpoint(eager=True)
     ranks = base.withColumn("rank", F.lit(1.0 / n))
     # nodes with no (positive-weight, member) out-edges: their whole
     # rank redistributes uniformly
     dangling = base.join(out_w, on="u", how="left_anti")
-    for it in range(iters):
+    for _ in range(iters):
         dm = (
             dangling.join(ranks, on="u")
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm"))
@@ -139,11 +131,8 @@ def pagerank(
                     )
                 ).alias("rank"),
             )
+            .localCheckpoint(eager=True)
         )
-        if checkpoint_every is not None and (
-            (it + 1) % checkpoint_every == 0 or it == iters - 1
-        ):
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks.select(
         F.col("u").alias(node_col), F.round("rank", round_dp).alias("rank")
     )
@@ -157,8 +146,6 @@ def connected_components(
     nodes: DataFrame | None = None,
     node_col: str = "id",
     max_iter: int = 5,
-    checkpoint_every: int | None = None,
-    checkpoint_edges: bool = False,
 ) -> DataFrame:
     """(node, component) labels for the undirected graph in ``edges``,
     where ``component`` is the minimum node id reachable within
@@ -183,39 +170,26 @@ def connected_components(
     their self-loop. Edges with an endpoint outside ``nodes`` (when
     given) are ignored, exactly as if absent.
 
-    ``checkpoint_every``: optional eager ``localCheckpoint`` cadence
-    for deep propagation (``max_iter`` >= ~10 — long chains, not
-    near-dup cliques): every N hops the label lineage is truncated so
-    plan depth — and with it analysis/codegen time and scheduler
-    lineage — stays bounded instead of growing with ``max_iter``.
-    Default ``None`` keeps the historical fully-lazy single-job plan,
-    which is right for the 2-5 hops dedup needs. Executor-local, not
-    HDFS-reliable — see ``pagerank``.
-
-    ``checkpoint_edges``: eagerly ``localCheckpoint`` the prepared
-    (symmetrized + self-loop) edge list ONCE before propagation,
-    leaving the label chain lazy. Use when ``edges`` is itself an
-    expensive derivation (LSH candidate pairs: shingle -> MinHash ->
-    band join) — every hop joins the edge list, so without this each of
-    the ``max_iter`` hops re-derives the whole chain from the source
-    scan. One materialization of |E| rows buys ``max_iter``x fewer
-    recomputations of the dominant cost; at cluster scale that is the
-    difference between one MinHash pass and three. Because the label
-    seed also derives from the checkpointed list, the whole propagation
-    then runs without touching the source again. Implied by
-    ``checkpoint_every``.
+    The prepared (symmetrized + self-loop) edge list is eagerly
+    ``localCheckpoint``ed ONCE before propagation, leaving the label
+    chain lazy: ``edges`` is typically an expensive derivation (LSH
+    candidate pairs: shingle -> MinHash -> band join), and every hop
+    joins the edge list, so without it each of the ``max_iter`` hops
+    would re-derive the whole chain from the source scan. The label
+    seed also derives from the checkpointed list, so the propagation
+    never touches the source again. Executor-local, not HDFS-reliable
+    — see ``pagerank``.
 
     ``nodes`` optionally supplies the full vertex set (``node_col``);
-    default is the nodes appearing in ``edges``. Node ids must be
-    orderable and non-null.
+    default is the nodes appearing in ``edges``. Edges with a NULL
+    endpoint are dropped up front, as in ``pagerank`` and
+    ``triangle_counts``. Node ids must be orderable and non-null.
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    if checkpoint_every is not None and checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1 or None, got {checkpoint_every}"
-        )
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
+        F.col("u").isNotNull() & F.col("v").isNotNull()
+    )
     sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
     if nodes is not None:
         base = nodes.select(F.col(node_col).alias("u")).distinct()
@@ -229,23 +203,19 @@ def connected_components(
         base = sym.select("u").distinct()
     # self-loops: each node feeds its own label into the per-hop min, so
     # one inner join + groupBy per hop covers "min(own, neighbors)"
-    sym = sym.union(base.select("u", F.col("u").alias("v")))
-    if checkpoint_edges or checkpoint_every is not None:
-        sym = sym.localCheckpoint(eager=True)
-        # re-derive the seed from the checkpointed list: self-loops make
-        # its u-set exactly the node set, and propagation then never
-        # re-reads the (possibly expensive) source lineage
-        labels = sym.select("u").distinct().withColumn("label", F.col("u"))
-    else:
-        labels = base.withColumn("label", F.col("u"))
-    for it in range(max_iter):
+    sym = sym.union(base.select("u", F.col("u").alias("v"))).localCheckpoint(
+        eager=True
+    )
+    # seed from the checkpointed list: self-loops make its u-set exactly
+    # the node set, and propagation then never re-reads the (possibly
+    # expensive) source lineage
+    labels = sym.select("u").distinct().withColumn("label", F.col("u"))
+    for _ in range(max_iter):
         labels = (
             sym.join(labels.select(F.col("u").alias("v"), "label"), on="v")
             .groupBy("u")
             .agg(F.min("label").alias("label"))
         )
-        if checkpoint_every is not None and (it + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=True)
     return labels.select(
         F.col("u").alias(node_col), F.col("label").alias("component")
     )
@@ -255,8 +225,6 @@ def triangle_counts(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    *,
-    checkpoint_edges: bool = False,
 ) -> DataFrame:
     """(node, n_triangles) for every node on at least one triangle of
     the undirected graph — the local clustering signal that separates
@@ -274,11 +242,13 @@ def triangle_counts(
     are keyed equi-joins; no node ever needs its neighborhood in one
     partition.
 
-    ``checkpoint_edges``: the canonical edge list is referenced five
-    times (degree count twice, orientation, wedge probe, closure);
-    eager ``localCheckpoint`` materializes it once so those references
-    replay a cached RDD instead of re-deriving the (possibly expensive)
-    edge lineage — same contract as ``connected_components``.
+    The canonical edge list is referenced five times (degree count
+    twice, orientation, wedge probe, closure); eager
+    ``localCheckpoint`` materializes it once so those references replay
+    a cached RDD instead of re-deriving the (possibly expensive) edge
+    lineage — same contract as ``connected_components``. The
+    orientation is checkpointed too, since it feeds both sides of the
+    wedge self-join.
     """
     e = (
         edges.select(
@@ -288,9 +258,8 @@ def triangle_counts(
         .where(F.col("a") != F.col("b"))
         .where(F.col("a").isNotNull() & F.col("b").isNotNull())
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if checkpoint_edges:
-        e = e.localCheckpoint(eager=True)
     deg = (
         e.select(F.col("a").alias("u"))
         .unionAll(e.select(F.col("b").alias("u")))
@@ -307,11 +276,7 @@ def triangle_counts(
     oriented = ranked.select(
         F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    )
-    if checkpoint_edges:
-        # the orientation (edge + two degree joins) feeds both sides of
-        # the wedge self-join — materialize it once too
-        oriented = oriented.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     o2 = oriented.select(F.col("u").alias("u2"), F.col("v").alias("w"))
     wedges = oriented.join(o2, F.col("u") == F.col("u2")).where(
         F.col("v") < F.col("w")

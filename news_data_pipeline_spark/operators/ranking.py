@@ -180,8 +180,6 @@ def top_k_per_group(
     keys: list[str],
     order_by,
     k: int,
-    *,
-    two_phase: bool = True,
 ) -> DataFrame:
     """Top ``k`` rows per key group under a TOTAL ordering (caller
     includes a tie-break column in ``order_by``, else which tied row
@@ -190,7 +188,7 @@ def top_k_per_group(
     The naive plan — ``row_number() OVER (PARTITION BY keys ORDER BY
     ...) <= k`` — shuffles and fully sorts every member row inside each
     key partition; hot keys (one source/domain dominating a web corpus)
-    funnel through single sort tasks. The two-phase plan bounds that:
+    funnel through single sort tasks. This two-phase plan bounds that:
 
     phase 1: the same window but partitioned by (keys, input-partition
     id) — one full-data exchange on the COMPOSITE key, so a hot key's
@@ -204,8 +202,6 @@ def top_k_per_group(
     how rows were distributed. Cost vs naive: the same single full-data
     shuffle, but skew-free (hashed on the composite key instead of the
     hot key alone), plus one small exchange of the survivors.
-    ``two_phase=False`` gives the naive single-window plan (fine when
-    group sizes are known-bounded).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -218,19 +214,18 @@ def top_k_per_group(
             "them before calling"
         )
     order = list(order_by)
-    if two_phase:
-        # materialized first: spark_partition_id() is flagged
-        # non-deterministic, which a window partition spec rejects;
-        # as a concrete column it is just a grouping key
-        sliced = Window.partitionBy(
-            "__slice", *[F.col(c) for c in keys]
-        ).orderBy(*order)
-        df = (
-            df.withColumn("__slice", F.spark_partition_id())
-            .withColumn("__slice_rn", F.row_number().over(sliced))
-            .where(F.col("__slice_rn") <= k)
-            .drop("__slice", "__slice_rn")
-        )
+    # materialized first: spark_partition_id() is flagged
+    # non-deterministic, which a window partition spec rejects; as a
+    # concrete column it is just a grouping key
+    sliced = Window.partitionBy(
+        "__slice", *[F.col(c) for c in keys]
+    ).orderBy(*order)
+    df = (
+        df.withColumn("__slice", F.spark_partition_id())
+        .withColumn("__slice_rn", F.row_number().over(sliced))
+        .where(F.col("__slice_rn") <= k)
+        .drop("__slice", "__slice_rn")
+    )
     w = Window.partitionBy(*[F.col(c) for c in keys]).orderBy(*order)
     return (
         df.withColumn("__rn", F.row_number().over(w))

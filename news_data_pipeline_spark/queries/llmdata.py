@@ -1678,10 +1678,10 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph, every document labeled with its cluster's minimum doc_id —
     singletons label themselves. Dedup = keep doc_id == component; the
     per-iteration cost is linear in the edge count (near-dup clusters
-    are near-cliques, so 3 hops close them). ``checkpoint_edges``
-    materializes the LSH pair list once so the 3 hops don't re-derive
-    MinHash shingling from the source scan — the dominant cost at
-    corpus scale."""
+    are near-cliques, so 3 hops close them). The operator checkpoints
+    the LSH pair list once, so the 3 hops don't re-derive MinHash
+    shingling from the source scan — the dominant cost at corpus
+    scale."""
     from news_data_pipeline_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1695,7 +1695,6 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         nodes=docs,
         node_col="doc_id",
         max_iter=3,
-        checkpoint_edges=True,
     )
 
 
@@ -1797,7 +1796,6 @@ def neardup_rate_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         nodes=docs,
         node_col="doc_id",
         max_iter=3,
-        checkpoint_edges=True,
     )
     is_dup = (F.col("doc_id") != F.col("component")).cast("long")
     return (
@@ -1861,7 +1859,6 @@ def neardup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         nodes=docs,
         node_col="doc_id",
         max_iter=3,
-        checkpoint_edges=True,
     )
     scored = docs.select(
         "doc_id", T.quality_score(F.col("text")).alias("quality")
@@ -2202,12 +2199,12 @@ def neardup_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.minhash_lsh_dedup_pairs(
         docs, "doc_id", "text", shingle_n=3, bands=4, rows_per_band=4
     )
-    # checkpoint INSIDE the operator, after canonicalization: degree +
+    # the operator checkpoints after canonicalization: degree +
     # orientation + closure replay one cached edge list and never
     # re-derive MinHash shingling (PLANS.md: 67 exchanges -> bounded)
-    return triangle_counts(
-        pairs, "id_a", "id_b", checkpoint_edges=True
-    ).withColumnRenamed("node", "doc_id")
+    return triangle_counts(pairs, "id_a", "id_b").withColumnRenamed(
+        "node", "doc_id"
+    )
 
 
 # shared assignment + in-cell threshold pairs for the SemDeDup oracle:
@@ -2288,9 +2285,6 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         nodes=emb,
         node_col="vec_id",
         max_iter=3,
-        # one-time materialization of the symmetrized pair list: the 3
-        # hops replay a cached RDD, never the assignment+scoring lineage
-        checkpoint_edges=True,
     )
     return labels.select(
         "vec_id",
@@ -4347,23 +4341,11 @@ def ann_recall_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     clears the product bar. nprobe=16 == nlist is the exhaustive-probe
     sanity row (recall 1.0 by construction — every cell read).
 
-    Plan shape and the codified revisit trigger: see
-    ``_recall_nprobe_curve`` — at this 10-query eval size the measured
-    decision is checkpoint-free (the r9 A/B: 4.9-5.4 s checkpointed vs
-    4.4-5.0 s plain); past ``CKPT_EVAL_THRESHOLD`` eval queries the
-    helper flips to the checkpoint regime automatically."""
+    Plan shape: see ``_recall_nprobe_curve`` — at this 10-query eval
+    size the plan is checkpoint-free (the r9 A/B: 4.9-5.4 s
+    checkpointed vs 4.4-5.0 s plain)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return _recall_nprobe_curve(spark, emb, n_eval=10)
-
-
-#: eval-set size at which ``_recall_nprobe_curve`` switches to eagerly
-#: checkpointing the exact/cell-size subtrees. The r9 A/B measured the
-#: checkpoint LOSING at 10 eval queries (the subtrees are cheap next to
-#: the 5 ivf_topk arms); the exact arm is a brute-force q × corpus
-#: cosine whose cost grows linearly with the eval set, so "past tens of
-#: queries" — the docstring's original revisit trigger — is codified
-#: here rather than left as prose.
-CKPT_EVAL_THRESHOLD = 32
 
 
 def _recall_nprobe_curve(
@@ -4374,7 +4356,6 @@ def _recall_nprobe_curve(
     nlist: int = 16,
     nprobes: tuple = (1, 2, 4, 8, 16),
     k: int = 5,
-    ckpt_eval_threshold: int | None = None,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Recall@k-vs-nprobe sweep over the first ``n_eval`` vectors as
@@ -4402,12 +4383,9 @@ def _recall_nprobe_curve(
     ``recall_at_5`` / ``vectors_read`` stay NULL exactly where the old
     empty-input ``agg`` produced NULL.
 
-    Below ``ckpt_eval_threshold`` (default ``CKPT_EVAL_THRESHOLD``)
-    the exact arm and cell sizes stay lazy; at/above it both are
-    eagerly localCheckpoint'ed (they are each referenced once in the
-    multi-arm plan, so the checkpoint is now pure plan-truncation
-    insurance for large eval sets). Both regimes are value-identical
-    (pinned by ``tests/test_joins_similarity.py``).
+    The plan is fully lazy: the exact arm and the cell sizes are each
+    referenced once in the multi-arm plan, and the r9 A/B measured
+    checkpointing them LOSING at 10 eval queries.
 
     ``centroids`` optionally injects a trained (cid, centroid) frame
     (``kmeans_iterate`` output) — the second tuning axis
@@ -4432,14 +4410,6 @@ def _recall_nprobe_curve(
     cell_sizes = corpus_cells.groupBy("cid").agg(
         F.count(F.lit(1)).alias("n")
     )
-    threshold = (
-        CKPT_EVAL_THRESHOLD
-        if ckpt_eval_threshold is None
-        else ckpt_eval_threshold
-    )
-    if n_eval >= threshold:
-        exact = exact.localCheckpoint(eager=True)
-        cell_sizes = cell_sizes.localCheckpoint(eager=True)
 
     # each query's probe cells ranked r = 1..max(nprobe)
     query_probe = _assign_cells(

@@ -715,9 +715,7 @@ def struct_flatten_rename_snapshot(
         F.struct(F.col("lang"), F.col("n_chars")).alias("Meta Info"),
         F.struct(F.col("source").alias("source")).alias("origin"),
     )
-    flat = normalize_column_names(
-        flatten_structs(nested), case="lower", space_to_underscore=True
-    )
+    flat = normalize_column_names(flatten_structs(nested), case="lower")
     missing = require_columns(
         flat, ["doc_id", "meta_info_lang", "meta_info_n_chars", "origin_source"]
     )

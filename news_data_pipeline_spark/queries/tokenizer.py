@@ -59,7 +59,7 @@ def _merge_stage(k: int) -> str:
         SELECT p.word, p.n, p.pos, p.sym, p.nxt,
                CASE WHEN p.sym = t.left_sym AND p.nxt = t.right_sym
                     THEN 1 ELSE 0 END AS mt
-        FROM p{k} p CROSS JOIN t{k} t),
+        FROM p{k} p LEFT JOIN t{k} t ON TRUE),
     e{k} AS (
         SELECT *, CASE WHEN mt = 1 THEN row_number() OVER (
                    PARTITION BY word,
@@ -124,10 +124,10 @@ def _trained(spark: SparkSession, sf_dir: str):
     trained = []
 
     def build():
-        # materialize: without it step k's plan re-derives steps 1..k-1
-        # — quadratic stage re-walk (measured 30 s -> ~9 s at sf0.01
-        # even on this tiny vocab); checkpoints are distinct-word-sized
-        merges, final = bpe_train(syms, NUM_MERGES, materialize=True)
+        # bpe_train checkpoints each merge: a lazy chain re-derives steps
+        # 1..k-1 at step k (measured 30 s -> ~9 s at sf0.01 even on this
+        # tiny vocab); checkpoints are distinct-word-sized
+        merges, final = bpe_train(syms, NUM_MERGES)
         trained.append(final)
         return [
             (r["merge_rank"], r["left_sym"], r["right_sym"], r["pair_weight"])

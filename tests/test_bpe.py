@@ -90,16 +90,56 @@ def test_apply_merges_replays_training(spark):
     )
 
 
-def test_materialize_matches_lazy(spark):
-    syms = _symbols(spark, ["low low lower lowest"])
-    m_lazy, f_lazy = bpe_train(syms, 3)
-    m_mat, f_mat = bpe_train(syms, 3, materialize=True)
-    assert sorted(map(tuple, m_mat.collect())) == sorted(
-        map(tuple, m_lazy.collect())
+def test_training_plan_does_not_grow_with_merges(spark):
+    # each merge is checkpointed, so step k never re-derives steps 1..k-1
+    syms = _symbols(spark, ["low low lower lowest newer new wider"])
+
+    def depth(num_merges):
+        _, final = bpe_train(syms, num_merges)
+        plan = final._jdf.queryExecution().executedPlan().toString()
+        return len(plan.splitlines())
+
+    assert depth(8) <= depth(1)
+
+
+def test_training_that_runs_out_of_merges_keeps_every_word(spark, tmp_path):
+    # "ab" x3 + "a" x1: one merge leaves every word a single symbol, so
+    # the remaining NUM_MERGES - 1 ranks find no pair; the operator,
+    # its replay, the registered query and the DuckDB oracle must all
+    # keep both words
+    import duckdb
+
+    from news_data_pipeline_spark.queries import QUERIES
+    from news_data_pipeline_spark.queries.tokenizer import (
+        NUM_MERGES,
+        bpe_word_encodings,
     )
-    assert sorted(map(tuple, f_mat.collect())) == sorted(
-        map(tuple, f_lazy.collect())
+
+    texts = ["ab ab ab a"]
+    sf_dir = str(tmp_path / "sfbpe")
+    spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
+    want = [("a", 1, 1, "a</w>"), ("ab", 3, 1, "ab</w>")]
+
+    syms = _symbols(spark, texts)
+    merges, final = bpe_train(syms, NUM_MERGES)
+    assert [tuple(r) for r in merges.collect()] == [(1, "a", "b</w>", 3)]
+    for out in (
+        final,
+        apply_merges(syms, merges, NUM_MERGES),
+        bpe_word_encodings(spark, sf_dir),
+    ):
+        cols = out.select("word", "n", "pos", "sym")
+        assert sorted(map(tuple, cols.collect())) == want
+
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
     )
+    oracle = QUERIES["bpe_word_encodings"].oracle
+    assert sorted(con.sql(oracle).fetchall()) == want
 
 
 def test_num_merges_guard(spark):

@@ -1,4 +1,4 @@
-"""Graph operators: connected_components + pagerank."""
+"""Graph operators: connected_components, pagerank, triangle_counts."""
 
 from __future__ import annotations
 
@@ -86,27 +86,45 @@ def test_plan_has_no_cartesian_or_python(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_cc_checkpoint_bounds_plan_depth(spark):
-    """With a checkpoint cadence, a 20-hop propagation plan stays
-    bounded (lineage truncated to the last checkpoint) regardless of
-    max_iter — the unchecked 20-hop plan is deliberately NOT built
-    here: its Catalyst analysis alone takes minutes, which is the
-    pathology checkpointing removes."""
-    edges = [(i, i + 1) for i in range(14)]  # path: diameter 14
-    df = spark.createDataFrame(edges, "src long, dst long")
-    capped = connected_components(df, max_iter=20, checkpoint_every=2)
-    capped_depth = len(
-        capped._jdf.queryExecution().executedPlan().toString().splitlines()
+def test_cc_drops_null_endpoint_edges(spark):
+    # a NULL endpoint is no node: (2, NULL) neither adds a NULL row nor
+    # links anything, exactly as pagerank and triangle_counts drop it
+    edges = [(1, 2), (2, None), (5, 6)]
+    assert _cc(spark, edges, max_iter=3) == {1: 1, 2: 1, 5: 5, 6: 5}
+
+
+def _lsh_pairs_and_docs(spark):
+    from news_data_pipeline_spark.operators.dedup import (
+        minhash_lsh_dedup_pairs,
     )
-    shallow = connected_components(df, max_iter=2)
-    shallow_depth = len(
-        shallow._jdf.queryExecution().executedPlan().toString().splitlines()
+    from news_data_pipeline_spark.sources.catalog import load_table
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents")
+    return minhash_lsh_dedup_pairs(docs, "doc_id", "text"), docs
+
+
+def _executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_cc_hops_read_only_the_checkpointed_edge_list(spark):
+    # the LSH pair list is an expensive derivation of the documents
+    # scan; every hop (and the label seed) must replay the one
+    # checkpointed edge list instead of re-deriving it
+    pairs, docs = _lsh_pairs_and_docs(spark)
+    comp = connected_components(
+        pairs, "id_a", "id_b", nodes=docs, node_col="doc_id", max_iter=3
     )
-    # 20 hops, but the visible plan is no deeper than ~one uncheckpointed hop
-    assert capped_depth <= shallow_depth
-    # 20 hops cover the 14-edge path: every node reaches the global min
-    got = {r["id"]: r["component"] for r in capped.collect()}
-    assert got == {i: 0 for i in range(15)}
+    assert "FileScan" not in _executed_plan(comp)
+
+
+def test_triangle_counts_read_only_the_checkpointed_edge_list(spark):
+    from news_data_pipeline_spark.operators.graph import triangle_counts
+
+    pairs, _ = _lsh_pairs_and_docs(spark)
+    tri = triangle_counts(pairs, "id_a", "id_b")
+    assert "FileScan" not in _executed_plan(tri)
 
 
 # ---------------------------------------------------------------- pagerank
@@ -168,19 +186,9 @@ def test_pagerank_nodes_closure_conserves_mass(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-4
 
 
-def test_pagerank_checkpoint_cadences_agree(spark):
-    # iters kept small for the fully-lazy variant: its plan doubles
-    # per hop (2^iters subtrees), which is the documented hazard
-    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1)]
-    base = _pr(spark, edges, node_col="id", iters=3, checkpoint_every=1)
-    lazy = _pr(spark, edges, node_col="id", iters=3, checkpoint_every=None)
-    every2 = _pr(spark, edges, node_col="id", iters=3, checkpoint_every=2)
-    assert base == lazy == every2
-
-
 def test_pagerank_checkpoint_bounds_plan_depth(spark):
     df = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
-    deep = pagerank(df, node_col="id", iters=12, checkpoint_every=1)
+    deep = pagerank(df, node_col="id", iters=12)
     depth = len(deep._jdf.queryExecution().executedPlan().toString().splitlines())
     assert depth < 40  # truncated to the last checkpoint, not 12 hops
 
@@ -201,8 +209,6 @@ def test_pagerank_invalid_args_raise(spark):
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
     with pytest.raises(ValueError, match="iters"):
         pagerank(df, iters=0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        pagerank(df, iters=1, checkpoint_every=0)
 
 
 # ---------------------------------------------------------------- triangles

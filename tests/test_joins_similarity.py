@@ -674,48 +674,6 @@ def test_salt_spread_diagnostic(spark):
     assert row["distinct_salts"] == 1
 
 
-def test_recall_curve_checkpoint_regime_parity(spark):
-    """The codified revisit trigger (r9 verdict #3): past
-    CKPT_EVAL_THRESHOLD eval queries, _recall_nprobe_curve eagerly
-    checkpoints the exact/cell-size subtrees that recur under every
-    sweep arm. Both regimes must be value-identical, and the
-    checkpoint regime's executed plan must actually be the smaller one
-    (the recurring subtrees collapse to materialized RDD scans)."""
-    import pyspark.sql.functions as F
-
-    from news_data_pipeline_spark.queries.llmdata import (
-        _recall_nprobe_curve,
-    )
-
-    emb = spark.createDataFrame(
-        [
-            (i, [float((i * 13 + j * 7) % 17) - 8.0 for j in range(8)])
-            for i in range(120)
-        ],
-        "vec_id long, embedding array<double>",
-    )
-
-    def run(threshold):
-        df = _recall_nprobe_curve(
-            spark,
-            emb,
-            n_eval=40,
-            nprobes=(1, 4, 16),
-            ckpt_eval_threshold=threshold,
-        )
-        rows = sorted(map(tuple, df.collect()))
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return rows, plan
-
-    lazy_rows, lazy_plan = run(10**9)  # stays lazy at n_eval=40
-    ckpt_rows, ckpt_plan = run(1)      # checkpoint regime
-    assert lazy_rows == ckpt_rows
-    # the checkpointed subtrees appear as materialized RDD scans and
-    # the per-arm re-derivations are gone: strictly fewer exchanges
-    assert "ExistingRDD" in ckpt_plan
-    assert ckpt_plan.count("Exchange") < lazy_plan.count("Exchange")
-
-
 def test_interval_join_bucketed_matches_naive(spark):
     """Non-default window (2 minutes), both timestamp types, and a
     naive residual join as the ground truth — seeded spread with ties,

@@ -97,7 +97,9 @@ def test_top_k_per_group_matches_naive_and_is_exact(spark):
     df = spark.createDataFrame(rows, "g string, id long, v double").repartition(4)
     order = [F.col("v").desc(), F.col("id").asc()]
     two = top_k_per_group(df, ["g"], order, k=3)
-    naive = top_k_per_group(df, ["g"], order, k=3, two_phase=False)
+    # reference: the naive single window over each whole group
+    w = Window.partitionBy("g").orderBy(*order)
+    naive = df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 3)
     key = lambda r: (r["g"], r["id"], r["v"])
     assert sorted(map(key, two.collect())) == sorted(map(key, naive.collect()))
     got = {r["g"]: r["id"] for r in two.where("v = 5.0 and g = 'b'").collect()}
